@@ -14,6 +14,18 @@ roundtrip, which skips when the iceberg-spark-runtime jar is absent, as in
 this sandbox); otherwise a plain parquet directory layout. Either way an
 explicit JSON manifest per stage is the commit point (written LAST), so the
 resume semantics are format-independent.
+
+Bookkeeping runs no Spark job beyond the stage write itself:
+
+- a stage's ``rows`` (manifest and ``rows_out`` metric) is the count the
+  write observed on its own input (``DataFrame.observe``), not a read-back
+  scan of the written table;
+- metrics are appended as one small parquet file per call, written on the
+  driver with pyarrow under ``<warehouse>/_metrics/`` (a ``_``-prefixed temp
+  name, then an atomic rename to ``part-<uuid>.parquet``, so a crash
+  mid-write leaves only a file Spark and ``pyarrow.dataset`` both ignore).
+  ``_metrics`` stays a parquet dataset with the schema ``run_id string,
+  stage string, metric string, value double, recorded_at double``.
 """
 
 from __future__ import annotations
@@ -21,12 +33,24 @@ from __future__ import annotations
 import json
 import os
 import time
+import uuid
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+import pyarrow as pa
+import pyarrow.parquet as pq
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 MANIFEST = "_MANIFEST.json"
+METRICS_SCHEMA = pa.schema(
+    [
+        ("run_id", pa.string()),
+        ("stage", pa.string()),
+        ("metric", pa.string()),
+        ("value", pa.float64()),
+        ("recorded_at", pa.float64()),
+    ]
+)
 
 
 @dataclass
@@ -53,22 +77,31 @@ class Storage:
             f".{self.run_id}_{stage}"
         )
 
-    def is_committed(self, stage: str) -> bool:
-        mpath = os.path.join(self.stage_path(stage), MANIFEST)
-        if not os.path.exists(mpath):
-            return False
+    def read_manifest(self, stage: str) -> dict | None:
+        """The stage's commit manifest, or None when it is missing or
+        unreadable (an uncommitted stage)."""
         try:
-            with open(mpath) as fh:
-                manifest = json.load(fh)
+            with open(os.path.join(self.stage_path(stage), MANIFEST)) as fh:
+                return json.load(fh)
         except (OSError, json.JSONDecodeError):
-            return False
-        return manifest.get("config_hash") == self.config_hash
+            return None
+
+    def is_committed(self, stage: str) -> bool:
+        manifest = self.read_manifest(stage)
+        return manifest is not None and manifest.get("config_hash") == self.config_hash
 
     def commit_stage(self, stage: str, df: DataFrame, partition_by: list[str] | None = None) -> DataFrame:
         """Write the stage output, record lineage metrics, write the manifest
-        LAST (commit point: a crash mid-write leaves no manifest => re-run)."""
+        LAST (commit point: a crash mid-write leaves no manifest => re-run).
+
+        The write is the only Spark job: ``rows`` is the row count the write
+        observed on ``df`` (a CollectMetrics node riding the write's own
+        tasks), and ``commit_secs`` is the write wall alone — no read-back
+        count of the written table."""
         path = self.stage_path(stage)
         t0 = time.time()
+        obs = Observation()
+        df = df.observe(obs, F.count(F.lit(1)).alias("rows"))
         if self.table_format == "iceberg":
             self.spark.sql(
                 f"CREATE NAMESPACE IF NOT EXISTS "
@@ -85,7 +118,7 @@ class Storage:
                 writer = writer.partitionBy(*partition_by)
             writer.parquet(path)
         out = self.read_stage(stage)
-        rows = out.count()
+        rows = obs.get["rows"]
         self._append_metrics(stage, {"rows_out": rows, "commit_secs": time.time() - t0})
         with open(os.path.join(path, MANIFEST), "w") as fh:
             json.dump(
@@ -114,16 +147,26 @@ class Storage:
 
     # ---- metrics ----------------------------------------------------------
     def _append_metrics(self, stage: str, values: dict[str, float]) -> None:
-        rows = [
-            (self.run_id, stage, k, float(v), time.time())
-            for k, v in values.items()
-        ]
-        df = self.spark.createDataFrame(
-            rows, "run_id string, stage string, metric string, value double, recorded_at double"
+        """Append one parquet file of ``values`` to ``_metrics`` from the
+        driver (no Spark job). The file becomes visible atomically: readers
+        skip ``_``-prefixed names, so only the final rename publishes it."""
+        now = time.time()
+        table = pa.table(
+            {
+                "run_id": [self.run_id] * len(values),
+                "stage": [stage] * len(values),
+                "metric": list(values),
+                "value": [float(v) for v in values.values()],
+                "recorded_at": [now] * len(values),
+            },
+            schema=METRICS_SCHEMA,
         )
-        df.coalesce(1).write.mode("append").parquet(
-            os.path.join(self.warehouse, "_metrics")
-        )
+        mdir = os.path.join(self.warehouse, "_metrics")
+        os.makedirs(mdir, exist_ok=True)
+        name = f"part-{uuid.uuid4().hex}.parquet"
+        tmp = os.path.join(mdir, "_" + name)
+        pq.write_table(table, tmp, store_schema=False)
+        os.replace(tmp, os.path.join(mdir, name))
 
     def record_partition_skew(self, stage: str, df: DataFrame) -> dict[str, float]:
         """Per-partition row histogram => max/median (skew evidence for the

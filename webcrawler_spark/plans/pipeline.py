@@ -305,9 +305,14 @@ def main() -> None:
     for i in range(max(1, args.repeat)):
         wh = args.warehouse if args.repeat == 1 else f"{args.warehouse}_r{i}"
         t0 = time.time()
-        out = run_pipeline(spark, args.input, wh, cfg=cfg, run_id=f"{args.run_id}_{i}")
-        n_docs = out["signatures"].count()
-        n_edges = out["edges"].count()
+        run_id = f"{args.run_id}_{i}"
+        out = run_pipeline(spark, args.input, wh, cfg=cfg, run_id=run_id)
+        # row counts the stage writes observed, from the manifests just written
+        storage = Storage(
+            spark=spark, warehouse=wh, config_hash=cfg.config_hash(), run_id=run_id
+        )
+        n_docs = storage.read_manifest("signatures")["rows"]
+        n_edges = storage.read_manifest("edges")["rows"]
         n_clusters = out["clusters"].select("cluster_id").distinct().count()
         wall = time.time() - t0
         walls.append(round(wall, 2))

@@ -565,11 +565,12 @@ def _shingle_df(spark, sf_dir):
 
 def _shingle_arrays(spark, sf_dir):
     """(doc_id, hs: array<long>) — the distinct hashed 5-gram set per doc,
-    CACHED: the ngram query consumes it twice (the exploded key stream and
-    the per-doc size projection), and without the cache each consumer
-    re-pays tokenize + 200 hashes per doc. Cache partitioning stays at
-    scan parallelism (unlike the signature cache, the heavy consumer here
-    is the CPU-bound explode, which wants width, and there are only two
+    CACHED: the ngram query consumes it three times (the exploded key
+    stream via _shingle_df, the per-doc size projection, and the shared-key
+    prefilter's key count), and without the cache each consumer re-pays
+    tokenize + 200 hashes per doc. Cache partitioning stays at scan
+    parallelism (unlike the signature cache, the heavy consumers here are
+    the CPU-bound explodes, which want width, and there are only three
     warm scans). Same class of cached intermediate as _doc_signatures'
     shingles column."""
     d = load(spark, sf_dir, "documents").withColumn("toks", F.split("text", " "))
