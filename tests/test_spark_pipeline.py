@@ -579,16 +579,35 @@ def test_advance_state_shared_recap_equivalent(spark, docs_df):
     part0 = docs_df.filter(F.col("doc_id") % 4 <= 1)
     part1 = docs_df.filter(F.col("doc_id") % 4 == 2)
     docs01 = docs_df.filter(F.col("doc_id") % 4 != 3)
+    jsc = spark.sparkContext._jsc
+
+    def stored():
+        return {info.id() for info in jsc.sc().getRDDStorageInfo()}
+
+    def registered():
+        return set(jsc.getPersistentRDDs().keys())
 
     state0 = build_dedup_state(part0, CFG)
     sigs1 = compute_signatures(part1, CFG).cache()
-    persisted: list = []
-    recap = _touched_recap(state0, sigs1, CFG, persisted_out=persisted)
-    edges1 = incremental_edges(state0, sigs1, CFG, docs=docs01, recap=recap)
-    assign1 = incremental_assign(state0, docs01, edges1)
-    state1 = advance_state(state0, sigs1, assign1, CFG, recap=recap)
-
     fresh1 = build_dedup_state(docs01, CFG)
+    # the test's own cached inputs hold blocks before the increment starts
+    for df in (docs_df, state0.sigs, sigs1, fresh1.sigs):
+        df.count()
+    before = stored()
+    persisted: list = []
+    held: list = []
+    recap = _touched_recap(state0, sigs1, CFG, persisted_out=persisted)
+    edges1 = incremental_edges(
+        state0, sigs1, CFG, docs=docs01, recap=recap, persisted_out=held
+    )
+    # union-find's own checkpoints are not the increment's blocks: they are
+    # the RDDs registered while incremental_assign runs
+    pre_assign = registered()
+    assign1 = incremental_assign(state0, docs01, edges1)
+    union_find = registered() - pre_assign
+    state1 = advance_state(
+        state0, sigs1, assign1, CFG, recap=recap, persisted_out=held
+    )
 
     def rows(df, *cols):
         return sorted(tuple(r[c] for c in cols) for r in df.collect())
@@ -610,5 +629,49 @@ def test_advance_state_shared_recap_equivalent(spark, docs_df):
 
     # the unpersist hooks collected the recap's persisted intermediates
     assert len(persisted) == 2
+    assert stored() - before - union_find  # the increment did store blocks
     for df in persisted:
         df.unpersist()
+    for df in held:
+        df.unpersist()
+    # ... and running the hooks frees every block the increment stored
+    assert not stored() - before - union_find
+
+
+def test_incremental_edges_match_batch_edges(docs_df, sigs):
+    """The edge set before union-find: every near / containment /
+    substring edge with a new side that incremental_edges emits equals
+    build_edges' over the whole corpus, for two old/new splits. Cluster
+    equality alone would hide a broken new-side pair filter whenever
+    another path links the same two docs."""
+    from webcrawler_spark.operators.incremental import (
+        build_dedup_state,
+        incremental_edges,
+    )
+
+    kinds = ["near", "containment", "substring"]
+
+    def edge_set(edges):
+        return {
+            (r["a"], r["b"], r["kind"])
+            for r in edges.filter(F.col("kind").isin(kinds)).collect()
+        }
+
+    full = build_edges(sigs, CFG, docs=docs_df)
+    for new_mod in (3, 0):
+        is_new = F.col("doc_id") % 4 == new_mod
+        state = build_dedup_state(docs_df.filter(~is_new), CFG)
+        new_sigs = compute_signatures(docs_df.filter(is_new), CFG).cache()
+        held: list = []
+        got = edge_set(
+            incremental_edges(
+                state, new_sigs, CFG, docs=docs_df, persisted_out=held
+            )
+        )
+        want = edge_set(
+            full.filter((F.col("a") % 4 == new_mod) | (F.col("b") % 4 == new_mod))
+        )
+        assert {k for _, _, k in want} == set(kinds)
+        assert got == want
+        for df in held:
+            df.unpersist()

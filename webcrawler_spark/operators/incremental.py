@@ -7,24 +7,49 @@ re-seeds the crawl from persisted state instead of restarting). The batch
 path (lsh.build_edges) recomputes everything; this module extends an
 existing run from its persisted stage outputs:
 
-- **state** = the capped unified bucket table (gen, key, doc_id), the
-  signature table, and the cluster assignments of the existing corpus —
-  exactly the stage outputs the pipeline already checkpoints (plans/
-  pipeline.py writes signatures + edges + assignments per stage; the bucket
-  table is one more ``unified_capped_buckets`` materialization).
-- an increment only touches bucket keys the NEW batch occupies: candidate
-  work is proportional to the batch, not the corpus. Old bucket rows are
-  fetched by key (at cluster scale: a bucketed/partitioned stage table —
-  the join shuffles only the new side), re-capped TOGETHER with the new
-  rows so the cap/drop policies see combined bucket sizes, and pairs with
-  at least one new side are verified exactly like the batch path
-  (new-vs-old and new-vs-new; old-vs-old pairs were already resolved and
-  are filtered out before any verify work).
+- **state** (``DedupState``) = the capped unified bucket table (gen, key,
+  doc_id), the signature table, the cluster assignments, the dropped
+  anchor keys and the per-doc kept-anchor counts of the existing corpus —
+  stage outputs the pipeline already checkpoints, plus two small tables
+  ``build_dedup_state`` derives.
+- **precondition**: the batch's doc_ids are disjoint from the state's. Old
+  and new rows are told apart by a row flag set where they enter, not by
+  joining on the batch's ids, so a doc present on both sides would count
+  as both.
+- **the judged table** (``_touched_recap``): an increment only touches the
+  bucket keys the batch occupies, so candidate work is proportional to the
+  batch, not the corpus. The state's rows for those keys are fetched by key
+  (``is_new`` false) and re-capped TOGETHER with the batch's rows (``is_new``
+  true) in one window over (gen, key), which keeps per row ``rn`` (rank by
+  doc_id), ``sz`` (combined bucket size) and ``keep`` (anchor:
+  sz <= anchor_max_bucket; lsh/sim: rn <= max_bucket_size). Everything else
+  is a filter of that one table:
+
+  - candidate pairs with a new side: ``keep`` rows, pairs where
+    ``x.is_new OR y.is_new`` (old-old pairs were resolved by the state and
+    are dropped before any verify work);
+  - the old docs' lost anchors (anchor rows ``not is_new and not keep``)
+    and the new docs' kept anchors (``is_new and keep``): the tier-1
+    denominators of the increment and of the next state;
+  - the next state's buckets (``keep`` rows replace the touched keys) and
+    its newly dropped anchor keys (``sz > anchor_max_bucket``).
 - assignments extend via union-find SEEDED with the existing cluster ids:
   old components enter as (cluster_id, member) star edges, so a new doc
   bridging two old clusters merges them exactly as a full recompute would,
   and the min-root convention is preserved (min over the merged component
-  is the global min).
+  is the global min). The seed edges are O(corpus): union-find is the part
+  of an increment that is not yet O(batch).
+
+Materialization: each intermediate that several branches of one plan read
+(the batch's bucket rows, the judged table, the candidate pairs and, with
+the substring pass, the tier-1 survivors) is a lazy local checkpoint, built
+once with no Spark job per reader. Defining one runs the stages above it,
+so ``_touched_recap`` and ``incremental_edges`` run Spark jobs when called,
+and ``advance_state`` does when it builds its own recap; a checkpoint's
+last stage runs in the first action that reads it. ``persisted_out``
+collects one release handle per checkpoint, and ``unpersist()`` on a handle
+frees its blocks. A checkpoint cuts lineage, so frames derived from a
+released one cannot be evaluated again: write or collect the outputs first.
 
 Equivalence to full recompute (the driver-checked contract —
 ``dedup_incremental``'s oracle is the full-recompute SQL over the
@@ -43,6 +68,7 @@ lossless there too.
 
 from __future__ import annotations
 
+import warnings
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, Window
@@ -87,11 +113,7 @@ class DedupState:
     # precomputed so an increment derives denominators with an O(touched)
     # delta instead of re-aggregating the whole bucket table (the 10^12-doc
     # shape; incremental_edges falls back to the full aggregation when the
-    # table is absent). Measured A/B at 1M docs / 5% batch
-    # (BENCH/incremental.json): both paths exact; the delta path's extra
-    # joins cost more (93 s) than the one-pass aggregation they avoid
-    # (81 s) because a 5% batch touches most keys — it pays off only when
-    # |touched keys| << |corpus keys| (tiny daily batches on huge corpora)
+    # table is absent)
     kept_anchor_counts: DataFrame | None = None
 
 
@@ -130,46 +152,74 @@ def build_dedup_state(
     )
 
 
+class _CheckpointBlocks:
+    """``persisted_out`` entry for a local checkpoint. ``DataFrame.unpersist()``
+    frees nothing on a checkpointed frame; ``unpersist()`` here unpersists
+    the RDD the checkpoint reads, which drops its blocks."""
+
+    def __init__(self, checkpointed: DataFrame) -> None:
+        self._rdd = checkpointed._jdf.queryExecution().analyzed().rdd()
+
+    def unpersist(self, blocking: bool = False) -> _CheckpointBlocks:
+        self._rdd.unpersist(blocking)
+        return self
+
+
+def _shuffle_partitions(df: DataFrame) -> int:
+    """The session's shuffle partition count. AQE never coalesces a
+    repartition to an explicit count, so a checkpointed frame that ends in
+    one keeps this partitioning whatever the batch size, as a cached frame
+    does; the plans that read it, and the files they write, then do not
+    depend on AQE's runtime coalescing."""
+    return int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+
+
+def _checkpoint(df: DataFrame, persisted_out: list | None) -> DataFrame:
+    """Lazy local checkpoint of ``df`` (module doc): runs the stages above
+    its last one now, and registers its release handle in ``persisted_out``."""
+    out = df.localCheckpoint(eager=False)
+    if persisted_out is not None:
+        persisted_out.append(_CheckpointBlocks(out))
+    return out
+
+
 def _touched_recap(
     state: DedupState,
     new_sigs: DataFrame,
     cfg: DedupConfig,
-    persisted_out: list[DataFrame] | None = None,
-) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame, DataFrame]:
-    """Shared bucket re-decision for an increment: (new_buckets, touched,
-    old_touched, combined, capped). ``capped`` carries the combined-cap
-    verdict over exactly the keys the batch touches; keys the original
-    corpus dropped as boilerplate are excluded from the batch's rows first
-    (DedupState docstring).
+    persisted_out: list | None = None,
+) -> DataFrame:
+    """The batch's judged table (gen, key, doc_id, is_new, rn, sz, keep):
+    every bucket row of every key the batch touches, the state's rows
+    (``is_new`` false) and the batch's (``is_new`` true), re-capped
+    together (module doc). Keys the original corpus dropped as boilerplate
+    are removed from the batch's rows first (DedupState docstring). Batch
+    doc_ids must be disjoint from the state's.
 
-    Round 6: the tuple is also the unit of WORK SHARING for a chained
-    increment — ``incremental_edges`` and ``advance_state`` both consume
-    the identical recap, so callers running edges-then-advance for one
-    batch compute it ONCE (pass the tuple through their ``recap``
-    parameter) instead of paying the touched-keys shuffles and windows
-    twice. ``persisted_out`` collects the internally persisted
-    intermediates (new_buckets, capped) so long-running chained jobs can
-    unpersist them once the batch's outputs are materialized.
+    ``incremental_edges`` and ``advance_state`` both derive everything from
+    this table: a caller running both for one batch builds it once and
+    passes it as their ``recap``. ``persisted_out`` receives two release
+    handles, for the batch's bucket rows and for the judged table. Calling
+    this runs Spark jobs: the dropped-key anti join, the by-key fetch of
+    the state's rows and the exchange before the window.
 
     The batch's bucket rows enter UNCAPPED (lsh.bucket_rows): a batch-local
     cap would be wrong twice over — an anchor key that is boilerplate
-    WITHIN the batch would vanish from ``touched`` (so stale state rows for
-    it would survive an advance_state and its old rows would keep wrong
+    WITHIN the batch would vanish from the touched keys (so stale state rows
+    for it would survive an advance_state and its old rows would keep wrong
     kept-counts), and a batch-locally-truncated LSH bucket could exclude a
     doc that belongs in the combined top-cap. The combined window below is
     the only cap that matters."""
-    new_buckets = bucket_rows(new_sigs, cfg)
+    new_rows = bucket_rows(new_sigs, cfg)
     if state.dropped_anchor_keys is not None:
         dropped = state.dropped_anchor_keys.select(
             F.lit("anchor").alias("gen"), F.col("key")
         )
-        new_buckets = new_buckets.join(dropped, ["gen", "key"], "left_anti")
+        new_rows = new_rows.join(dropped, ["gen", "key"], "left_anti")
     else:
-        # ADVICE r5: a state without the drop-list silently reintroduces
-        # the documented recall loss (51/19,159 pairs at 1M) — degrade
-        # LOUDLY so a parquet round-trip that omitted the table is caught
-        import warnings
-
+        # a state without the drop-list silently reintroduces the
+        # documented recall loss (51/19,159 pairs at 1M) — degrade LOUDLY
+        # so a parquet round-trip that omitted the table is caught
         warnings.warn(
             "DedupState.dropped_anchor_keys is None: incremental recall "
             "may silently degrade on boilerplate-heavy corpora (see "
@@ -177,36 +227,71 @@ def _touched_recap(
             "or persist the dropped-keys table.",
             stacklevel=3,
         )
-    new_buckets = new_buckets.persist()
-    if persisted_out is not None:
-        persisted_out.append(new_buckets)
-    touched = new_buckets.select("gen", "key").distinct()
-    old_touched = state.buckets.join(touched, ["gen", "key"])
+    new_rows = _checkpoint(
+        new_rows.withColumn("is_new", F.lit(True)), persisted_out
+    )
+    old_rows = state.buckets.join(
+        new_rows.select("gen", "key"), ["gen", "key"], "left_semi"
+    ).withColumn("is_new", F.lit(False))
     # ONE explicit exchange before the window: the union's children carry
     # incompatible partitioning claims (a join output vs a raw explode
-    # lineage), and caching a window built straight on that union freezes
-    # an AQE-coalesced PartitioningCollection that later joins treat as
-    # co-partitioned — at 1M this dies with "PartitioningCollection
+    # lineage), and materializing a window built straight on that union
+    # freezes an AQE-coalesced PartitioningCollection that later joins treat
+    # as co-partitioned — at 1M this dies with "PartitioningCollection
     # requires all of its partitionings have the same numPartitions" /
     # "Can't zip RDDs with unequal numbers of partitions". The explicit
-    # hash repartition gives the cached window a single clean partitioning.
-    combined = old_touched.unionByName(new_buckets).repartition("gen", "key")
+    # hash repartition gives the judged table a single clean partitioning,
+    # pinned by its explicit count (_shuffle_partitions).
+    combined = old_rows.unionByName(new_rows).repartition(
+        _shuffle_partitions(new_sigs), "gen", "key"
+    )
 
     wo = Window.partitionBy("gen", "key").orderBy("doc_id")
     wc = Window.partitionBy("gen", "key")
-    capped = (
+    judged = (
         combined.withColumn("rn", F.row_number().over(wo))
         .withColumn("sz", F.count("*").over(wc))
-        .filter(
+        .withColumn(
+            "keep",
             F.when(F.col("gen") == "anchor", F.col("sz") <= cfg.anchor_max_bucket)
-            .otherwise(F.col("rn") <= cfg.max_bucket_size)
+            .otherwise(F.col("rn") <= cfg.max_bucket_size),
         )
-        .select("gen", "key", "doc_id")
-        .persist()
     )
-    if persisted_out is not None:
-        persisted_out.append(capped)
-    return new_buckets, touched, old_touched, combined, capped
+    return _checkpoint(judged, persisted_out)
+
+
+def _kept_counts_next(state: DedupState, judged: DataFrame) -> DataFrame:
+    """(doc_id, n_kept) kept-anchor counts over old + new docs: an old doc's
+    recorded count drops by its anchor rows the judged table no longer
+    keeps, a new doc counts the rows it keeps. Anchor rows with
+    ``is_new == keep`` are exactly those two kinds, and doc_ids are
+    disjoint, so one aggregation yields both."""
+    # the explicit not-null matches the filter the join below infers for
+    # ``lost``, so both branches read ONE shared exchange of ``delta``
+    delta = (
+        judged.filter(
+            (F.col("gen") == "anchor")
+            & (F.col("is_new") == F.col("keep"))
+            & F.col("doc_id").isNotNull()
+        )
+        .groupBy("doc_id")
+        .agg(F.count("*").alias("n"), F.max("is_new").alias("is_new"))
+    )
+    lost = delta.filter(~F.col("is_new")).select(
+        "doc_id", F.col("n").alias("n_lost")
+    )
+    old_counts = (
+        state.kept_anchor_counts.join(lost, "doc_id", "left")
+        .select(
+            "doc_id",
+            (F.col("n_kept") - F.coalesce("n_lost", F.lit(0))).alias("n_kept"),
+        )
+        .filter(F.col("n_kept") > 0)
+    )
+    new_counts = delta.filter(F.col("is_new")).select(
+        "doc_id", F.col("n").alias("n_kept")
+    )
+    return old_counts.unionByName(new_counts)
 
 
 def incremental_edges(
@@ -214,86 +299,56 @@ def incremental_edges(
     new_sigs: DataFrame,
     cfg: DedupConfig = DEFAULT_CONFIG,
     docs: DataFrame | None = None,
-    recap: tuple | None = None,
-    persisted_out: list[DataFrame] | None = None,
+    recap: DataFrame | None = None,
+    persisted_out: list | None = None,
 ) -> DataFrame:
     """Edges with >= 1 new-batch side: exact / near / containment /
     (cfg-gated) simhash / substring kinds, same thresholds and verify as
     the batch path. ``docs`` (doc_id, text over old + new) enables the
-    substring pass, exactly as in ``build_edges``.
+    substring pass, exactly as in ``build_edges``. ``recap`` is the batch's
+    judged table from ``_touched_recap``; it is built here when absent.
+    Batch doc_ids must be disjoint from the state's (module doc).
 
-    Scale shape: ``touched`` keys are bounded by |batch| x keys-per-doc;
+    Calling this runs Spark jobs: the recap's when it is built here, then
+    the pair-grouping shuffles above the candidate-pair checkpoint and,
+    with the substring pass, the tier-1 joins above the survivors'
+    checkpoint. ``persisted_out`` receives those checkpoints' release
+    handles (and the recap's, when built here).
+
+    Scale shape: touched keys are bounded by |batch| x keys-per-doc;
     every window/groupBy below runs over touched keys only. The one
     corpus-sized input is the by-key fetch of old bucket rows — a join
-    against a key-partitioned stage table (big side stays put; at 10^12
-    docs the per-doc kept-anchor aggregate is itself a persisted stage
-    column, refreshed with the same touched-keys delta)."""
-    # re-decide the cap policies over the COMBINED membership of touched
-    # keys (same two windows as unified_capped_buckets): anchor buckets
-    # whose old+new size exceeds the drop cap vanish for everyone, exactly
-    # as a full recompute would decide. ``recap`` (round 6) lets a caller
-    # that also calls advance_state for the same batch share ONE recap.
-    if recap is None:
-        recap = _touched_recap(state, new_sigs, cfg, persisted_out)
-    new_buckets, touched, old_touched, combined, capped = recap
-
-    # candidate pairs over touched keys, then drop old-old pairs (already
-    # resolved in state.assignments — re-verifying them is pure waste)
-    new_ids = new_sigs.select("doc_id").distinct()
-    na = new_ids.select(F.col("doc_id").alias("a")).withColumn("a_new", F.lit(1))
-    nb = new_ids.select(F.col("doc_id").alias("b")).withColumn("b_new", F.lit(1))
-    cand = (
-        _pairs_from_unified(capped)
-        .join(na, "a", "left")
-        .join(nb, "b", "left")
-        .filter(F.col("a_new").isNotNull() | F.col("b_new").isNotNull())
-        .select("gen", "a", "b", "n_shared")
-        .persist()
+    against a key-partitioned stage table (big side stays put; the per-doc
+    kept-anchor aggregate is itself a state table, refreshed with the same
+    touched-keys delta)."""
+    judged = recap if recap is not None else _touched_recap(
+        state, new_sigs, cfg, persisted_out
     )
-    if persisted_out is not None:
-        persisted_out.append(cand)
+    # the pair aggregation already hash-partitions on (gen, a, b), so the
+    # repartition adds no exchange; its explicit count pins the partitioning
+    cand = _checkpoint(
+        _pairs_from_unified(judged.filter(F.col("keep")), new_side=True)
+        .repartition(_shuffle_partitions(judged), "gen", "a", "b"),
+        persisted_out,
+    )
 
     all_sigs = state.sigs.unionByName(new_sigs)
 
     # tier-1 kept-anchor denominators, combined-drop semantics: rows in
     # untouched keys keep their recorded survival (their buckets gained no
-    # members), rows in touched keys take the re-decided verdict above.
-    capped_anchor = capped.filter(F.col("gen") == "anchor")
+    # members), rows in touched keys take the judged verdict
     if state.kept_anchor_counts is not None:
-        # O(touched) delta over the PRECOMPUTED per-doc aggregate: an old
-        # doc's count changes only by the touched-key rows it LOSES to the
-        # re-decision (keys pushed over the drop cap by new members); a new
-        # doc's count is exactly its surviving capped rows
-        old_touched_anchor = old_touched.filter(F.col("gen") == "anchor")
-        lost = (
-            old_touched_anchor.join(
-                capped_anchor, ["gen", "key", "doc_id"], "left_anti"
-            )
-            .groupBy("doc_id")
-            .agg(F.count("*").alias("n_lost"))
-        )
-        old_counts = (
-            state.kept_anchor_counts.join(lost, "doc_id", "left")
-            .select(
-                "doc_id",
-                (F.col("n_kept") - F.coalesce("n_lost", F.lit(0))).alias("n_kept"),
-            )
-            .filter(F.col("n_kept") > 0)
-        )
-        new_counts = (
-            capped_anchor.join(new_ids, "doc_id", "left_semi")
-            .groupBy("doc_id")
-            .agg(F.count("*").alias("n_kept"))
-        )
-        kept_counts = old_counts.unionByName(new_counts)
+        kept_counts = _kept_counts_next(state, judged)
     else:
-        # legacy path (no precomputed aggregate): one O(corpus) pass over
-        # the state bucket table
+        # no precomputed aggregate: one O(corpus) pass over the state
+        # bucket table
         untouched_anchor = state.buckets.filter(F.col("gen") == "anchor").join(
-            touched, ["gen", "key"], "left_anti"
+            judged.select("gen", "key"), ["gen", "key"], "left_anti"
         )
         kept_rows = untouched_anchor.select("doc_id").unionByName(
-            capped_anchor.select("doc_id")
+            judged.filter((F.col("gen") == "anchor") & F.col("keep")).select(
+                "doc_id"
+            )
         )
         kept_counts = kept_rows.groupBy("doc_id").agg(
             F.count("*").alias("n_kept")
@@ -308,22 +363,18 @@ def incremental_edges(
         .distinct()
     )
     kept_counts = kept_counts.join(cand_ids, "doc_id", "left_semi")
-    if docs is not None and cfg.substring_pass:
+    with_len = docs is not None and cfg.substring_pass
+    if with_len:
         kept_counts = kept_counts.join(
             all_sigs.select("doc_id", "n_chars"), "doc_id"
         )
 
     anchor_kept = _anchor_tier1(
-        cand.filter(F.col("gen") == "anchor").select("a", "b", "n_shared"),
-        kept_counts,
-        cfg,
+        anchor_pairs.select("a", "b", "n_shared"), kept_counts, cfg, with_len=with_len
     )
-    if docs is not None and cfg.substring_pass:
-        # round 6: same two-consumer persist as build_edges (jaccard union
-        # + substring gate share the tier-1 survivors)
-        anchor_kept = anchor_kept.persist()
-        if persisted_out is not None:
-            persisted_out.append(anchor_kept)
+    if with_len:
+        # two readers: the jaccard-verify union and the substring gate
+        anchor_kept = _checkpoint(anchor_kept, persisted_out)
     jac_cand = (
         cand.filter(F.col("gen") == "lsh")
         .select("a", "b")
@@ -367,13 +418,13 @@ def incremental_edges(
         sim_cand = cand.filter(F.col("gen") == "sim").select("a", "b")
         out = out.unionByName(simhash_edges(sim_cand, all_sigs, cfg))
 
-    if docs is not None and cfg.substring_pass:
-        from webcrawler_spark.operators.suffix import verify_substring_pairs
+    if with_len:
+        from webcrawler_spark.operators.suffix import (
+            substring_length_gate,
+            verify_substring_pairs,
+        )
 
-        gated = anchor_kept.filter(
-            (F.col("len_a") != F.col("len_b"))
-            & (F.least("len_a", "len_b") > 0)
-        ).select("a", "b")
+        gated = anchor_kept.filter(substring_length_gate()).select("a", "b")
         sub = verify_substring_pairs(gated, docs)
         out = out.unionByName(
             sub.filter(F.col("is_substring")).select(
@@ -409,13 +460,13 @@ def incremental_dedup(
     new_docs: DataFrame,
     all_docs: DataFrame,
     cfg: DedupConfig = DEFAULT_CONFIG,
-    persisted_out: list[DataFrame] | None = None,
+    persisted_out: list | None = None,
 ) -> DataFrame:
     """Convenience end-to-end increment: signatures for the new batch only,
     incremental edges, seeded assignment. ``all_docs`` = old + new (doc_id,
     text) — used for the substring pass and the assignment's doc universe.
-    ``persisted_out`` (round 6): collects every internally persisted
-    intermediate so chained callers can unpersist after materializing."""
+    ``persisted_out`` collects the persisted batch signatures and every
+    release handle ``incremental_edges`` registers."""
     from webcrawler_spark.operators.signatures import compute_signatures
 
     new_sigs = compute_signatures(new_docs, cfg).persist()
@@ -432,77 +483,48 @@ def advance_state(
     new_sigs: DataFrame,
     new_assignments: DataFrame,
     cfg: DedupConfig = DEFAULT_CONFIG,
-    recap: tuple | None = None,
-    persisted_out: list[DataFrame] | None = None,
+    recap: DataFrame | None = None,
+    persisted_out: list | None = None,
 ) -> DedupState:
     """Fold an absorbed batch INTO the state, so increments chain: the
     returned state equals ``build_dedup_state`` over the concatenated
     corpus (pytest-pinned through a chained double increment), but is
-    derived with touched-keys work only:
+    derived from the batch's judged table only:
 
     - buckets: untouched keys keep their rows; touched keys take the
-      combined-cap re-decision (LSH: top-cap of state-top-cap ∪ news =
+      judged ``keep`` rows (LSH: top-cap of state-top-cap ∪ news =
       global top-cap; anchors: combined-size drop);
     - dropped anchor keys: previous set ∪ touched keys pushed over the cap
       by the batch (a dropped key never returns — sizes only grow);
     - kept-anchor counts: previous counts minus touched-key rows lost to
-      the re-decision, plus the batch's surviving rows;
+      the re-decision, plus the batch's kept rows;
     - assignments: the increment's output (callers pass what
       ``incremental_assign``/``incremental_dedup`` returned).
 
-    Round 6 (ADVICE): pass the ``recap`` tuple from the batch's
-    ``incremental_edges`` call (or a direct ``_touched_recap``) so the
-    edges-then-advance sequence every chained increment runs pays the
-    touched-keys re-decision ONCE; without it this function recomputes the
-    identical recap (same shuffles and windows, plus a second persisted
-    copy of new_buckets/capped).
+    Pass the ``recap`` the batch's ``incremental_edges`` call used (from
+    ``_touched_recap``) to build the judged table once per batch; without
+    it this call builds it again, running its Spark jobs, and registers
+    its release handles in ``persisted_out``.
     """
-    if recap is None:
-        recap = _touched_recap(state, new_sigs, cfg, persisted_out)
-    new_buckets, touched, old_touched, combined, capped = recap
+    judged = recap if recap is not None else _touched_recap(
+        state, new_sigs, cfg, persisted_out
+    )
     buckets_next = state.buckets.join(
-        touched, ["gen", "key"], "left_anti"
-    ).unionByName(capped)
+        judged.select("gen", "key"), ["gen", "key"], "left_anti"
+    ).unionByName(judged.filter(F.col("keep")).select("gen", "key", "doc_id"))
 
     dropped_next = None
     if state.dropped_anchor_keys is not None:
-        newly_over = (
-            combined.filter(F.col("gen") == "anchor")
-            .groupBy("key")
-            .agg(F.count("*").alias("sz"))
-            .filter(F.col("sz") > cfg.anchor_max_bucket)
-            .select("key")
-        )
+        newly_over = judged.filter(
+            (F.col("gen") == "anchor") & (F.col("sz") > cfg.anchor_max_bucket)
+        ).select("key")
         dropped_next = (
             state.dropped_anchor_keys.unionByName(newly_over).distinct()
         )
 
     kept_next = None
     if state.kept_anchor_counts is not None:
-        capped_anchor = capped.filter(F.col("gen") == "anchor")
-        lost = (
-            old_touched.filter(F.col("gen") == "anchor")
-            .join(capped_anchor, ["gen", "key", "doc_id"], "left_anti")
-            .groupBy("doc_id")
-            .agg(F.count("*").alias("n_lost"))
-        )
-        old_counts = (
-            state.kept_anchor_counts.join(lost, "doc_id", "left")
-            .select(
-                "doc_id",
-                (F.col("n_kept") - F.coalesce("n_lost", F.lit(0))).alias(
-                    "n_kept"
-                ),
-            )
-            .filter(F.col("n_kept") > 0)
-        )
-        new_ids = new_sigs.select("doc_id").distinct()
-        new_counts = (
-            capped_anchor.join(new_ids, "doc_id", "left_semi")
-            .groupBy("doc_id")
-            .agg(F.count("*").alias("n_kept"))
-        )
-        kept_next = old_counts.unionByName(new_counts)
+        kept_next = _kept_counts_next(state, judged)
 
     return DedupState(
         sigs=state.sigs.unionByName(new_sigs),

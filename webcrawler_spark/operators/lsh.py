@@ -70,7 +70,10 @@ def lsh_candidates(sigs: DataFrame, cfg: DedupConfig = DEFAULT_CONFIG) -> DataFr
 
 
 def _anchor_tier1(
-    pairs_with_shared: DataFrame, kept_counts: DataFrame, cfg: DedupConfig
+    pairs_with_shared: DataFrame,
+    kept_counts: DataFrame,
+    cfg: DedupConfig,
+    with_len: bool,
 ) -> DataFrame:
     """Two-tier containment verify, tier 1: keep anchor pairs whose ESTIMATED
     containment shared_kept_anchors / min(KEPT anchors) clears tau - margin.
@@ -80,10 +83,10 @@ def _anchor_tier1(
     Scalar-only join — the expensive shingle arrays never move for the
     (vast) rejected majority.
 
-    When ``kept_counts`` carries an extra ``n_chars`` column, the survivors
-    come out as (a, b, len_a, len_b) — build_edges piggybacks the substring
-    pass's length gate on this join so it costs zero additional joins."""
-    with_len = "n_chars" in kept_counts.columns
+    ``with_len=True`` needs an ``n_chars`` column in ``kept_counts``; the
+    survivors then come out as (a, b, len_a, len_b) — build_edges piggybacks
+    the substring pass's length gate on this join so it costs zero
+    additional joins."""
     ka = kept_counts.select(
         F.col("doc_id").alias("a"),
         F.col("n_kept").alias("kept_a"),
@@ -164,7 +167,7 @@ def anchor_candidates(
     kept_counts = kept.groupBy("doc_id").agg(F.count("*").alias("n_kept"))
     if with_len:
         kept_counts = kept_counts.join(sigs.select("doc_id", "n_chars"), "doc_id")
-    return _anchor_tier1(shared, kept_counts, cfg)
+    return _anchor_tier1(shared, kept_counts, cfg, with_len=with_len)
 
 
 def simhash_candidates(sigs: DataFrame, cfg: DedupConfig = DEFAULT_CONFIG) -> DataFrame:
@@ -329,22 +332,32 @@ def unified_capped_buckets(
     )
 
 
-def _pairs_from_unified(capped: DataFrame) -> DataFrame:
-    """capped buckets -> (gen, a, b, n_shared) candidate pairs."""
+def _pairs_from_unified(capped: DataFrame, new_side: bool = False) -> DataFrame:
+    """capped buckets -> (gen, a, b, n_shared) candidate pairs.
+
+    ``new_side=True`` is the incremental path: ``capped`` carries a boolean
+    ``is_new`` column and only pairs with at least one new side come out.
+    Old-old pairs are dropped inside each bucket, before the explode."""
+    item = F.struct("doc_id", "is_new") if new_side else F.col("doc_id")
     grouped = (
         capped.groupBy("gen", "key")
-        .agg(F.sort_array(F.collect_list("doc_id")).alias("ids"))
+        .agg(F.sort_array(F.collect_list(item)).alias("ids"))
         .filter(F.size("ids") >= 2)
     )
+    if new_side:
+        pair = (
+            "transform(filter(slice(ids, i + 2, size(ids)), "
+            "y -> x.is_new OR y.is_new), "
+            "y -> struct(x.doc_id AS a, y.doc_id AS b))"
+        )
+    else:
+        pair = (
+            "transform(slice(ids, i + 2, size(ids)), y -> "
+            "struct(x AS a, y AS b))"
+        )
     pairs = grouped.select(
         "gen",
-        F.explode(
-            F.expr(
-                "flatten(transform(ids, (x, i) -> "
-                "transform(slice(ids, i + 2, size(ids)), y -> "
-                "struct(x AS a, y AS b))))"
-            )
-        ).alias("p"),
+        F.explode(F.expr(f"flatten(transform(ids, (x, i) -> {pair}))")).alias("p"),
     )
     # shared-bucket counts instead of plain distinct: same shuffle, and the
     # anchor count doubles as the tier-1 containment estimate numerator
@@ -428,7 +441,8 @@ def build_edges(
         .groupBy("doc_id")
         .agg(F.count("*").alias("n_kept"))
     )
-    if docs is not None and cfg.substring_pass:
+    with_len = docs is not None and cfg.substring_pass
+    if with_len:
         # one scalar join on the (small) kept-anchor doc set threads n_chars
         # through tier-1 so the substring length gate needs no pair joins
         kept_counts = kept_counts.join(
@@ -438,8 +452,9 @@ def build_edges(
         cand.filter(F.col("gen") == "anchor").select("a", "b", "n_shared"),
         kept_counts,
         cfg,
+        with_len=with_len,
     )
-    if docs is not None and cfg.substring_pass:
+    if with_len:
         # round 6 (guide §5): tier-1 survivors feed BOTH the jaccard-verify
         # union and the substring length gate — persist the (tiny) pair set
         # so the two-join tier-1 chain runs once per build, not twice
@@ -473,16 +488,15 @@ def build_edges(
     if cfg.simhash_edges:
         sim_cand = cand.filter(F.col("gen") == "sim").select("a", "b")
         out = out.unionByName(simhash_edges(sim_cand, sigs, cfg))
-    if docs is not None and cfg.substring_pass:
-        from webcrawler_spark.operators.suffix import verify_substring_pairs
+    if with_len:
+        from webcrawler_spark.operators.suffix import (
+            substring_length_gate,
+            verify_substring_pairs,
+        )
 
         # anchor tier-1 survivors double as substring candidates; the length
-        # gate (differing non-zero n_chars — equal lengths are exact edges
-        # or nothing) rides the tier-1 columns, costing zero extra joins
-        gated = anchor_kept.filter(
-            (F.col("len_a") != F.col("len_b"))
-            & (F.least("len_a", "len_b") > 0)
-        ).select("a", "b")
+        # gate rides the tier-1 columns, costing zero extra joins
+        gated = anchor_kept.filter(substring_length_gate()).select("a", "b")
         sub = verify_substring_pairs(gated, docs)
         out = out.unionByName(
             sub.filter(F.col("is_substring")).select(

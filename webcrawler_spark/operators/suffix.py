@@ -41,7 +41,7 @@ from collections.abc import Iterator
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -97,13 +97,18 @@ def substring_containment(
     gated = (
         pairs.join(la, "a")
         .join(lb, "b")
-        .filter(
-            (F.col("len_a") != F.col("len_b"))
-            & (F.least("len_a", "len_b") > 0)
-        )
+        .filter(substring_length_gate())
         .select("a", "b")
     )
     return verify_substring_pairs(gated, docs)
+
+
+def substring_length_gate() -> Column:
+    """Pair filter over (len_a, len_b) char lengths: a pair can only be a
+    PROPER substring pair when its lengths differ (equal lengths are exact
+    edges or nothing) and neither side is empty. The one definition every
+    substring path filters its candidates with."""
+    return (F.col("len_a") != F.col("len_b")) & (F.least("len_a", "len_b") > 0)
 
 
 def verify_substring_pairs(gated: DataFrame, docs: DataFrame) -> DataFrame:
@@ -156,9 +161,7 @@ def substring_edges(
     cand = anchor_candidates(
         sigs, cfg, persisted_out=persisted_out, with_len=True
     )
-    gated = cand.filter(
-        (F.col("len_a") != F.col("len_b")) & (F.least("len_a", "len_b") > 0)
-    ).select("a", "b")
+    gated = cand.filter(substring_length_gate()).select("a", "b")
     verdicts = verify_substring_pairs(gated, docs)
     return verdicts.filter(F.col("is_substring")).select(
         "a", "b", F.lit("substring").alias("kind")
