@@ -267,7 +267,7 @@ def test_partition_containment_pairs_large_partition():
 def test_substring_edges_on_corpus(spark):
     """containment family docs are exact substrings — the anchor+substring
     path must find them."""
-    from webcrawler_spark.operators.lsh import anchor_candidates
+    from webcrawler_spark.operators.lsh import build_edges
     from webcrawler_spark.operators.signatures import compute_signatures
     from webcrawler_spark.operators.suffix import substring_edges
     from webcrawler_spark.sources.corpus import english_docs, generate_corpus
@@ -285,6 +285,9 @@ def test_substring_edges_on_corpus(spark):
     # exact dups are substrings of each other too; nothing else qualifies
     exact_truth = {(a, b) for a, b, fam in corpus.truth_pairs if fam == "exact"}
     assert edges <= containment_truth | exact_truth
+    # the standalone query and build_edges' substring kind are one path
+    batch = build_edges(sigs, docs=docs).filter(F.col("kind") == "substring")
+    assert edges == {(r["a"], r["b"]) for r in batch.collect()}
 
 
 def test_streaming_signatures(spark, tmp_path):

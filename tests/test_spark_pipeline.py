@@ -7,10 +7,11 @@ from pyspark.sql import functions as F
 from webcrawler_spark.config import DedupConfig
 from webcrawler_spark.operators.components import assign_clusters, connected_components
 from webcrawler_spark.operators.lsh import (
-    anchor_candidates,
+    _kept_anchor_counts,
+    _tier1_survivors,
     build_edges,
-    lsh_candidates,
-    simhash_candidates,
+    unified_candidates,
+    unified_capped_buckets,
 )
 from webcrawler_spark.operators.oracle import run_oracle
 from webcrawler_spark.operators.signatures import compute_signatures
@@ -68,10 +69,23 @@ def test_signatures_match_oracle(sigs, oracle_result):
         assert set(got_sh.tolist()) == set(want_sh.tolist())
 
 
-def test_candidates_match_oracle(sigs, oracle_result):
-    assert _pairs(lsh_candidates(sigs, CFG)) == oracle_result.lsh_candidates
-    assert _pairs(anchor_candidates(sigs, CFG)) == oracle_result.anchor_candidates
-    assert _pairs(simhash_candidates(sigs, CFG)) == oracle_result.simhash_candidates
+def test_candidates_match_oracle(sigs, corpus, oracle_result):
+    """The one candidate engine, per generator: lsh and sim pairs as they
+    come out of the bucket shuffle, anchor pairs after tier 1."""
+    cand = unified_candidates(sigs, CFG)
+    assert _pairs(cand.filter(F.col("gen") == "lsh")) == oracle_result.lsh_candidates
+    tier1 = _tier1_survivors(
+        cand,
+        _kept_anchor_counts(unified_capped_buckets(sigs, CFG)),
+        sigs,
+        CFG,
+        with_len=False,
+    )
+    assert _pairs(tier1) == oracle_result.anchor_candidates
+    sim_cfg = DedupConfig(simhash_edges=True)
+    sim = unified_candidates(sigs, sim_cfg).filter(F.col("gen") == "sim")
+    want = run_oracle(english_docs(corpus), sim_cfg).simhash_candidates
+    assert _pairs(sim) == want
 
 
 def test_edges_match_oracle(sigs, docs_df, oracle_result):

@@ -82,8 +82,15 @@ def main() -> None:
     ap.add_argument("--k", type=int, default=300)
     args = ap.parse_args()
 
+    from pyspark.sql import functions as F
+
     from webcrawler_spark.config import DEFAULT_CONFIG
-    from webcrawler_spark.operators.lsh import anchor_candidates
+    from webcrawler_spark.operators.lsh import (
+        _kept_anchor_counts,
+        _pairs_from_unified,
+        _tier1_survivors,
+        unified_capped_buckets,
+    )
     from webcrawler_spark.operators.signatures import compute_signatures
     from webcrawler_spark.operators.suffix import substring_containment
     from webcrawler_spark.session import get_spark
@@ -101,7 +108,19 @@ def main() -> None:
     sigs.count()  # signature stage excluded from the measurements
 
     before = _stages(spark)
-    cand = anchor_candidates(sigs, DEFAULT_CONFIG).select("a", "b").persist()
+    # the anchor generator of the candidate engine, up to tier 1
+    capped = (
+        unified_capped_buckets(sigs, DEFAULT_CONFIG)
+        .filter(F.col("gen") == "anchor")
+        .persist()
+    )
+    cand = _tier1_survivors(
+        _pairs_from_unified(capped),
+        _kept_anchor_counts(capped),
+        sigs,
+        DEFAULT_CONFIG,
+        with_len=False,
+    ).persist()
     n_cand = cand.count()
     cand_delta = _shuffle_delta(spark, before)
 

@@ -77,12 +77,13 @@ from pyspark.sql import functions as F
 from webcrawler_spark.config import DedupConfig, DEFAULT_CONFIG
 from webcrawler_spark.operators.components import assign_clusters
 from webcrawler_spark.operators.lsh import (
-    _anchor_tier1,
+    _kept_anchor_counts,
     _pairs_from_unified,
+    _tier1_survivors,
+    _verified_edges,
     bucket_rows,
     build_edges,
     unified_capped_buckets,
-    verify_candidates,
 )
 
 
@@ -138,17 +139,12 @@ def build_dedup_state(
         .select("key")
     )
     buckets = unified_capped_buckets(sigs, cfg)
-    kept = (
-        buckets.filter(F.col("gen") == "anchor")
-        .groupBy("doc_id")
-        .agg(F.count("*").alias("n_kept"))
-    )
     return DedupState(
         sigs=sigs,
         buckets=buckets,
         assignments=assignments,
         dropped_anchor_keys=dropped,
-        kept_anchor_counts=kept,
+        kept_anchor_counts=_kept_anchor_counts(buckets),
     )
 
 
@@ -354,8 +350,8 @@ def incremental_edges(
             F.count("*").alias("n_kept")
         )
     # bound the counts table to docs that actually appear in anchor pairs —
-    # tier-1 (and the n_chars fetch below) then touch O(candidate docs),
-    # not every doc in the corpus
+    # tier-1 (and its n_chars fetch) then touch O(candidate docs), not
+    # every doc in the corpus
     anchor_pairs = cand.filter(F.col("gen") == "anchor")
     cand_ids = (
         anchor_pairs.select(F.col("a").alias("doc_id"))
@@ -364,37 +360,10 @@ def incremental_edges(
     )
     kept_counts = kept_counts.join(cand_ids, "doc_id", "left_semi")
     with_len = docs is not None and cfg.substring_pass
+    tier1 = _tier1_survivors(cand, kept_counts, all_sigs, cfg, with_len=with_len)
     if with_len:
-        kept_counts = kept_counts.join(
-            all_sigs.select("doc_id", "n_chars"), "doc_id"
-        )
-
-    anchor_kept = _anchor_tier1(
-        anchor_pairs.select("a", "b", "n_shared"), kept_counts, cfg, with_len=with_len
-    )
-    if with_len:
-        # two readers: the jaccard-verify union and the substring gate
-        anchor_kept = _checkpoint(anchor_kept, persisted_out)
-    jac_cand = (
-        cand.filter(F.col("gen") == "lsh")
-        .select("a", "b")
-        .unionByName(anchor_kept.select("a", "b"))
-        .distinct()
-    )
-    verified = verify_candidates(jac_cand, all_sigs, cfg)
-    margin = cfg.signature_tau_margin if cfg.verify_mode == "signature" else 0.0
-    kinds = F.array(
-        F.when(F.col("jaccard") >= cfg.jaccard_tau - margin, F.lit("near")),
-        F.when(
-            F.col("containment") >= cfg.containment_tau - margin,
-            F.lit("containment"),
-        ),
-    )
-    out = verified.select(
-        "a",
-        "b",
-        F.explode(F.filter(kinds, lambda x: x.isNotNull())).alias("kind"),
-    )
+        # two readers: the verify union and the substring length gate
+        tier1 = _checkpoint(tier1, persisted_out)
 
     # exact (sha256) edges: new docs against the whole corpus (old + new) —
     # a scalar hash join, never raw text
@@ -410,28 +379,7 @@ def incremental_edges(
         )
         .distinct()
     )
-    out = exact.unionByName(out)
-
-    if cfg.simhash_edges:
-        from webcrawler_spark.operators.lsh import simhash_edges
-
-        sim_cand = cand.filter(F.col("gen") == "sim").select("a", "b")
-        out = out.unionByName(simhash_edges(sim_cand, all_sigs, cfg))
-
-    if with_len:
-        from webcrawler_spark.operators.suffix import (
-            substring_length_gate,
-            verify_substring_pairs,
-        )
-
-        gated = anchor_kept.filter(substring_length_gate()).select("a", "b")
-        sub = verify_substring_pairs(gated, docs)
-        out = out.unionByName(
-            sub.filter(F.col("is_substring")).select(
-                "a", "b", F.lit("substring").alias("kind")
-            )
-        )
-    return out
+    return exact.unionByName(_verified_edges(cand, tier1, all_sigs, cfg, docs))
 
 
 def incremental_assign(

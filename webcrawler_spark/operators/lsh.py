@@ -1,92 +1,74 @@
-"""Candidate generation + verification (SURVEY.md B4/B5/B6/B7/B8).
+"""Candidate generation and verification (SURVEY.md B1, B4-B9).
 
-All relational, all JVM-side (whole-stage codegen; zero Python):
+Contract: ``build_edges`` turns a signature table into the edge table
+(a, b, kind) with a < b, and equals the numpy oracle (operators/oracle.py)
+edge for edge. Everything runs JVM-side except the substring text check.
 
-- buckets from exploded band hashes / anchor shingles / simhash block keys;
-- deterministic oversize-bucket cap: row_number over (key ORDER BY doc_id)
-  <= cfg.max_bucket_size — the degenerate-boilerplate guard (the dedup-side
-  twin of the reference's mega-domain serialization, rate_limiter.go:14-20);
-  capping via window avoids collect_list memory blowups on hot buckets;
-- candidate pairs by window-capped buckets + grouped higher-order pair
-  explosion (a < b), one exchange; AQE handles residual key skew;
-- verify via size(array_intersect(...)) on the distinct-shingle arrays =>
-  exact Jaccard and containment, matching the oracle bit-for-bit;
-- SimHash verify via bit_count(a ^ b) <= hamming (Spark >= 3.5 built-in).
+- **Candidates**: MinHash band hashes (gen "lsh"), sampled anchor shingles
+  (gen "anchor") and, when cfg.simhash_edges, SimHash block keys (gen
+  "sim") are all bucket keys. Their rows are unioned and capped after one
+  exchange on (gen, key) (``unified_capped_buckets``): lsh and sim buckets
+  keep their cfg.max_bucket_size smallest doc_ids, anchor buckets larger
+  than cfg.anchor_max_bucket are dropped whole. Each capped bucket is
+  exploded into its (a < b) pairs (``_pairs_from_unified``).
+- **Tier 1**: anchor pairs pass when shared kept anchors / min(kept
+  anchors) >= containment_tau - anchor_est_margin (``_tier1_survivors``).
+- **Verify**: lsh pairs and tier-1 survivors get exact Jaccard and
+  containment from the distinct-shingle arrays (or MinHash estimates in
+  signature mode); sim pairs get bit_count(a ^ b) <= simhash_hamming;
+  length-gated tier-1 survivors get the exact substring check
+  (``_verified_edges``, shared with operators/incremental.py).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from webcrawler_spark.config import DedupConfig, DEFAULT_CONFIG
 
 
-def _pairs_from_capped(capped: DataFrame) -> DataFrame:
-    """(key, doc_id) with bounded bucket sizes -> distinct (a < b) pairs.
-
-    groupBy reuses the window's hash partitioning on key (no extra
-    exchange); pair explosion is a narrow higher-order-function pass
-    (collect_list is safe: bucket size is already capped)."""
-    grouped = (
-        capped.groupBy("key")
-        .agg(F.sort_array(F.collect_list("doc_id")).alias("ids"))
-        .filter(F.size("ids") >= 2)
+def sorted_pairs() -> Column:
+    """Every (a, b) struct with a before b in the array column ``ids``; on
+    a sorted array of distinct ids these are exactly the pairs with a < b.
+    A narrow higher-order-function pass: explode it per grouped bucket."""
+    return F.expr(
+        "flatten(transform(ids, (x, i) -> "
+        "transform(slice(ids, i + 2, size(ids)), y -> "
+        "struct(x AS a, y AS b))))"
     )
-    pairs = grouped.select(
-        F.explode(
-            F.expr(
-                "flatten(transform(ids, (x, i) -> "
-                "transform(slice(ids, i + 2, size(ids)), y -> "
-                "struct(x AS a, y AS b))))"
-            )
-        ).alias("p")
+
+
+def _kept_anchor_counts(capped: DataFrame) -> DataFrame:
+    """(doc_id, n_kept): per doc, the anchor rows of the capped bucket table
+    that survived the oversized-bucket drop — the tier-1 denominator."""
+    return (
+        capped.filter(F.col("gen") == "anchor")
+        .groupBy("doc_id")
+        .agg(F.count("*").alias("n_kept"))
     )
-    return pairs.select("p.a", "p.b").distinct()
 
 
-def _capped_pairs(buckets: DataFrame, cap: int) -> DataFrame:
-    """buckets(key, doc_id) -> distinct candidate pairs (a < b), keeping only
-    the `cap` smallest doc_ids per key (deterministic, matches the oracle).
-
-    The window cap (not collect-then-truncate) keeps memory bounded even for
-    degenerate buckets with 10^8 members: nothing ever materializes more
-    than `cap` ids per key."""
-    w = Window.partitionBy("key").orderBy("doc_id")
-    capped = (
-        buckets.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= cap)
-        .drop("rn")
-    )
-    return _pairs_from_capped(capped)
-
-
-def lsh_candidates(sigs: DataFrame, cfg: DedupConfig = DEFAULT_CONFIG) -> DataFrame:
-    """B4/B5: band-hash buckets (band index baked into the hash seed)."""
-    buckets = sigs.select(
-        F.explode("bands").alias("key"), F.col("doc_id")
-    )
-    return _capped_pairs(buckets, cfg.max_bucket_size)
-
-
-def _anchor_tier1(
-    pairs_with_shared: DataFrame,
+def _tier1_survivors(
+    cand: DataFrame,
     kept_counts: DataFrame,
+    sigs: DataFrame,
     cfg: DedupConfig,
     with_len: bool,
 ) -> DataFrame:
-    """Two-tier containment verify, tier 1: keep anchor pairs whose ESTIMATED
-    containment shared_kept_anchors / min(KEPT anchors) clears tau - margin.
-    The denominator counts only anchors that survived the oversized-bucket
-    drop — the estimator stays unbiased however much boilerplate the corpus
-    carries (dividing by ALL anchors collapses recall on dense corpora).
-    Scalar-only join — the expensive shingle arrays never move for the
-    (vast) rejected majority.
+    """Two-tier containment verify, tier 1: the anchor pairs of ``cand``
+    (gen, a, b, n_shared) whose ESTIMATED containment n_shared / min(kept
+    anchors) clears containment_tau - anchor_est_margin. ``kept_counts``
+    (doc_id, n_kept) counts only anchors that survived the oversized-bucket
+    drop, so the estimate stays unbiased however much boilerplate the
+    corpus carries. Scalar joins only: the shingle arrays never move for
+    the rejected majority.
 
-    ``with_len=True`` needs an ``n_chars`` column in ``kept_counts``; the
-    survivors then come out as (a, b, len_a, len_b) — build_edges piggybacks
-    the substring pass's length gate on this join so it costs zero
-    additional joins."""
+    Returns (a, b), or with ``with_len`` (a, b, len_a, len_b) from
+    ``sigs``' n_chars: the substring length gate then rides this join on
+    the small per-doc kept set instead of two joins on the pair stream."""
+    if with_len:
+        kept_counts = kept_counts.join(sigs.select("doc_id", "n_chars"), "doc_id")
     ka = kept_counts.select(
         F.col("doc_id").alias("a"),
         F.col("n_kept").alias("kept_a"),
@@ -100,83 +82,15 @@ def _anchor_tier1(
     thresh = cfg.containment_tau - cfg.anchor_est_margin
     out_cols = ["a", "b"] + (["len_a", "len_b"] if with_len else [])
     return (
-        pairs_with_shared.join(ka, "a")
+        cand.filter(F.col("gen") == "anchor")
+        .select("a", "b", "n_shared")
+        .join(ka, "a")
         .join(kb, "b")
         .filter(
             F.col("n_shared") / F.least("kept_a", "kept_b") >= F.lit(thresh)
         )
         .select(*out_cols)
     )
-
-
-def _kept_anchor_stream(sigs: DataFrame, cfg: DedupConfig) -> DataFrame:
-    """(key, doc_id) anchor rows surviving the oversized-bucket drop."""
-    buckets = sigs.select(F.explode("anchors").alias("key"), F.col("doc_id"))
-    w = Window.partitionBy("key")
-    return (
-        buckets.withColumn("sz", F.count("*").over(w))
-        .filter(F.col("sz") <= cfg.anchor_max_bucket)
-        .drop("sz")
-    )
-
-
-def anchor_candidates(
-    sigs: DataFrame,
-    cfg: DedupConfig = DEFAULT_CONFIG,
-    persisted_out: list[DataFrame] | None = None,
-    with_len: bool = False,
-) -> DataFrame:
-    """B8 candidates: docs sharing anchor shingles (hash % mod == 0).
-
-    Oversized anchor buckets are DROPPED, not truncated: a shingle shared by
-    > anchor_max_bucket docs is boilerplate (no containment signal), and
-    truncation would still emit O(cap^2) garbage pairs per stop-shingle,
-    while genuine containment pairs are also discoverable via rare anchors.
-    The pair stream carries shared-anchor counts (a groupBy instead of
-    distinct — same shuffle) feeding the tier-1 containment estimate.
-
-    The kept-anchor stream is persisted: its two consumers (the bucket
-    groupBy and the per-doc kept counts) would otherwise each re-run the
-    explode + count-over-window subtree (round 6; same persisted_out
-    unpersist convention as build_edges).
-
-    ``with_len=True`` threads ``sigs``' n_chars through the tier-1 join so
-    survivors come out as (a, b, len_a, len_b) — the substring pass's
-    length gate then costs ZERO pair-level joins (one scalar join on the
-    small per-doc kept set instead of two joins on the pair stream; the
-    same piggyback build_edges uses).
-    """
-    kept = _kept_anchor_stream(sigs, cfg).persist()
-    if persisted_out is not None:
-        persisted_out.append(kept)
-    grouped = (
-        kept.groupBy("key")
-        .agg(F.sort_array(F.collect_list("doc_id")).alias("ids"))
-        .filter(F.size("ids") >= 2)
-    )
-    pairs = grouped.select(
-        F.explode(
-            F.expr(
-                "flatten(transform(ids, (x, i) -> "
-                "transform(slice(ids, i + 2, size(ids)), y -> "
-                "struct(x AS a, y AS b))))"
-            )
-        ).alias("p")
-    )
-    shared = pairs.groupBy("p.a", "p.b").agg(F.count("*").alias("n_shared"))
-    kept_counts = kept.groupBy("doc_id").agg(F.count("*").alias("n_kept"))
-    if with_len:
-        kept_counts = kept_counts.join(sigs.select("doc_id", "n_chars"), "doc_id")
-    return _anchor_tier1(shared, kept_counts, cfg, with_len=with_len)
-
-
-def simhash_candidates(sigs: DataFrame, cfg: DedupConfig = DEFAULT_CONFIG) -> DataFrame:
-    """B7 pigeonhole: <= hamming differing bits over B blocks => at least one
-    (B - hamming)-block table key matches (hashing.simhash_block_keys)."""
-    buckets = sigs.filter(F.col("n_shingles") > 0).select(
-        F.explode("sim_blocks").alias("key"), F.col("doc_id")
-    )
-    return _capped_pairs(buckets, cfg.max_bucket_size)
 
 
 def verify_candidates(
@@ -333,7 +247,9 @@ def unified_capped_buckets(
 
 
 def _pairs_from_unified(capped: DataFrame, new_side: bool = False) -> DataFrame:
-    """capped buckets -> (gen, a, b, n_shared) candidate pairs.
+    """capped buckets -> (gen, a, b, n_shared) candidate pairs, distinct per
+    generator; n_shared counts the buckets the pair shares (the tier-1
+    numerator for anchors).
 
     ``new_side=True`` is the incremental path: ``capped`` carries a boolean
     ``is_new`` column and only pairs with at least one new side come out.
@@ -345,22 +261,15 @@ def _pairs_from_unified(capped: DataFrame, new_side: bool = False) -> DataFrame:
         .filter(F.size("ids") >= 2)
     )
     if new_side:
-        pair = (
+        pairs_expr = F.expr(
+            "flatten(transform(ids, (x, i) -> "
             "transform(filter(slice(ids, i + 2, size(ids)), "
             "y -> x.is_new OR y.is_new), "
-            "y -> struct(x.doc_id AS a, y.doc_id AS b))"
+            "y -> struct(x.doc_id AS a, y.doc_id AS b))))"
         )
     else:
-        pair = (
-            "transform(slice(ids, i + 2, size(ids)), y -> "
-            "struct(x AS a, y AS b))"
-        )
-    pairs = grouped.select(
-        "gen",
-        F.explode(F.expr(f"flatten(transform(ids, (x, i) -> {pair}))")).alias("p"),
-    )
-    # shared-bucket counts instead of plain distinct: same shuffle, and the
-    # anchor count doubles as the tier-1 containment estimate numerator
+        pairs_expr = sorted_pairs()
+    pairs = grouped.select("gen", F.explode(pairs_expr).alias("p"))
     return pairs.groupBy("gen", "p.a", "p.b").agg(
         F.count("*").alias("n_shared")
     ).select("gen", F.col("a"), F.col("b"), "n_shared")
@@ -369,102 +278,40 @@ def _pairs_from_unified(capped: DataFrame, new_side: bool = False) -> DataFrame:
 def unified_candidates(
     sigs: DataFrame, cfg: DedupConfig = DEFAULT_CONFIG
 ) -> DataFrame:
-    """All three candidate generators through ONE bucket shuffle.
-
-    Bucket rows for bands, anchors and simhash blocks are unioned BEFORE the
-    exchange; one grouped pair explosion follows. Returns
-    (gen, a, b, n_shared) distinct per generator.
-
-    Produces exactly the same candidate sets as the per-generator paths
-    (test-pinned), at 1/3 of the shuffle count — the dominant fixed cost of
-    the edges stage at moderate scale.
-    """
+    """(gen, a, b, n_shared) candidate pairs of every generator, through one
+    bucket shuffle. Filtered to one ``gen``, the pairs equal the oracle's
+    candidates of that generator: ``lsh`` and ``sim`` (the latter only when
+    cfg.simhash_edges) as they are, ``anchor`` after ``_tier1_survivors``
+    (test_candidates_match_oracle)."""
     return _pairs_from_unified(unified_capped_buckets(sigs, cfg))
 
 
-def build_edges(
+def _verified_edges(
+    cand: DataFrame,
+    tier1: DataFrame,
     sigs: DataFrame,
-    cfg: DedupConfig = DEFAULT_CONFIG,
-    docs: DataFrame | None = None,
-    persisted_out: list[DataFrame] | None = None,
+    cfg: DedupConfig,
+    docs: DataFrame | None,
 ) -> DataFrame:
-    """B9: union of exact, verified near-dup, containment, (optionally,
-    cfg.simhash_edges) simhash, and (when ``docs`` is provided and
-    cfg.substring_pass) exact-substring edges.
+    """(a, b, kind) edges from candidate pairs ``cand`` (gen, a, b, ...)
+    and tier-1 survivors ``tier1`` (``_tier1_survivors``; with ``len_a``/
+    ``len_b`` when the substring pass runs):
 
-    Jaccard/containment verification runs ONCE over the union of LSH and
-    anchor candidates (a pair found by either generator qualifies through
-    either metric — same rule as the oracle). The substring pass (B8, the
-    suffix-array stage of the north rule) reuses the anchor tier-1 survivors
-    as candidates — exact substring implies shingle containment ~1, so no
-    extra candidate generation is needed — and verifies smaller-text-in-
-    larger-text with a C-level search via PER-PAIR text joins: a doc in k
-    surviving pairs has its text co-located k times. That trade is deliberate
-    and measured (tools/substring_shuffle_probe.py -> BENCH/
-    substring_shuffle.json): the worst hub shape the anchor cap does not
-    prune — one 64 KiB container holding ~300 standalone docs — shuffles
-    ~6 MB compressed for the whole verify sub-DAG (~21 KB/pair, repeats
-    collapse under shuffle compression), the same order as the candidate
-    stage itself, while a needed-texts semi-join costs more stage latency
-    than it saves in bytes at every scale probed (round-3 measurement,
-    suffix.py). The structural bound: per-doc text <= 64 KiB (textnorm cap)
-    x true-positive pair count; the inverse hub (one doc contained in
-    many) is dropped by anchor_max_bucket before any text moves.
-    ``docs`` needs columns (doc_id, text).
+    - near / containment: Jaccard and containment verified ONCE over lsh
+      pairs ∪ tier-1 survivors (a pair found by either generator qualifies
+      through either metric, as in the oracle);
+    - simhash, when cfg.simhash_edges: sim pairs within simhash_hamming;
+    - substring, when ``docs`` (doc_id, text) is given and
+      cfg.substring_pass: length-gated tier-1 survivors whose smaller text
+      occurs in the larger (suffix.gated_substring_edges).
 
-    Verify-join shuffle note (closes a long-open "semi-join prune the
-    signatures to candidate docs?" question): at runtime AQE converts every
-    join in this DAG to BroadcastHashJoin with the (small) pair side
-    broadcast — measured at sf0.01: 12 BHJ / 0 SMJ in the final adaptive
-    plan — so the text-sized shingle arrays never cross a shuffle for the
-    verify; a manual semi-join prune would only add a stage. At cluster
-    scale the same holds while candidate pairs fit the broadcast threshold;
-    beyond that, AQE falls back to shuffled joins where a prune could then
-    pay — revisit only if that regime is ever measured.
-
-    ``persisted_out``: when given, the internally persisted intermediates
-    (capped buckets, candidate pairs) are appended so the caller can
-    ``unpersist()`` them after the returned edges are materialized — callers
-    that checkpoint edges to a stage table should always do this (the
-    blocks are dead weight for the rest of the job otherwise).
-    """
-    # one bucket exchange feeds candidate pairs AND the kept-anchor counts
-    # (the tier-1 denominator) — the counts previously re-exploded and
-    # re-shuffled every anchor row through a second window; persisted:
-    # two consumers, spills to disk automatically if it outgrows memory
-    capped = unified_capped_buckets(sigs, cfg).persist()
-    cand = _pairs_from_unified(capped).persist()
-    if persisted_out is not None:
-        persisted_out += [capped, cand]
-    kept_counts = (
-        capped.filter(F.col("gen") == "anchor")
-        .groupBy("doc_id")
-        .agg(F.count("*").alias("n_kept"))
-    )
-    with_len = docs is not None and cfg.substring_pass
-    if with_len:
-        # one scalar join on the (small) kept-anchor doc set threads n_chars
-        # through tier-1 so the substring length gate needs no pair joins
-        kept_counts = kept_counts.join(
-            sigs.select("doc_id", "n_chars"), "doc_id"
-        )
-    anchor_kept = _anchor_tier1(
-        cand.filter(F.col("gen") == "anchor").select("a", "b", "n_shared"),
-        kept_counts,
-        cfg,
-        with_len=with_len,
-    )
-    if with_len:
-        # round 6 (guide §5): tier-1 survivors feed BOTH the jaccard-verify
-        # union and the substring length gate — persist the (tiny) pair set
-        # so the two-join tier-1 chain runs once per build, not twice
-        anchor_kept = anchor_kept.persist()
-        if persisted_out is not None:
-            persisted_out.append(anchor_kept)
+    ``sigs`` must cover every doc of ``cand`` and ``docs`` every doc of
+    ``tier1``. With the substring pass ``tier1`` has two readers, so
+    callers materialize it first."""
     jac_cand = (
         cand.filter(F.col("gen") == "lsh")
         .select("a", "b")
-        .unionByName(anchor_kept.select("a", "b"))
+        .unionByName(tier1.select("a", "b"))
         .distinct()
     )
     verified = verify_candidates(jac_cand, sigs, cfg)
@@ -479,28 +326,59 @@ def build_edges(
             F.lit("containment"),
         ),
     )
-    jc_edges = verified.select(
+    out = verified.select(
         "a",
         "b",
         F.explode(F.filter(kinds, lambda x: x.isNotNull())).alias("kind"),
     )
-    out = exact_edges(sigs).unionByName(jc_edges)
     if cfg.simhash_edges:
         sim_cand = cand.filter(F.col("gen") == "sim").select("a", "b")
         out = out.unionByName(simhash_edges(sim_cand, sigs, cfg))
-    if with_len:
-        from webcrawler_spark.operators.suffix import (
-            substring_length_gate,
-            verify_substring_pairs,
-        )
+    if docs is not None and cfg.substring_pass:
+        from webcrawler_spark.operators.suffix import gated_substring_edges
 
-        # anchor tier-1 survivors double as substring candidates; the length
-        # gate rides the tier-1 columns, costing zero extra joins
-        gated = anchor_kept.filter(substring_length_gate()).select("a", "b")
-        sub = verify_substring_pairs(gated, docs)
-        out = out.unionByName(
-            sub.filter(F.col("is_substring")).select(
-                "a", "b", F.lit("substring").alias("kind")
-            )
-        )
+        out = out.unionByName(gated_substring_edges(tier1, docs))
     return out
+
+
+def build_edges(
+    sigs: DataFrame,
+    cfg: DedupConfig = DEFAULT_CONFIG,
+    docs: DataFrame | None = None,
+    persisted_out: list[DataFrame] | None = None,
+) -> DataFrame:
+    """B9: the corpus's edge table (a, b, kind), a < b: exact (same
+    sha256), near (Jaccard >= jaccard_tau), containment (>=
+    containment_tau), simhash (only when cfg.simhash_edges) and substring
+    (only when ``docs`` (doc_id, text) is given and cfg.substring_pass).
+    A pair appears once per kind it qualifies for. Equals the oracle's
+    edges (test_edges_match_oracle).
+
+    The substring check joins each surviving pair's two texts, so a doc in
+    k surviving pairs ships its text k times: bounded by the 64 KiB/doc
+    textnorm cap x its true-positive pair count, since the inverse hub
+    (one doc contained in many) is dropped by anchor_max_bucket before any
+    text moves (BENCH/substring_shuffle.json measures the worst hub).
+
+    Calling this runs no Spark job. The capped buckets, the candidate pairs
+    and, with the substring pass, the tier-1 survivors are persisted (each
+    has several readers); when ``persisted_out`` is given they are
+    appended to it so the caller can ``unpersist()`` them once the
+    returned edges are materialized.
+    """
+    capped = unified_capped_buckets(sigs, cfg).persist()
+    cand = _pairs_from_unified(capped).persist()
+    if persisted_out is not None:
+        persisted_out += [capped, cand]
+    with_len = docs is not None and cfg.substring_pass
+    tier1 = _tier1_survivors(
+        cand, _kept_anchor_counts(capped), sigs, cfg, with_len=with_len
+    )
+    if with_len:
+        # two readers: the verify union and the substring length gate
+        tier1 = tier1.persist()
+        if persisted_out is not None:
+            persisted_out.append(tier1)
+    return exact_edges(sigs).unionByName(
+        _verified_edges(cand, tier1, sigs, cfg, docs)
+    )

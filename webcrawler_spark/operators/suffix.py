@@ -113,8 +113,8 @@ def substring_length_gate() -> Column:
 
 def verify_substring_pairs(gated: DataFrame, docs: DataFrame) -> DataFrame:
     """The text-verify core: caller guarantees the pairs are already
-    length-gated (differing, non-zero lengths). build_edges produces its
-    gated pairs for free off the tier-1 join and calls this directly."""
+    length-gated (differing, non-zero lengths). ``gated_substring_edges``
+    gates the tier-1 survivors with the lengths their join carries."""
     ta = docs.select(F.col("doc_id").alias("a"), F.col("text").alias("text_a"))
     tb = docs.select(F.col("doc_id").alias("b"), F.col("text").alias("text_b"))
     # rebalance before the Python stage: the (tiny) pair set is broadcast
@@ -145,27 +145,56 @@ def verify_substring_pairs(gated: DataFrame, docs: DataFrame) -> DataFrame:
     return joined.mapInPandas(gen, schema=_PAIR_SCHEMA)
 
 
+def gated_substring_edges(tier1: DataFrame, docs: DataFrame) -> DataFrame:
+    """Tier-1 survivors (a, b, len_a, len_b) -> exact-substring edges
+    (a, b, kind='substring'): the length gate, then the text verify. The
+    substring step of lsh.build_edges and of ``substring_edges``."""
+    gated = tier1.filter(substring_length_gate()).select("a", "b")
+    return (
+        verify_substring_pairs(gated, docs)
+        .filter(F.col("is_substring"))
+        .select("a", "b", F.lit("substring").alias("kind"))
+    )
+
+
 def substring_edges(
     sigs: DataFrame, docs: DataFrame, cfg=None, persisted_out=None
 ) -> DataFrame:
-    """Anchor candidates -> exact-substring edges (kind='substring').
+    """Exact-substring edges (a, b, kind='substring') over the anchor
+    candidates: the substring-kind edges lsh.build_edges(sigs, cfg,
+    docs=docs) emits when cfg.substring_pass, without running the other
+    generators or kinds. ``docs`` needs (doc_id, text).
 
-    Round 6: the length gate rides the tier-1 join (with_len=True — one
-    scalar join on the small per-doc kept set inside anchor_candidates)
-    instead of two pair-level joins against the signature meta afterwards;
-    the same piggyback build_edges uses. Same gated pair set."""
+    The capped anchor buckets are persisted (the pair grouping and the
+    kept-anchor counts both read them); when ``persisted_out`` is given
+    they are appended to it for the caller to ``unpersist()`` after the
+    edges are materialized."""
     from webcrawler_spark.config import DEFAULT_CONFIG
-    from webcrawler_spark.operators.lsh import anchor_candidates
+    from webcrawler_spark.operators.lsh import (
+        _kept_anchor_counts,
+        _pairs_from_unified,
+        _tier1_survivors,
+        unified_capped_buckets,
+    )
 
     cfg = cfg or DEFAULT_CONFIG
-    cand = anchor_candidates(
-        sigs, cfg, persisted_out=persisted_out, with_len=True
+    # the gen filter is pushed below both cap windows and through the
+    # bucket union: only the anchor stream is exploded
+    capped = (
+        unified_capped_buckets(sigs, cfg)
+        .filter(F.col("gen") == "anchor")
+        .persist()
     )
-    gated = cand.filter(substring_length_gate()).select("a", "b")
-    verdicts = verify_substring_pairs(gated, docs)
-    return verdicts.filter(F.col("is_substring")).select(
-        "a", "b", F.lit("substring").alias("kind")
+    if persisted_out is not None:
+        persisted_out.append(capped)
+    tier1 = _tier1_survivors(
+        _pairs_from_unified(capped),
+        _kept_anchor_counts(capped),
+        sigs,
+        cfg,
+        with_len=True,
     )
+    return gated_substring_edges(tier1, docs)
 
 
 # ---------------------------------------------------------------------------

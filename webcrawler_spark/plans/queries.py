@@ -615,6 +615,8 @@ def q_ngram_jaccard_pairs(spark, sf_dir):
     convention as the engine's hashed-shingle metrics (operators/
     hashing.py), whose string-based oracle is green at every scale;
     collision odds are ~n_shingles^2/2^64 (~1e-11 at contract scale)."""
+    from webcrawler_spark.operators.lsh import sorted_pairs
+
     sh = _shingle_df(spark, sf_dir)
     # the cap ("the max_bucket_size smallest doc_ids per shingle") is
     # applied INSIDE the aggregation: (k, doc_id) rows are distinct, so
@@ -660,15 +662,7 @@ def q_ngram_jaccard_pairs(spark, sf_dir):
         )
         .filter(F.size("ids") >= 2)
     )
-    pairs = grouped.select(
-        F.explode(
-            F.expr(
-                "flatten(transform(ids, (x, i) -> "
-                "transform(slice(ids, i + 2, size(ids)), y -> "
-                "struct(x AS a, y AS b))))"
-            )
-        ).alias("p")
-    )
+    pairs = grouped.select(F.explode(sorted_pairs()).alias("p"))
     inter = pairs.groupBy(
         F.col("p.a").alias("doc_id_a"), F.col("p.b").alias("doc_id_b")
     ).agg(F.count("*").alias("inter"))
@@ -1229,29 +1223,24 @@ FROM c JOIN v ON c.user_id = v.user_id
 # --------------------------------------------------------------------------
 
 def _doc_signatures(spark, sf_dir):
+    """The documents' signature table, cached: the edge builders read it
+    from many branches (exact, bucket rows, tier-1, verify), each of which
+    would otherwise re-run the Arrow signature stage. The pipeline path
+    writes signatures to parquet instead.
+
+    The cache holds only the columns build_edges reads under
+    DEFAULT_CONFIG: doc_id, sha256, n_chars, n_shingles, bands, anchors,
+    plus the verify input (shingles in exact mode, minhash in signature
+    mode) and sim_blocks when simhash edges are on. The 128-long minhash
+    array is dropped in exact mode, where nothing downstream reads it.
+
+    The documents are split by core count for the CPU-bound Arrow stage,
+    but the cache is repartitioned by doc_id into ``_cache_partitions`` of
+    the documents file (~32 MB each): every warm scan pays one task launch
+    per cached partition, and cached plans pin their partitioning, so AQE
+    cannot coalesce them later."""
     from webcrawler_spark.operators.signatures import compute_signatures
 
-    # cached: build_edges fans out into 5 branches (exact/lsh/anchor/simhash/
-    # verify) that would otherwise re-run the Arrow signature stage each
-    # (the pipeline path checkpoints signatures to parquet instead).
-    # round 6: (a) repartitioned first — the single-row-group contract files
-    # otherwise run the whole Arrow signature stage on <= 2 cores (cold
-    # path; the cache hides this from warm reps but not from first runs);
-    # (b) the cached projection carries ONLY the columns build_edges reads
-    # under the active config — in exact-verify mode the 128-long minhash
-    # array (the widest column, ~50 MB at sf1.0) is consumed inside the
-    # signature stage to derive band keys and never referenced again, yet
-    # it was cached and carried through every downstream scan of the
-    # 12-join edges DAG (guide §2.3 "project before the exchange";
-    # measured: warm build_edges 5.9 -> 4.4 s, cold 16 -> 8.5 s at sf1.0)
-    # (c) the CACHE is compacted to ~32 MB partitions (derived from the
-    # input size, not the core count): the pre-compute repartition is right
-    # for the Arrow stage (CPU-bound per row) but wrong as a cache layout —
-    # every warm scan of a 32-partition cache of tiny partitions pays ~30
-    # extra task launches per stage, and the edges DAG scans this cache
-    # ~10x per build (measured at 10x scale: warm anchor_candidates 1.19 s
-    # with a 32-partition cache vs 0.56 s with a size-derived one). AQE
-    # cannot do this itself: cached plans pin their output partitioning.
     cols = ["doc_id", "sha256", "n_chars", "n_shingles", "bands", "anchors"]
     if DEFAULT_CONFIG.verify_mode == "exact":
         cols.append("shingles")
