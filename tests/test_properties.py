@@ -119,6 +119,38 @@ def test_oracle_dsu_components_consistent(edges):
             assert dsu.find(x) == m
 
 
+_ids = st.integers(0, 2**62)
+_edge_lists = st.one_of(
+    st.lists(st.tuples(st.integers(0, 60), st.integers(0, 60)), max_size=120),
+    # chains: consecutive ids of a list of distinct ids
+    st.lists(_ids, min_size=2, max_size=80, unique=True).map(
+        lambda ids: list(zip(ids, ids[1:]))
+    ),
+    # stars without self-loops: one centre, distinct leaves
+    st.tuples(_ids, st.lists(_ids, min_size=1, max_size=80, unique=True)).map(
+        lambda cl: [(cl[0], x) for x in cl[1] if x != cl[0]]
+    ),
+)
+
+
+@settings(max_examples=150, deadline=None)
+@given(_edge_lists)
+def test_local_union_find_kernel_matches_dsu(edges):
+    """components._min_label_components (the numpy kernel of union-find's
+    local phase) maps every node to the same component min as DisjointSet."""
+    from webcrawler_spark.operators.components import _min_label_components
+    from webcrawler_spark.operators.oracle import DisjointSet
+
+    dsu = DisjointSet()
+    for a, b in edges:
+        dsu.union(a, b)
+    u = np.array([a for a, _ in edges], dtype=np.int64)
+    v = np.array([b for _, b in edges], dtype=np.int64)
+    nodes, roots = _min_label_components(u, v)
+    got = dict(zip(nodes.tolist(), roots.tolist()))
+    assert got == {x: dsu.find(x) for x in dsu.parent}
+
+
 @settings(max_examples=40, deadline=None)
 @given(st.data())
 def test_shingle_containment_property(data):

@@ -198,8 +198,11 @@ def test_extraction_single_execution_in_plan(spark, corpus_dir):
     assert plan.count("MapInPandas") == 1
 
 
-def test_connected_components_vs_dsu(spark):
-    """Pathological graphs: long chain, star, two blobs + bridge, random."""
+def test_connected_components_vs_dsu(spark, monkeypatch):
+    """Pathological graphs: long chain, star, two blobs + bridge, random.
+    With AQE coalescing the edge stream to one partition the local phase
+    alone must resolve them (no star round); with coalescing off the
+    stream keeps its shuffle partitions and the star rounds must run."""
     import random
 
     rnd = random.Random(7)
@@ -240,12 +243,33 @@ def test_connected_components_vs_dsu(spark):
         for x in ids:
             want[x] = m
 
+    from webcrawler_spark.operators import components
+
+    tests = []
+    star_forest = components._is_min_rooted_star_forest
+    monkeypatch.setattr(
+        components,
+        "_is_min_rooted_star_forest",
+        lambda e: tests.append(1) or star_forest(e),
+    )
     df = spark.createDataFrame(edges, "a long, b long")
-    got = {
-        r["doc_id"]: r["cluster_id"]
-        for r in connected_components(df).collect()
-    }
-    assert got == want
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    saved = spark.conf.get(key)
+    try:
+        for coalesce in ("true", "false"):
+            spark.conf.set(key, coalesce)
+            tests.clear()
+            got = {
+                r["doc_id"]: r["cluster_id"]
+                for r in connected_components(df).collect()
+            }
+            assert got == want
+            if coalesce == "true":
+                assert not tests  # one partition: no convergence test
+            else:
+                assert tests  # several partitions: the star rounds ran
+    finally:
+        spark.conf.set(key, saved)
 
 
 def test_pipeline_end_to_end_and_resume(spark, corpus_dir, corpus, tmp_path):
@@ -605,7 +629,10 @@ def test_advance_state_shared_recap_equivalent(spark, docs_df):
     sigs1 = compute_signatures(part1, CFG).cache()
     fresh1 = build_dedup_state(docs01, CFG)
     # the test's own cached inputs hold blocks before the increment starts
-    for df in (docs_df, state0.sigs, sigs1, fresh1.sigs):
+    for df in (
+        docs_df, state0.sigs, state0.assignments, sigs1, fresh1.sigs,
+        fresh1.assignments,
+    ):
         df.count()
     before = stored()
     persisted: list = []

@@ -1,10 +1,22 @@
-"""Distributed connected components: alternating large-star / small-star
-(SURVEY.md B10; Kiveris et al., "Connected Components in MapReduce and
-Beyond", SoCC'14 — see PAPERS.md). Pure DataFrame — no GraphFrames.
+"""Distributed connected components: a local union-find pass, then
+alternating large-star / small-star rounds only where that pass could not
+see the whole graph (SURVEY.md B10). Pure DataFrame plus one Arrow stage —
+no GraphFrames.
 
-Converges in O(log^2 n) rounds (O(log n) in practice); every round is one
-groupBy-min window + a projection. Each iteration localCheckpoints to cut
-lineage (the reference's periodic-persistence analog, SURVEY.md section 4).
+Local phase (BTS load-balanced union-find, PAPERS.md): every partition of
+the deduplicated edge stream is contracted in numpy to a min-rooted star
+forest, one (node, partition-local component min) edge per node that is not
+its component's min. Memory is O(edges in one partition). The union over
+partitions has exactly the input's components.
+
+Global phase (Kiveris et al., "Connected Components in MapReduce and
+Beyond", SoCC'14 — see PAPERS.md): when the stream has more than one
+partition, alternating large-star / small-star rounds run on the contracted
+stars until the edge set is a min-rooted star forest, O(log^2 n) rounds
+(O(log n) in practice). Each round is a lazy local checkpoint, which cuts
+the lineage (both star passes read their input twice, so the plan would
+grow ~4x per round) and which the round's convergence test materializes:
+one Spark job per round.
 
 Node ids are int64; the final assignment maps every node to the minimum
 doc_id of its component (the oracle's min-root convention).
@@ -12,8 +24,57 @@ doc_id of its component (the oracle's min-root convention).
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+
+def _min_label_components(
+    u: np.ndarray, v: np.ndarray
+) -> tuple[np.ndarray, np.ndarray]:
+    """Components of the edges (u[i], v[i]): every node (sorted ascending)
+    and the minimum node of its component. Min-label hooking of both
+    endpoints and of their current labels, then pointer jumping, repeated
+    until no label changes. Labels only decrease and stay inside their
+    component, so at the fixpoint each component carries its min."""
+    nodes, idx = np.unique(np.concatenate([u, v]), return_inverse=True)
+    a, b = idx[: len(u)], idx[len(u):]
+    lab = np.arange(len(nodes))
+    while True:
+        la, lb = lab[a], lab[b]
+        m = np.minimum(la, lb)
+        hooked = lab.copy()
+        for ends in (a, b, la, lb):
+            np.minimum.at(hooked, ends, m)
+        while True:
+            jumped = hooked[hooked]
+            if np.array_equal(jumped, hooked):
+                break
+            hooked = jumped
+        if np.array_equal(hooked, lab):
+            return nodes, nodes[lab]
+        lab = hooked
+
+
+def _local_stars(edges: DataFrame) -> DataFrame:
+    """(u, v) -> (u, v = the min of u's component within u's partition) for
+    every node u that is not that min: one narrow Arrow stage."""
+
+    def contract(batches):
+        parts = [(b.column(0).to_numpy(), b.column(1).to_numpy()) for b in batches]
+        if not parts:
+            return
+        nodes, roots = _min_label_components(
+            np.concatenate([p[0] for p in parts]),
+            np.concatenate([p[1] for p in parts]),
+        )
+        keep = nodes != roots
+        yield pa.RecordBatch.from_arrays(
+            [pa.array(nodes[keep]), pa.array(roots[keep])], names=["u", "v"]
+        )
+
+    return edges.mapInArrow(contract, "u long, v long")
 
 
 def _symmetrize(edges: DataFrame) -> DataFrame:
@@ -60,9 +121,7 @@ def _is_min_rooted_star_forest(edges: DataFrame) -> bool:
     (u > v), which for a star forest forces each root to be its component's
     minimum. One aggregation job over a (node, role) projection — 2|E|
     narrow rows, no sort; the job also materializes the caller's lazy
-    checkpoint exactly like the fingerprint job it replaces (the previous
-    convergence check: stop when two consecutive rounds' count +
-    order-independent bit_xor(xxhash64(u, v)) fingerprints matched)."""
+    checkpoint."""
     roles = edges.select(
         F.col("u").alias("n"),
         F.lit(1).alias("r"),
@@ -93,56 +152,53 @@ def _is_min_rooted_star_forest(edges: DataFrame) -> bool:
 def connected_components(
     edges: DataFrame, max_iterations: int = 50
 ) -> DataFrame:
-    """edges(a, b) -> assignments(doc_id, cluster_id) for every node that
-    appears in an edge (isolated nodes are absent — callers coalesce).
+    """edges(a, b) -> assignments(doc_id, cluster_id = component min) for
+    every node that appears in an edge (isolated nodes are absent — callers
+    coalesce).
 
-    Alternates large-star/small-star until the edge set IS the fixpoint
-    shape — a min-rooted star forest, tested directly on the current edge
-    set (round 6). The previous stop ran rounds until two consecutive edge
-    fingerprints matched, which by construction costs one full EXTRA star
-    round (2 window sorts + a distinct exchange) just to confirm the
-    fixpoint; the direct test replaces the fingerprint job one-for-one
-    (same checkpoint-materializing aggregation slot, no extra job) and
-    stops at the SAME state: the alternating algorithm's fixpoints are
-    exactly the min-rooted star forests (Kiveris et al. §3), star forests
-    are invariant under both passes, and `_is_min_rooted_star_forest` is a
-    sound+complete test of that shape (see its docstring).
+    The self-loop-free, deduplicated (u, v) stream is contracted per
+    partition by the local phase (module doc), in memory O(edges in one
+    partition). When that stream has at most one partition (AQE coalesces
+    it to one only below its advisory partition size) the local phase saw
+    every edge and its output is already the fixpoint, so no star round
+    runs. Otherwise the rounds run on the contracted stars until
+    `_is_min_rooted_star_forest` holds — the alternating algorithm's
+    fixpoints are exactly those forests (Kiveris et al. §3) — and a graph
+    that needs more than ``max_iterations`` rounds raises RuntimeError.
 
-    Round-6 barrier optimization (guide §1.2): each round uses a LAZY
-    localCheckpoint — the plan is truncated immediately (both star passes
-    reference their input twice, so without truncation the lineage grows
-    ~4x per round and analysis itself OOMs on deep inputs), but
-    materialization is deferred to the convergence-test aggregation — ONE
-    Spark job per round instead of eager-checkpoint-job + test-job. The
-    round structure is unchanged (batching two star rounds per barrier was
-    tried earlier and MEASURED SLOWER — real graphs converge in 1-3
-    effective rounds)."""
-    cur = (
+    Defining the result runs the distinct's exchange. With one partition,
+    the local pass and the members ∪ roots tail run in the caller's first
+    action; otherwise the star rounds (one job each, the first one also
+    running the local pass) run while defining, and only the tail is left
+    to that action."""
+    cur = _local_stars(
         edges.select(F.col("a").alias("u"), F.col("b").alias("v"))
         .filter(F.col("u") != F.col("v"))
         .distinct()
-        .localCheckpoint(eager=False)
-    )
-    for _ in range(max_iterations):
-        # the test job materializes the checkpoint as a side effect
-        if _is_min_rooted_star_forest(cur):
-            break
-        cur = _small_star(_large_star(cur)).localCheckpoint(eager=False)
-    else:
-        raise RuntimeError(f"connected_components: no fixpoint in {max_iterations} iterations")
+    ).localCheckpoint(eager=False)
+    # defining the lazy checkpoint already ran the exchange above it, so
+    # its (AQE-coalesced) partition count is known without a job
+    if cur._jdf.queryExecution().analyzed().rdd().getNumPartitions() > 1:
+        for _ in range(max_iterations):
+            # the test job materializes the checkpoint as a side effect
+            if _is_min_rooted_star_forest(cur):
+                break
+            cur = _small_star(_large_star(cur)).localCheckpoint(eager=False)
+        else:
+            raise RuntimeError(
+                f"connected_components: no fixpoint in {max_iterations} iterations"
+            )
 
     # At the fixpoint every edge is (node, component-min). A node can also be
     # a root (appears only as v): roots map to themselves.
     #
-    # No distinct over the union (round 6): the fixpoint is a min-rooted
-    # star forest (Kiveris et al. §3 — the property the min-root assignment
-    # below already relies on), so (a) each non-root node appears exactly
-    # once as u (its single (u, component-min) edge; the edge multiset is
-    # distinct and v is determined by u), (b) roots never appear as u (a
-    # root's star edge would be the self-loop (min, min), filtered every
-    # round), and (c) `roots` is deduped by its own distinct. The branches
-    # are therefore disjoint and internally duplicate-free — the old
-    # distinct was one full exchange of the assignment stream for nothing.
+    # No distinct over the union: the fixpoint is a min-rooted star forest,
+    # so (a) each non-root node appears exactly once as u (its single
+    # (u, component-min) edge; the edge multiset is distinct and v is
+    # determined by u), (b) roots never appear as u (a root's star edge
+    # would be the self-loop (min, min), which is never emitted), and
+    # (c) `roots` is deduped by its own distinct. The branches are
+    # therefore disjoint and internally duplicate-free.
     members = cur.select(F.col("u").alias("doc_id"), F.col("v").alias("cluster_id"))
     roots = cur.select(F.col("v").alias("doc_id")).distinct().withColumn(
         "cluster_id", F.col("doc_id")
