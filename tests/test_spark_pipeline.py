@@ -200,8 +200,8 @@ def test_extraction_single_execution_in_plan(spark, corpus_dir):
 
 def test_connected_components_vs_dsu(spark, monkeypatch):
     """Pathological graphs: long chain, star, two blobs + bridge, random.
-    With AQE coalescing the edge stream to one partition the local phase
-    alone must resolve them (no star round); with coalescing off the
+    With AQE coalescing the edge stream to one partition the driver-side
+    numpy pass must resolve them (no star round); with coalescing off the
     stream keeps its shuffle partitions and the star rounds must run."""
     import random
 
@@ -629,10 +629,7 @@ def test_advance_state_shared_recap_equivalent(spark, docs_df):
     sigs1 = compute_signatures(part1, CFG).cache()
     fresh1 = build_dedup_state(docs01, CFG)
     # the test's own cached inputs hold blocks before the increment starts
-    for df in (
-        docs_df, state0.sigs, state0.assignments, sigs1, fresh1.sigs,
-        fresh1.assignments,
-    ):
+    for df in (docs_df, state0.sigs, sigs1, fresh1.sigs):
         df.count()
     before = stored()
     persisted: list = []

@@ -1,22 +1,24 @@
-"""Distributed connected components: a local union-find pass, then
-alternating large-star / small-star rounds only where that pass could not
-see the whole graph (SURVEY.md B10). Pure DataFrame plus one Arrow stage —
-no GraphFrames.
+"""Distributed connected components (SURVEY.md B10). Pure DataFrame plus
+one driver-side numpy pass — no GraphFrames.
 
-Local phase (BTS load-balanced union-find, PAPERS.md): every partition of
-the deduplicated edge stream is contracted in numpy to a min-rooted star
-forest, one (node, partition-local component min) edge per node that is not
-its component's min. Memory is O(edges in one partition). The union over
-partitions has exactly the input's components.
+The self-loop-free, deduplicated edge stream is lazily checkpointed; under
+AQE defining that checkpoint runs the dedup exchange, so its coalesced
+partition count is known without a job. Then:
 
-Global phase (Kiveris et al., "Connected Components in MapReduce and
-Beyond", SoCC'14 — see PAPERS.md): when the stream has more than one
-partition, alternating large-star / small-star rounds run on the contracted
-stars until the edge set is a min-rooted star forest, O(log^2 n) rounds
-(O(log n) in practice). Each round is a lazy local checkpoint, which cuts
-the lineage (both star passes read their input twice, so the plan would
-grow ~4x per round) and which the round's convergence test materializes:
-one Spark job per round.
+- One partition (AQE coalesced a small stream): the edges are collected to
+  the driver and resolved there by a numpy union-find
+  (`_min_label_components`; cf. the local phase of BTS load-balanced
+  union-find, PAPERS.md). A driver pass rather than a Python task: at this
+  size a task's start-up costs more than the whole pass. Memory is
+  O(edges in that one partition) on the driver; the result is a local
+  relation, so callers broadcast-join it.
+- Otherwise: alternating large-star / small-star rounds (Kiveris et al.,
+  "Connected Components in MapReduce and Beyond", SoCC'14 — see PAPERS.md)
+  run until the edge set is a min-rooted star forest, O(log^2 n) rounds
+  (O(log n) in practice). Each round is a lazy local checkpoint, which cuts
+  the lineage (both star passes read their input twice, so the plan would
+  grow ~4x per round) and which the round's convergence test materializes:
+  one Spark job per round.
 
 Node ids are int64; the final assignment maps every node to the minimum
 doc_id of its component (the oracle's min-root convention).
@@ -55,26 +57,6 @@ def _min_label_components(
         if np.array_equal(hooked, lab):
             return nodes, nodes[lab]
         lab = hooked
-
-
-def _local_stars(edges: DataFrame) -> DataFrame:
-    """(u, v) -> (u, v = the min of u's component within u's partition) for
-    every node u that is not that min: one narrow Arrow stage."""
-
-    def contract(batches):
-        parts = [(b.column(0).to_numpy(), b.column(1).to_numpy()) for b in batches]
-        if not parts:
-            return
-        nodes, roots = _min_label_components(
-            np.concatenate([p[0] for p in parts]),
-            np.concatenate([p[1] for p in parts]),
-        )
-        keep = nodes != roots
-        yield pa.RecordBatch.from_arrays(
-            [pa.array(nodes[keep]), pa.array(roots[keep])], names=["u", "v"]
-        )
-
-    return edges.mapInArrow(contract, "u long, v long")
 
 
 def _symmetrize(edges: DataFrame) -> DataFrame:
@@ -156,38 +138,38 @@ def connected_components(
     every node that appears in an edge (isolated nodes are absent — callers
     coalesce).
 
-    The self-loop-free, deduplicated (u, v) stream is contracted per
-    partition by the local phase (module doc), in memory O(edges in one
-    partition). When that stream has at most one partition (AQE coalesces
-    it to one only below its advisory partition size) the local phase saw
-    every edge and its output is already the fixpoint, so no star round
-    runs. Otherwise the rounds run on the contracted stars until
-    `_is_min_rooted_star_forest` holds — the alternating algorithm's
-    fixpoints are exactly those forests (Kiveris et al. §3) — and a graph
-    that needs more than ``max_iterations`` rounds raises RuntimeError.
-
-    Defining the result runs the distinct's exchange. With one partition,
-    the local pass and the members ∪ roots tail run in the caller's first
-    action; otherwise the star rounds (one job each, the first one also
-    running the local pass) run while defining, and only the tail is left
-    to that action."""
-    cur = _local_stars(
+    Defining the result runs the dedup exchange. When that stream has at
+    most one partition (AQE coalesces it to one only for small edge sets),
+    one more job collects it and the driver resolves it (module doc); the
+    result is a local relation and holds no Spark work. Otherwise the star
+    rounds run here, one job each, until `_is_min_rooted_star_forest` holds
+    — the alternating algorithm's fixpoints are exactly those forests
+    (Kiveris et al. §3) — and a graph that needs more than
+    ``max_iterations`` rounds raises RuntimeError; the members ∪ roots tail
+    is left to the caller's first action."""
+    cur = (
         edges.select(F.col("a").alias("u"), F.col("b").alias("v"))
         .filter(F.col("u") != F.col("v"))
         .distinct()
-    ).localCheckpoint(eager=False)
-    # defining the lazy checkpoint already ran the exchange above it, so
-    # its (AQE-coalesced) partition count is known without a job
-    if cur._jdf.queryExecution().analyzed().rdd().getNumPartitions() > 1:
-        for _ in range(max_iterations):
-            # the test job materializes the checkpoint as a side effect
-            if _is_min_rooted_star_forest(cur):
-                break
-            cur = _small_star(_large_star(cur)).localCheckpoint(eager=False)
-        else:
-            raise RuntimeError(
-                f"connected_components: no fixpoint in {max_iterations} iterations"
-            )
+        .localCheckpoint(eager=False)
+    )
+    if cur.rdd.getNumPartitions() <= 1:
+        uv = cur.toArrow()
+        nodes, roots = _min_label_components(
+            uv.column("u").to_numpy(), uv.column("v").to_numpy()
+        )
+        return cur.sparkSession.createDataFrame(
+            pa.table({"doc_id": nodes, "cluster_id": roots})
+        )
+    for _ in range(max_iterations):
+        # the test job materializes the checkpoint as a side effect
+        if _is_min_rooted_star_forest(cur):
+            break
+        cur = _small_star(_large_star(cur)).localCheckpoint(eager=False)
+    else:
+        raise RuntimeError(
+            f"connected_components: no fixpoint in {max_iterations} iterations"
+        )
 
     # At the fixpoint every edge is (node, component-min). A node can also be
     # a root (appears only as v): roots map to themselves.
