@@ -180,3 +180,81 @@ def test_entry_docstring_count_matches_registry():
     m = re.search(r"ALL (\d+) entries", e.__doc__)
     assert m, "entry docstring must state the checked-entry count"
     assert int(m.group(1)) == len(e.queries()) == len(e.oracle_sql())
+
+
+# Library definitions that only tests may reach, with the reason each stays.
+_TEST_ONLY_ALLOWED = {
+    "true_pairs_bruteforce": "oracle.py: the brute-force reference tests compare against",
+    "iceberg_catalog_conf": "session.py: Iceberg deployment path; needs the Iceberg jar",
+    "iceberg_available": "session.py: Iceberg deployment path; needs the Iceberg jar",
+}
+
+
+def _docstring_nodes(tree) -> set[int]:
+    import ast
+
+    out = set()
+    for node in ast.walk(tree):
+        if isinstance(
+            node, (ast.Module, ast.ClassDef, ast.FunctionDef, ast.AsyncFunctionDef)
+        ):
+            first = node.body[0] if node.body else None
+            if (
+                isinstance(first, ast.Expr)
+                and isinstance(first.value, ast.Constant)
+                and isinstance(first.value.value, str)
+            ):
+                out.add(id(first.value))
+    return out
+
+
+def test_every_library_definition_has_a_non_test_caller():
+    """Every top-level def/class under webcrawler_spark/ is named (as a
+    Name, an Attribute, an import alias or an identifier string, not in a
+    docstring) somewhere in the library, tools/, perfbench/, bench.py or
+    __spark_entry__.py. Library code that only tests reach is deleted
+    instead; _TEST_ONLY_ALLOWED lists the exceptions."""
+    import ast
+    from pathlib import Path
+
+    root = Path(__file__).resolve().parent.parent
+    lib = sorted((root / "webcrawler_spark").rglob("*.py"))
+    callers = (
+        lib
+        + sorted((root / "tools").rglob("*.py"))
+        + sorted((root / "perfbench").rglob("*.py"))
+        + [root / "bench.py", root / "__spark_entry__.py"]
+    )
+    used: set[str] = set()
+    for path in callers:
+        tree = ast.parse(path.read_text())
+        docs = _docstring_nodes(tree)
+        for n in ast.walk(tree):
+            if isinstance(n, ast.Name):
+                used.add(n.id)
+            elif isinstance(n, ast.Attribute):
+                used.add(n.attr)
+            elif isinstance(n, ast.alias):
+                used.add(n.name.rsplit(".", 1)[-1])
+            elif (
+                isinstance(n, ast.Constant)
+                and isinstance(n.value, str)
+                and n.value.isidentifier()
+                and id(n) not in docs
+            ):
+                used.add(n.value)
+    defs = [
+        (path, node.name)
+        for path in lib
+        for node in ast.parse(path.read_text()).body
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef))
+    ]
+    assert set(_TEST_ONLY_ALLOWED) <= {name for _, name in defs}
+    orphans = sorted(
+        f"{path.relative_to(root)}:{name}"
+        for path, name in defs
+        if name not in used and name not in _TEST_ONLY_ALLOWED
+    )
+    assert not orphans, "library definitions with no non-test caller:\n" + "\n".join(
+        orphans
+    )

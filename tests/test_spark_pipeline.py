@@ -341,32 +341,6 @@ def test_tune_split_size_guard(spark):
         )
 
 
-def test_substring_equal_length_gated(spark):
-    """Identical texts are exact-kind edges, never substring edges; proper
-    substrings still verify; the pair verdicts are unchanged otherwise."""
-    from webcrawler_spark.operators.suffix import substring_containment
-
-    docs = spark.createDataFrame(
-        [
-            (1, "alpha beta gamma delta epsilon zeta"),
-            (2, "alpha beta gamma delta epsilon zeta"),   # exact dup of 1
-            (3, "beta gamma delta"),                      # substring of 1
-            (4, "totally different words here entirely"),
-        ],
-        "doc_id long, text string",
-    )
-    pairs = spark.createDataFrame(
-        [(1, 2), (1, 3), (1, 4)], "a long, b long"
-    )
-    got = {
-        (r["a"], r["b"]): r["is_substring"]
-        for r in substring_containment(pairs, docs).collect()
-    }
-    assert (1, 2) not in got          # equal-length pair gated out entirely
-    assert got[(1, 3)] is True
-    assert got[(1, 4)] is False
-
-
 def test_build_edges_persisted_out_unpersists(sigs, docs_df):
     """The cleanup hook must hand back exactly the internally persisted
     intermediates, and unpersisting them must not break the edge result."""

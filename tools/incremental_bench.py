@@ -22,7 +22,6 @@ Writes BENCH/incremental.json. Quiet-window protocol. Usage:
 from __future__ import annotations
 
 import argparse
-import dataclasses  # noqa: F401  (kept for parity with sibling tools)
 import json
 import os
 import shutil
@@ -52,15 +51,6 @@ def main() -> None:
     from pyspark.sql import functions as F
 
     from tools.scaling_bench import ensure_corpus
-    from webcrawler_spark.config import DEFAULT_CONFIG as CFG
-    from webcrawler_spark.operators.components import assign_clusters
-    from webcrawler_spark.operators.incremental import (
-        DedupState,
-        build_dedup_state,
-        incremental_dedup,
-    )
-    from webcrawler_spark.operators.lsh import build_edges
-    from webcrawler_spark.operators.signatures import compute_signatures
     from webcrawler_spark.session import get_spark
 
     input_path = ensure_corpus(args.docs, args.base)
@@ -94,6 +84,8 @@ def _run_bench(args, spark, docs, old_docs, new_docs, state_dir) -> None:
     from webcrawler_spark.operators.incremental import (
         DedupState,
         build_dedup_state,
+        incremental_assign,
+        incremental_edges,
     )
     from webcrawler_spark.operators.lsh import build_edges
     from webcrawler_spark.operators.signatures import compute_signatures
@@ -128,14 +120,8 @@ def _run_bench(args, spark, docs, old_docs, new_docs, state_dir) -> None:
     # AQE-vs-localCheckpoint partitioning bug at 1M ("Can't zip RDDs with
     # unequal numbers of partitions"); the edge write is timed as part of
     # the increment
-    from webcrawler_spark.operators.incremental import (
-        incremental_assign,
-        incremental_edges,
-    )
-    from webcrawler_spark.operators.signatures import compute_signatures as _sig
-
     t0 = time.time()
-    new_sigs = _sig(new_docs, CFG).persist()
+    new_sigs = compute_signatures(new_docs, CFG).persist()
     incremental_edges(disk_state, new_sigs, CFG, docs=docs).write.parquet(
         f"{state_dir}/inc_edges"
     )

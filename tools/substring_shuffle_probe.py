@@ -92,7 +92,7 @@ def main() -> None:
         unified_capped_buckets,
     )
     from webcrawler_spark.operators.signatures import compute_signatures
-    from webcrawler_spark.operators.suffix import substring_containment
+    from webcrawler_spark.operators.suffix import gated_substring_edges
     from webcrawler_spark.session import get_spark
 
     spark = get_spark("substring-shuffle-probe", master="local[8]",
@@ -119,15 +119,14 @@ def main() -> None:
         _kept_anchor_counts(capped),
         sigs,
         DEFAULT_CONFIG,
-        with_len=False,
+        with_len=True,
     ).persist()
     n_cand = cand.count()
     cand_delta = _shuffle_delta(spark, before)
 
     # the watched sub-DAG: length gate + per-pair text joins + Arrow verify
     before = _stages(spark)
-    verdicts = substring_containment(cand, docs, meta=sigs).persist()
-    edges = verdicts.filter("is_substring")
+    edges = gated_substring_edges(cand, docs).persist()
     n_edges = edges.count()
     verify_delta = _shuffle_delta(spark, before)
 

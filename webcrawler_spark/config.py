@@ -56,7 +56,7 @@ class DedupConfig:
     # so one globally-rare shared anchor suffices)
     anchor_max_bucket: int = 8
     containment_tau: float = 0.8  # fraction of the smaller doc's shingles in the larger
-    # exact-substring pass (SURVEY B8, the suffix-array stage): verify the
+    # exact-substring pass (SURVEY B8, suffix.gated_substring_edges): verify the
     # anchor tier-1 survivors for EXACT substring containment (smaller text
     # occurs verbatim inside the larger) and emit kind='substring' edges.
     # True substring pairs have shingle-containment ~1 >> tau, so the anchor

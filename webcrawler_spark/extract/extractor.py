@@ -63,10 +63,6 @@ class PageData:
     fetch_error: str = ""
 
 
-class ExtractionError(Exception):
-    pass
-
-
 def parse_rfc3339(value: str) -> datetime | None:
     """Go time.Parse(time.RFC3339): None on any deviation (extractor.go:232-252
     'ignore on error')."""

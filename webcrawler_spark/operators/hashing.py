@@ -156,11 +156,6 @@ def signed(a: np.ndarray) -> np.ndarray:
     return a.view(np.int64)
 
 
-def unsigned(a: np.ndarray) -> np.ndarray:
-    """int64 -> uint64 bit-cast when reading back from Spark."""
-    return a.view(np.uint64)
-
-
 def hamming64(a: int, b: int) -> int:
     return bin((a ^ b) & 0xFFFFFFFFFFFFFFFF).count("1")
 

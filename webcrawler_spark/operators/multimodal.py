@@ -1,23 +1,25 @@
-"""Multimodal columns: image/audio/video as opaque binary + typed metadata.
+"""Multimodal near-dup detection: image and audio assets as binary payloads.
 
-Spark-side plumbing is real (schema, Arrow batching, partition-friendly
-feature extraction); the actual codec work is isolated behind
-``_decode_payload``. ``mode="bytes"`` is the always-available byte-level
-view; ``mode="codec"`` runs REAL pure-numpy decoders for the trivial
-containers parseable without external libraries — binary PPM (P6) images,
-PCM WAV (8/16-bit) audio, and concatenated-P6 "video" streams — and raises
-``NotImplementedError`` for anything else (JPEG/MP3/MP4 need PIL/ffmpeg,
-not in this container). Swapping in richer codecs changes ONE function,
-not the pipeline; the codec branch itself is exercised under pytest on
-synthesized PPM/WAV fixtures (tests/test_operators_extra.py).
+One path, run by the ``multimodal_dup_pairs`` (image) and
+``multimodal_audio_dup_pairs`` (audio) queries: decode each payload with a
+pure-numpy codec, take its centered sample profile, generate candidates
+with hyperplane-LSH (``similarity.lsh_candidate_pairs``) and exact-rescore
+them with int64 dot products (``asset_dup_pairs``).
+
+The codecs cover the containers parseable without external libraries:
+binary PPM (P6) images and mono PCM WAV (8/16-bit) audio. Anything else,
+including a truncated or malformed payload, raises ``NotImplementedError``
+(JPEG/MP3 need PIL/soundfile, which are not dependencies). Richer codecs
+change ``_decode_payload`` only.
 
 Assets table schema:
-  asset_id:long, kind:string ('image'|'audio'|'video'), payload:binary,
+  asset_id:long, kind:string ('image'|'audio'), payload:binary,
   meta:map<string,string>
 """
 
 from __future__ import annotations
 
+import re
 from collections.abc import Iterator
 
 import numpy as np
@@ -36,20 +38,20 @@ ASSET_SCHEMA = T.StructType(
     ]
 )
 
-FEATURE_SCHEMA = T.StructType(
+PROFILE_SCHEMA = T.StructType(
     [
         T.StructField("asset_id", T.LongType()),
-        T.StructField("kind", T.StringType()),
-        T.StructField("n_bytes", T.LongType()),
-        T.StructField("byte_entropy", T.DoubleType()),
-        T.StructField("histogram", T.ArrayType(T.DoubleType())),  # 16 bins
-        T.StructField("content_hash", T.StringType()),
-        T.StructField("frames_sampled", T.IntegerType()),
+        T.StructField("profile", T.ArrayType(T.LongType())),
     ]
 )
 
-
-import re
+# asset_dup_pairs: cosine threshold (the oracle SQL states the same 0.9)
+# and the LSH tables x bits; at 0.9 a qualifying pair is missed by all 48
+# tables with p < ~3e-4 at the boundary and < 1e-9 for the planted-copy
+# regime (cosine >= ~0.97)
+DUP_THRESHOLD = 0.9
+LSH_TABLES = 48
+LSH_BITS = 12
 
 # comments ('#...' to end-of-line) may appear, repeatedly, at any header gap
 _PPM_GAP = rb"(?:#[^\n]*\s+)*"
@@ -58,10 +60,10 @@ _PPM_HEADER = re.compile(
 )
 
 
-def _decode_ppm(payload: bytes, offset: int = 0) -> tuple[np.ndarray, int]:
+def _decode_ppm(payload: bytes) -> np.ndarray:
     """Binary PPM (P6): header 'P6 <w> <h> <maxval>' + w*h*3 raster bytes.
-    Returns (flat uint8 pixels, end offset) so streams can be walked."""
-    m = _PPM_HEADER.match(payload, offset)
+    Returns the flat uint8 pixels."""
+    m = _PPM_HEADER.match(payload)
     if not m:
         raise ValueError("not a binary PPM (P6) payload")
     w, h, maxval = (int(g) for g in m.groups())
@@ -70,7 +72,7 @@ def _decode_ppm(payload: bytes, offset: int = 0) -> tuple[np.ndarray, int]:
     n = w * h * 3
     if len(payload) - m.end() < n:
         raise ValueError("truncated PPM raster")
-    return np.frombuffer(payload, np.uint8, count=n, offset=m.end()), m.end() + n
+    return np.frombuffer(payload, np.uint8, count=n, offset=m.end())
 
 
 def _decode_wav(payload: bytes) -> np.ndarray:
@@ -110,149 +112,48 @@ def _decode_wav(payload: bytes) -> np.ndarray:
     return ((samples + 32768) >> 8).astype(np.uint8)
 
 
-def _decode_ppm_stream(payload: bytes) -> np.ndarray:
-    """'Video' container: back-to-back P6 frames; decoded frames concatenate
-    into one sample array (frame boundaries re-emerge via _frame_sample)."""
-    frames, off = [], 0
-    while off < len(payload):
-        frame, off = _decode_ppm(payload, off)
-        frames.append(frame)
-    if not frames:
-        raise ValueError("empty PPM stream")
-    return np.concatenate(frames)
+def _decode_payload(kind: str, payload: bytes) -> np.ndarray:
+    """Codec boundary: the decoded samples of one payload as uint8 (P6
+    pixels or PCM-WAV samples). Raises NotImplementedError for any other
+    kind or container and for malformed payloads."""
+    try:
+        if kind == "image":
+            return _decode_ppm(payload)
+        if kind == "audio":
+            return _decode_wav(payload)
+    except ValueError as exc:
+        raise NotImplementedError(
+            f"only PPM/PCM-WAV payloads decode; this {kind} payload needs a "
+            f"real codec (PIL/soundfile): {exc}"
+        ) from exc
+    raise NotImplementedError(f"unknown asset kind {kind!r}")
 
 
-def _decode_payload(kind: str, payload: bytes, mode: str = "bytes") -> np.ndarray:
-    """Codec boundary. mode='bytes' => deterministic byte-level view (always
-    available); mode='codec' => real pure-numpy decode for PPM / PCM-WAV /
-    concatenated-PPM payloads, NotImplementedError beyond those."""
-    if mode == "codec":
-        try:
-            if kind == "image":
-                return _decode_ppm(payload)[0]
-            if kind == "audio":
-                return _decode_wav(payload)
-            if kind == "video":
-                return _decode_ppm_stream(payload)
-        except ValueError as exc:
-            raise NotImplementedError(
-                f"codec mode decodes PPM/PCM-WAV/PPM-stream only; this "
-                f"{kind} payload needs a real codec (PIL/soundfile/ffmpeg, "
-                f"not installed here): {exc}"
-            ) from exc
-        raise NotImplementedError(f"unknown asset kind {kind!r}")
-    return np.frombuffer(payload, dtype=np.uint8)
+def extract_features(assets: DataFrame) -> DataFrame:
+    """assets -> (asset_id, profile) via one Arrow pass.
 
-
-def _frame_sample(data: np.ndarray, kind: str, max_frames: int = 8) -> list[np.ndarray]:
-    """Deterministic frame/window sampling: equally spaced fixed-size slices
-    (the video-frame / audio-window analog at the byte level)."""
-    if len(data) == 0:
-        return []
-    n = min(max_frames, max(1, len(data) // 256))
-    starts = np.linspace(0, max(0, len(data) - 256), n).astype(np.int64)
-    return [data[s : s + 256] for s in starts]
-
-
-def extract_features(
-    assets: DataFrame, mode: str = "bytes", profile: bool = False
-) -> DataFrame:
-    """assets -> per-asset features via one Arrow pass (vectorized numpy).
-
-    ``profile=True`` adds a ``profile`` column: the decoded sample array as
-    a CENTERED integer vector (n*x_i - sum(x), exact int64 arithmetic — no
-    float rounding to desynchronize engines), the content feature the
-    near-dup path scores cosine over. Centering matters: raw byte vectors
-    are all-positive with a dominant mean component, so their cosines
-    crowd toward 1 regardless of content; the centered cosine is the
-    Pearson correlation, ~0 for unrelated content. Sized for fixed-dim
-    thumbnail-normalized assets (16x16 here); at 100 TB the profile column
-    exists only on the thumbnail stage table, never on raw payloads."""
-    import hashlib
-
-    names = ["asset_id", "kind", "n_bytes", "byte_entropy",
-             "histogram", "content_hash", "frames_sampled"]
-    schema = FEATURE_SCHEMA
-    if profile:
-        names.append("profile")
-        schema = T.StructType(
-            FEATURE_SCHEMA.fields
-            + [T.StructField("profile", T.ArrayType(T.LongType()))]
-        )
+    ``profile`` is the decoded sample array as a CENTERED integer vector
+    (n*x_i - sum(x), exact int64 arithmetic: no float rounding to
+    desynchronize engines), the content feature the near-dup path scores
+    cosine over. Centering matters: raw byte vectors are all-positive with
+    a dominant mean component, so their cosines crowd toward 1 regardless
+    of content; the centered cosine is the Pearson correlation, ~0 for
+    unrelated content. Sized for fixed-dim thumbnail-normalized assets
+    (16x16 here)."""
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            rows: dict[str, list] = {name: [] for name in names}
-            for aid, kind, payload in zip(
-                pdf["asset_id"], pdf["kind"], pdf["payload"]
-            ):
-                data = _decode_payload(kind, bytes(payload or b""), mode)
-                frames = _frame_sample(data, kind)
-                hist = np.zeros(16, dtype=np.float64)
-                if len(data):
-                    counts = np.bincount(data >> 4, minlength=16).astype(np.float64)
-                    hist = counts / counts.sum()
-                    p = hist[hist > 0]
-                    entropy = float(-(p * np.log2(p)).sum())
-                else:
-                    entropy = 0.0
-                rows["asset_id"].append(int(aid))
-                rows["kind"].append(kind)
-                rows["n_bytes"].append(len(data))
-                rows["byte_entropy"].append(round(entropy, 6))
-                rows["histogram"].append(hist.round(6).tolist())
-                rows["content_hash"].append(
-                    hashlib.sha256(bytes(payload or b"")).hexdigest()
-                )
-                rows["frames_sampled"].append(len(frames))
-                if profile:
-                    d64 = data.astype(np.int64)
-                    rows["profile"].append(
-                        (len(d64) * d64 - d64.sum()).tolist()
-                    )
-            yield pd.DataFrame(rows)
+            profiles = []
+            for kind, payload in zip(pdf["kind"], pdf["payload"]):
+                d64 = _decode_payload(kind, bytes(payload or b"")).astype(np.int64)
+                profiles.append((len(d64) * d64 - d64.sum()).tolist())
+            yield pd.DataFrame(
+                {"asset_id": pdf["asset_id"].astype("int64"), "profile": profiles}
+            )
 
     return assets.select("asset_id", "kind", "payload").mapInPandas(
-        gen, schema=schema
+        gen, schema=PROFILE_SCHEMA
     )
-
-
-def encode_ppm(w: int, h: int, seed: int = 0) -> bytes:
-    """Deterministic binary-PPM fixture (valid P6, formula raster)."""
-    raster = ((np.arange(w * h * 3, dtype=np.int64) * 31 + seed * 97) % 256)
-    return f"P6\n{w} {h}\n255\n".encode() + raster.astype(np.uint8).tobytes()
-
-
-def encode_wav(n_samples: int, seed: int = 0, rate: int = 8000) -> bytes:
-    """Deterministic PCM-16 mono WAV fixture (valid RIFF, formula samples)."""
-    s = ((np.arange(n_samples, dtype=np.int64) * (1234 + seed * 7)) % 65536
-         - 32768).astype("<i2")
-    data = s.tobytes()
-    fmt = (
-        (1).to_bytes(2, "little") + (1).to_bytes(2, "little")
-        + rate.to_bytes(4, "little") + (rate * 2).to_bytes(4, "little")
-        + (2).to_bytes(2, "little") + (16).to_bytes(2, "little")
-    )
-    chunks = b"WAVE" + b"fmt " + len(fmt).to_bytes(4, "little") + fmt \
-        + b"data" + len(data).to_bytes(4, "little") + data
-    return b"RIFF" + len(chunks).to_bytes(4, "little") + chunks
-
-
-def synth_codec_assets(spark, n: int) -> DataFrame:
-    """Deterministic decodable assets: PPM images, PCM WAVs, and 3-frame PPM
-    streams, round-robin by asset_id — the codec-mode counterpart of
-    synth_assets (which yields opaque text bytes)."""
-    rows = []
-    for i in range(n):
-        kind = ("image", "audio", "video")[i % 3]
-        if kind == "image":
-            payload = encode_ppm(8 + i % 5, 6 + i % 4, seed=i)
-        elif kind == "audio":
-            payload = encode_wav(256 + 32 * (i % 7), seed=i)
-        else:
-            payload = b"".join(encode_ppm(6, 4, seed=i * 10 + f) for f in range(3))
-        rows.append((i, kind, payload, {"seed": str(i)}))
-    return spark.createDataFrame(rows, ASSET_SCHEMA)
 
 
 # ---- planted image near-dup corpus + detection -------------------------
@@ -351,43 +252,29 @@ def synth_audio_corpus(spark, ids: DataFrame) -> DataFrame:
     return _synth_planted_assets(spark, ids, "audio")
 
 
-def asset_dup_pairs(
-    assets: DataFrame,
-    kind: str,
-    threshold: float = 0.9,
-    n_tables: int = 48,
-    n_bits: int = 12,
-    seed: int = 42,
-    max_bucket: int = 5000,
-) -> DataFrame:
-    """Content near-dup pairs (asset_id_a < asset_id_b, cosine) over the
-    REAL codec branch of one modality: decode payloads (P6 rasters / PCM
-    samples / PPM streams), take centered sample profiles, generate
-    candidates with hyperplane-LSH (similarity.py — modality-agnostic; the
-    only shuffle is by (table, sig) bucket key, no crossJoin), and
+def asset_dup_pairs(assets: DataFrame, kind: str) -> DataFrame:
+    """Content near-dup pairs (asset_id_a < asset_id_b, cosine) of one
+    modality: decode payloads (P6 rasters / PCM samples), take centered
+    profiles, generate candidates with hyperplane-LSH (LSH_TABLES x
+    LSH_BITS; the only shuffle is by bucket key, no crossJoin) and
     exact-rescore with int64 dot products so both engines agree
-    bit-for-bit. At the default threshold 0.9 a qualifying pair is missed
-    by all 48 tables with p < ~3e-4 worst-case at the boundary and < 1e-9
-    for the planted-copy regime (cosine >= ~0.97); rescoring makes
-    precision exactly 1. The LSH path requires fixed-dim profiles
+    bit-for-bit; pairs at cosine >= DUP_THRESHOLD are returned. Rescoring
+    makes precision exactly 1. The LSH path requires fixed-dim profiles
     (thumbnail/window-normalized assets)."""
     from webcrawler_spark.operators.similarity import lsh_candidate_pairs
 
-    feats = (
-        extract_features(assets.filter(F.col("kind") == kind),
-                         mode="codec", profile=True)
-        .select("asset_id", "profile")
-        .persist()
-    )
+    feats = extract_features(assets.filter(F.col("kind") == kind)).persist()
     cand = lsh_candidate_pairs(
-        feats.withColumn("pd", F.col("profile").cast("array<double>")),
-        n_tables=n_tables, n_bits=n_bits, seed=seed,
-        id_col="asset_id", vec_col="pd", max_bucket=max_bucket,
+        feats.select(
+            F.col("asset_id").alias("vec_id"),
+            F.col("profile").cast("array<double>").alias("embedding"),
+        ),
+        n_tables=LSH_TABLES,
+        n_bits=LSH_BITS,
     )
-    # round 6: squared norms once per asset (not per candidate row — the
-    # threshold filter is pushed into the join condition, so the cosine
-    # expression evaluates twice per row; precomputed norms cut each
-    # evaluation to one dot product). Identical int64 arithmetic.
+    # squared norms once per asset, not per candidate row: the threshold
+    # filter is pushed into the join condition, so the cosine expression
+    # evaluates twice per row. Identical int64 arithmetic.
     withn = feats.withColumn(
         "_nrm",
         F.aggregate(
@@ -413,34 +300,10 @@ def asset_dup_pairs(
         .join(b, "vec_id_b")
         .filter((F.col("na") > 0) & (F.col("nb") > 0))
         .withColumn("cosine", F.round(dot / (F.sqrt("na") * F.sqrt("nb")), 6))
-        .filter(F.col("cosine") >= threshold)
+        .filter(F.col("cosine") >= DUP_THRESHOLD)
         .select(
             F.col("vec_id_a").alias("asset_id_a"),
             F.col("vec_id_b").alias("asset_id_b"),
             "cosine",
         )
-    )
-
-
-def image_dup_pairs(assets: DataFrame, threshold: float = 0.9, **kw) -> DataFrame:
-    """Image instantiation of asset_dup_pairs (P6 decode path)."""
-    return asset_dup_pairs(assets, "image", threshold, **kw)
-
-
-def audio_dup_pairs(assets: DataFrame, threshold: float = 0.9, **kw) -> DataFrame:
-    """Audio instantiation of asset_dup_pairs (PCM-WAV decode path)."""
-    return asset_dup_pairs(assets, "audio", threshold, **kw)
-
-
-def synth_assets(spark, docs: DataFrame) -> DataFrame:
-    """Deterministic fake assets derived from document text bytes (test/demo
-    fixture: payload = utf-8 bytes, kind round-robins image/audio/video)."""
-    return docs.select(
-        F.col("doc_id").alias("asset_id"),
-        F.element_at(
-            F.array(F.lit("image"), F.lit("audio"), F.lit("video")),
-            (F.col("doc_id") % 3 + 1).cast("int"),
-        ).alias("kind"),
-        F.encode("text", "UTF-8").alias("payload"),
-        F.create_map(F.lit("source"), F.col("source")).alias("meta"),
     )

@@ -31,10 +31,6 @@ from webcrawler_spark.functions.textnorm import tokenize
 from webcrawler_spark.operators import hashing as H
 
 
-def _pair(a: int, b: int) -> tuple[int, int]:
-    return (a, b) if a < b else (b, a)
-
-
 def _capped_pairs(ids: list[int], cap: int) -> set[tuple[int, int]]:
     """Bucket -> candidate pairs, with the deterministic oversize cap the
     engine applies (first `cap` ids in sorted order)."""
@@ -198,7 +194,7 @@ def run_oracle(
     # smaller-text-in-larger-text containment (mirrors build_edges' reuse of
     # the anchor candidate stream). Equal-length pairs are gated out before
     # any text is compared — a PROPER substring needs differing lengths, and
-    # identical texts are already exact edges (suffix.substring_containment).
+    # identical texts are already exact edges (suffix.substring_length_gate).
     if cfg.substring_pass:
         texts = dict(docs)
         for a, b in sorted(res.anchor_candidates):

@@ -1,19 +1,13 @@
-"""Similarity search over embedding columns (training-data pipeline ops).
+"""Hyperplane-LSH candidate pairs over fixed-dim vectors.
 
-Two paths:
-
-- ``brute_force_topk``: exact cosine top-k via crossJoin + JVM-side
-  higher-order functions (zip_with/aggregate — whole-stage codegen, no
-  Python). Correctness baseline; O(n*q) — fine for moderate q.
-- ``lsh_topk``: random-hyperplane LSH (sign sketch) scale path. Vectors are
-  bucketed by b-bit hyperplane signatures over several independent tables;
-  only same-bucket pairs are scored. Planes are seeded => deterministic.
-  Recall is tunable via (n_tables, n_bits); candidates are exact-rescored,
-  so precision is 1 by construction.
-
-At 10^12 scale the bucketed join shuffles by signature key (no crossJoin
-anywhere); brute force stays available for small query sets by broadcasting
-the queries.
+``lsh_candidate_pairs`` buckets ``(vec_id, embedding)`` rows by b-bit
+random-hyperplane (sign-sketch) signatures over ``n_tables`` independent
+tables and returns the distinct same-bucket pairs. The only shuffle is by
+the (table, sig) bucket key, never a crossJoin. Planes come from a fixed
+seed, so candidates are deterministic. Callers exact-rescore the
+candidates, so precision is 1 by construction and ``(n_tables, n_bits)``
+set the recall: ``q_embedding_dup_pairs`` runs 96 x 20 and the multimodal
+queries (``multimodal.asset_dup_pairs``) run 48 x 12.
 """
 
 from __future__ import annotations
@@ -23,77 +17,22 @@ from collections.abc import Iterator
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-
-def _cosine_col(qa: str, qb: str):
-    """Exact cosine over two double-array columns, JVM-side."""
-    dot = F.aggregate(
-        F.zip_with(qa, qb, lambda a, b: a * b),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    na = F.sqrt(F.aggregate(qa, F.lit(0.0), lambda acc, x: acc + x * x))
-    nb = F.sqrt(F.aggregate(qb, F.lit(0.0), lambda acc, x: acc + x * x))
-    return dot / (na * nb)
-
-
-def _as_double(df: DataFrame, vec_col: str) -> DataFrame:
-    return df.withColumn(vec_col, F.col(vec_col).cast("array<double>"))
-
-
-def brute_force_topk(
-    embeddings: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Exact top-k: (query_id, nbr_id, cosine, rank). ``queries`` is
-    broadcast (small query sets)."""
-    # round 6: norms once per vector (not per pair row) — same double math
-    nrm = F.sqrt(F.aggregate(vec_col, F.lit(0.0), lambda acc, x: acc + x * x))
-    e = _as_double(embeddings, vec_col).select(
-        F.col(id_col).alias("nbr_id"), F.col(vec_col).alias("vb"), nrm.alias("nb")
-    )
-    q = _as_double(queries, vec_col).select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("va"), nrm.alias("na")
-    )
-    scored = (
-        e.crossJoin(F.broadcast(q))
-        .filter(F.col("query_id") != F.col("nbr_id"))
-        .withColumn(
-            "cosine",
-            F.aggregate(
-                F.zip_with("va", "vb", lambda a, b: a * b),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
-            / (F.col("na") * F.col("nb")),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("nbr_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "nbr_id", "cosine", "rank")
-    )
+PLANE_SEED = 42
+# buckets larger than this are dropped before any pair is exploded
+MAX_BUCKET = 5000
 
 
 def hyperplane_signatures(
-    df: DataFrame,
-    dim: int,
-    n_tables: int = 8,
-    n_bits: int = 12,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
+    df: DataFrame, dim: int, n_tables: int, n_bits: int
 ) -> DataFrame:
-    """(id, table, sig): sign-bit signature per hash table. Vectorized numpy
-    over Arrow batches — one matmul per batch."""
-    rng = np.random.default_rng(seed)
+    """(vec_id, embedding) -> (vec_id, table, sig): the sign-bit signature
+    per hash table. Vectorized numpy over Arrow batches, one matmul per
+    table and batch."""
+    rng = np.random.default_rng(PLANE_SEED)
     planes = rng.standard_normal((n_tables, n_bits, dim)).astype(np.float64)
     weights = (1 << np.arange(n_bits, dtype=np.int64))
 
@@ -109,9 +48,7 @@ def hyperplane_signatures(
         for pdf in batches:
             if not len(pdf):
                 continue
-            # the input is pre-aliased to (vec_id, <vec_col>) below — always
-            # read "vec_id", not the caller's id_col name
-            mat = np.stack(pdf[vec_col].map(np.asarray).to_list()).astype(np.float64)
+            mat = np.stack(pdf["embedding"].map(np.asarray).to_list()).astype(np.float64)
             ids = pdf["vec_id"].to_numpy()
             out_ids, out_tbl, out_sig = [], [], []
             for t in range(n_tables):
@@ -128,63 +65,42 @@ def hyperplane_signatures(
                 }
             )
 
-    return df.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias(vec_col)).mapInPandas(
-        gen, schema=schema
-    )
+    return df.select("vec_id", "embedding").mapInPandas(gen, schema=schema)
 
 
 def lsh_candidate_pairs(
-    embeddings: DataFrame,
-    n_tables: int = 48,
-    n_bits: int = 12,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    max_bucket: int = 5000,
+    embeddings: DataFrame, n_tables: int, n_bits: int
 ) -> DataFrame:
-    """Distinct candidate pairs (vec_id_a < vec_id_b) from hyperplane-LSH
-    buckets — the scale path for all-pairs similarity thresholds: the only
-    shuffle is by (table, sig) bucket key, never a crossJoin.
+    """(vec_id, embedding) rows -> distinct candidate pairs
+    (vec_id_a < vec_id_b) that share a hyperplane-LSH bucket in at least
+    one table.
 
-    Parameterized for HIGH thresholds (near-dup detection): at cosine 0.95
-    the per-bit collision odds are 1 - acos(.95)/pi ~ 0.899, so a qualifying
-    pair shares a 12-bit bucket with p ~ 0.28 per table and is missed by all
-    48 tables with p ~ 1.7e-7 — recall is 1 up to that residual, and callers
-    exact-rescore so precision is exactly 1."""
-    dim = int(embeddings.select(F.size(vec_col).alias("d")).first()["d"])
-    # persisted: the size aggregation and the bucket groupBy both consume
-    # the Python signature stage (~16 bytes/row x tables rows/vector —
-    # small); without it the mapInPandas stage runs twice per build
-    sigs = hyperplane_signatures(
-        embeddings, dim, n_tables, n_bits, seed, id_col, vec_col
-    ).persist()
-    # round 6 (guide §2.4): grouped pair explosion instead of a self-join —
-    # the join's two inputs each re-ran the Python signature stage and the
-    # bucket-size window (2 MapInPandas, 2 exchanges); now ONE signature
-    # pass feeds one (table, sig) exchange. The bucket-size filter is a
-    # partially-aggregated COUNT joined back onto the sig stream instead of
-    # a count-over-window: no sort of the full sig stream (hash aggregate,
-    # not window), the qualifying-key set is bounded by tables x 2^bits
-    # regardless of corpus size, and oversize buckets are dropped BEFORE
-    # any collect_list buffers them. Pair explosion streams slice() arrays
-    # per row (O(bucket) memory, never the O(bucket^2) flattened pair
-    # array — max_bucket here is 5000, so the lsh.py flatten-transform
-    # pattern would materialize up to 12.5M structs per hot bucket). Same
-    # distinct a < b pairs.
+    Sized for HIGH thresholds (near-dup detection). At cosine 0.95 the
+    per-bit collision odds are 1 - acos(.95)/pi ~ 0.899, so at 48 x 12 a
+    qualifying pair shares a bucket with p ~ 0.28 per table and is missed
+    by all tables with p ~ 1.7e-7. Buckets with more than ``MAX_BUCKET``
+    members are dropped."""
+    dim = int(embeddings.select(F.size("embedding").alias("d")).first()["d"])
+    # persisted: the bucket-size count and the pair grouping both read the
+    # Python signature stage; without it the stage runs twice per build
+    sigs = hyperplane_signatures(embeddings, dim, n_tables, n_bits).persist()
+    # bucket sizes by a partially aggregated count, not a window: no sort
+    # of the sig stream, and oversize buckets go before collect_list
+    # buffers them. The qualifying-key set is bounded by tables x 2^bits,
+    # so it is broadcast and the sig stream pays one exchange.
     ok = (
         sigs.groupBy("table", "sig")
         .agg(F.count("*").alias("_sz"))
-        .filter((F.col("_sz") >= 2) & (F.col("_sz") <= max_bucket))
+        .filter((F.col("_sz") >= 2) & (F.col("_sz") <= MAX_BUCKET))
         .select("table", "sig")
     )
-    # broadcast the qualifying-key set (bounded by tables x 2^bits at ANY
-    # corpus size) so the sig stream pays exactly ONE exchange — the
-    # groupBy's — with hash aggregation and no sort anywhere
     grouped = (
         sigs.join(F.broadcast(ok), ["table", "sig"])
         .groupBy("table", "sig")
         .agg(F.sort_array(F.collect_list("vec_id")).alias("ids"))
     )
+    # slice() per row streams O(bucket) memory per bucket, never the
+    # O(bucket^2) flattened pair array
     return (
         grouped.select(F.posexplode("ids").alias("i", "vec_id_a"), F.col("ids"))
         .select(
@@ -192,80 +108,4 @@ def lsh_candidate_pairs(
             F.explode(F.expr("slice(ids, i + 2, size(ids))")).alias("vec_id_b"),
         )
         .distinct()
-    )
-
-
-def lsh_topk(
-    embeddings: DataFrame,
-    k: int = 10,
-    n_tables: int = 8,
-    n_bits: int = 12,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    max_bucket: int = 2000,
-) -> DataFrame:
-    """Approximate all-pairs top-k: bucket by hyperplane signature, score
-    only same-bucket pairs, exact-rescore, take top-k per vector."""
-    dim = int(embeddings.select(F.size(vec_col).alias("d")).first()["d"])
-    # round 6: one (persisted) signature pass + grouped ordered-pair
-    # explosion, bucket-size filter via partial-aggregated count instead of
-    # a count-over-window (no sort of the sig stream; oversize buckets are
-    # dropped before collect_list — same rationale as lsh_candidate_pairs);
-    # rescore joins carry a precomputed norm so the per-candidate work is
-    # one dot product, not three array aggregates (identical double math).
-    sigs = hyperplane_signatures(
-        embeddings, dim, n_tables, n_bits, seed, id_col, vec_col
-    ).persist()
-    ok = (
-        sigs.groupBy("table", "sig")
-        .agg(F.count("*").alias("_sz"))
-        .filter((F.col("_sz") >= 2) & (F.col("_sz") <= max_bucket))
-        .select("table", "sig")
-    )
-    grouped = (
-        sigs.join(F.broadcast(ok), ["table", "sig"])
-        .groupBy("table", "sig")
-        .agg(F.collect_list("vec_id").alias("ids"))
-    )
-    cand = (
-        grouped.select(F.explode("ids").alias("query_id"), F.col("ids"))
-        .select("query_id", F.explode("ids").alias("nbr_id"))
-        .filter(F.col("query_id") != F.col("nbr_id"))
-        .distinct()
-    )
-    e = _as_double(embeddings, vec_col).withColumn(
-        "_nrm",
-        F.sqrt(
-            F.aggregate(vec_col, F.lit(0.0), lambda acc, x: acc + x * x)
-        ),
-    )
-    va = e.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("va"),
-        F.col("_nrm").alias("na"),
-    )
-    vb = e.select(
-        F.col(id_col).alias("nbr_id"),
-        F.col(vec_col).alias("vb"),
-        F.col("_nrm").alias("nb"),
-    )
-    scored = (
-        cand.join(va, "query_id")
-        .join(vb, "nbr_id")
-        .withColumn(
-            "cosine",
-            F.aggregate(
-                F.zip_with("va", "vb", lambda a, b: a * b),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
-            / (F.col("na") * F.col("nb")),
-        )
-    )
-    rw = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("nbr_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(rw))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "nbr_id", "cosine", "rank")
     )

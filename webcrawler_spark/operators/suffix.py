@@ -1,18 +1,14 @@
-"""Exact substring containment (SURVEY.md B8, the suffix-array pass).
+"""Exact substring edges (SURVEY.md B8): doc A is a contiguous substring
+of doc B.
 
 Shingle-set containment (lsh.py) catches token-level containment; this
-operator verifies EXACT substring relations (doc A is a contiguous substring
-of doc B) for candidate pairs, and provides a per-partition generalized
-suffix-array discovery utility for within-partition mining.
-
-Scale design: candidates come from the anchor stage (shared rare shingles),
-verification co-locates only the LENGTH-GATED candidate pairs' texts (the
-gate runs on signature-stage n_chars metadata — scalar joins, no text
-re-scan — and prunes equal-length pairs: identical texts are exact edges,
-unequal texts of one length cannot contain each other), and the per-pair
-check is O(|B|) Two-Way search inside an Arrow batch. A global
-suffix array over 10^12 docs is infeasible; the per-partition variant after
-repartitioning on an anchor prefix is the bounded alternative.
+operator emits the EXACT substring relation. Candidates are the anchor
+generator's tier-1 survivors (shared rare shingles, ``lsh._tier1_survivors``
+with their char lengths). A length gate on those lengths runs first, with
+no text re-scan: equal-length pairs are exact edges or nothing, and an
+empty side never contains or is contained. Only the surviving pairs' texts
+are joined, and each pair is checked with one ``small in big`` search
+(C-level Two-Way, O(|B|)) inside an Arrow batch.
 
 Documented miss classes of the anchor-sampled candidate stream (what the
 sampling can structurally NOT see — stated here and mirrored in the SQL
@@ -38,7 +34,6 @@ from __future__ import annotations
 
 from collections.abc import Iterator
 
-import numpy as np
 import pandas as pd
 
 from pyspark.sql import Column, DataFrame
@@ -46,61 +41,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 _PAIR_SCHEMA = T.StructType(
-    [
-        T.StructField("a", T.LongType()),
-        T.StructField("b", T.LongType()),
-        T.StructField("is_substring", T.BooleanType()),
-        T.StructField("container", T.LongType()),  # the larger doc, when true
-    ]
+    [T.StructField("a", T.LongType()), T.StructField("b", T.LongType())]
 )
-
-
-def substring_containment(
-    pairs: DataFrame, docs: DataFrame, meta: DataFrame | None = None
-) -> DataFrame:
-    """pairs(a, b) + docs(doc_id, text) -> exact substring verdicts.
-
-    The smaller text is searched inside the larger (str in str — C-level
-    Two-Way algorithm). Scale shape:
-
-    - **Length gate first** (scalar join, no text moves): a pair can only be
-      a PROPER substring when the char lengths differ — equal lengths imply
-      either identical texts (already an exact edge from the sha256
-      pre-pass; re-verifying them here would be redundant work on corpora
-      with heavy exact duplication) or no containment at all. Pairs with an
-      empty side are dropped too (empty never contains/is-contained).
-      ``meta`` (doc_id, n_chars) supplies the lengths from signature-stage
-      metadata so no document text is re-scanned for the gate; without it
-      the lengths are computed from ``docs``.
-    - Text joins run only over the GATED pair set. Pair counts here are
-      bounded by the tier-1 containment estimate (≈ true-positive scale),
-      so text bytes crossing the join are O(surviving pairs), not
-      O(candidates) — a deliberate latency/scan trade over a needed-texts
-      semi-join, which was measured to cost more in stage latency than it
-      saves in bytes at every scale probed. Hub evidence
-      (tools/substring_shuffle_probe.py -> BENCH/substring_shuffle.json):
-      a 64 KiB container in ~300 pairs shuffles ~6 MB compressed across
-      the whole verify sub-DAG (~21 KB/pair), bounded structurally by the
-      64 KiB/doc textnorm cap x true-positive pairs; the inverse hub (one
-      doc contained in many) never reaches the text join — its anchor
-      buckets all exceed anchor_max_bucket (documented miss class below).
-
-    NOTE: identical-text pairs return no row (they are exact-kind edges,
-    not substring edges).
-    """
-    if meta is not None and "n_chars" in meta.columns:
-        lens = meta.select("doc_id", F.col("n_chars").alias("_len"))
-    else:
-        lens = docs.select("doc_id", F.length("text").alias("_len"))
-    la = lens.select(F.col("doc_id").alias("a"), F.col("_len").alias("len_a"))
-    lb = lens.select(F.col("doc_id").alias("b"), F.col("_len").alias("len_b"))
-    gated = (
-        pairs.join(la, "a")
-        .join(lb, "b")
-        .filter(substring_length_gate())
-        .select("a", "b")
-    )
-    return verify_substring_pairs(gated, docs)
 
 
 def substring_length_gate() -> Column:
@@ -111,10 +53,17 @@ def substring_length_gate() -> Column:
     return (F.col("len_a") != F.col("len_b")) & (F.least("len_a", "len_b") > 0)
 
 
-def verify_substring_pairs(gated: DataFrame, docs: DataFrame) -> DataFrame:
-    """The text-verify core: caller guarantees the pairs are already
-    length-gated (differing, non-zero lengths). ``gated_substring_edges``
-    gates the tier-1 survivors with the lengths their join carries."""
+def gated_substring_edges(tier1: DataFrame, docs: DataFrame) -> DataFrame:
+    """Tier-1 survivors (a, b, len_a, len_b) + docs (doc_id, text) ->
+    exact-substring edges (a, b, kind='substring'): the length gate, then
+    the text verify. The substring step of lsh.build_edges and of
+    ``substring_edges``.
+
+    Texts are joined per surviving pair, so a doc in k pairs ships its
+    text k times. k is bounded by the tier-1 estimate (~ true-positive
+    pairs) and each text by the 64 KiB/doc textnorm cap
+    (BENCH/substring_shuffle.json measures the worst hub)."""
+    gated = tier1.filter(substring_length_gate()).select("a", "b")
     ta = docs.select(F.col("doc_id").alias("a"), F.col("text").alias("text_a"))
     tb = docs.select(F.col("doc_id").alias("b"), F.col("text").alias("text_b"))
     # rebalance before the Python stage: the (tiny) pair set is broadcast
@@ -128,32 +77,18 @@ def verify_substring_pairs(gated: DataFrame, docs: DataFrame) -> DataFrame:
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            out = {"a": [], "b": [], "is_substring": [], "container": []}
+            hits = {"a": [], "b": []}
             for a, b, x, y in zip(pdf["a"], pdf["b"], pdf["text_a"], pdf["text_b"]):
                 x = x or ""
                 y = y or ""
                 small, big = (x, y) if len(x) <= len(y) else (y, x)
-                hit = bool(small) and small in big
-                out["a"].append(int(a))
-                out["b"].append(int(b))
-                out["is_substring"].append(hit)
-                out["container"].append(
-                    int(b if len(x) <= len(y) else a) if hit else None
-                )
-            yield pd.DataFrame(out)
+                if small and small in big:
+                    hits["a"].append(int(a))
+                    hits["b"].append(int(b))
+            yield pd.DataFrame(hits, dtype="int64")
 
-    return joined.mapInPandas(gen, schema=_PAIR_SCHEMA)
-
-
-def gated_substring_edges(tier1: DataFrame, docs: DataFrame) -> DataFrame:
-    """Tier-1 survivors (a, b, len_a, len_b) -> exact-substring edges
-    (a, b, kind='substring'): the length gate, then the text verify. The
-    substring step of lsh.build_edges and of ``substring_edges``."""
-    gated = tier1.filter(substring_length_gate()).select("a", "b")
-    return (
-        verify_substring_pairs(gated, docs)
-        .filter(F.col("is_substring"))
-        .select("a", "b", F.lit("substring").alias("kind"))
+    return joined.mapInPandas(gen, schema=_PAIR_SCHEMA).select(
+        "a", "b", F.lit("substring").alias("kind")
     )
 
 
@@ -195,77 +130,3 @@ def substring_edges(
         with_len=True,
     )
     return gated_substring_edges(tier1, docs)
-
-
-# ---------------------------------------------------------------------------
-# per-partition generalized suffix array (discovery within a partition)
-# ---------------------------------------------------------------------------
-
-def build_suffix_array(tok_h: np.ndarray, prefix: int = 8) -> np.ndarray:
-    """Suffix ordering of a uint64 token-hash sequence by fixed-width prefix
-    keys (numpy lexsort of the first `prefix` columns, padded). Sufficient
-    for k-prefix grouping; full comparisons happen only within prefix ties."""
-    n = len(tok_h)
-    if n == 0:
-        return np.empty(0, dtype=np.int64)
-    cols = []
-    for j in range(prefix):
-        col = np.full(n, 0, dtype=np.uint64)
-        col[: n - j] = tok_h[j:]
-        cols.append(col)
-    return np.lexsort(cols[::-1]).astype(np.int64)
-
-
-def partition_containment_pairs(
-    doc_ids: list[int],
-    token_seqs: list[np.ndarray],
-    min_len: int = 16,
-) -> list[tuple[int, int]]:
-    """Within one partition: find docs whose full token sequence occurs
-    verbatim inside another doc. Returns (contained_id, container_id) pairs.
-
-    Implementation: concatenate all token-hash sequences (uint64) with
-    unique separators into one byte string and use C-level substring search
-    per doc, accepting only 8-byte-aligned hits (token boundaries) outside
-    the doc's own span. Equivalent to generalized-suffix-array lookup with
-    O(total) memory and C-speed scans.
-    """
-    if not doc_ids:
-        return []
-    chunks: list[bytes] = []
-    spans: list[tuple[int, int]] = []  # byte span per doc
-    off = 0
-    for i, seq in enumerate(token_seqs):
-        b = np.ascontiguousarray(seq, dtype=np.uint64).tobytes()
-        chunks.append(b)
-        spans.append((off, off + len(b)))
-        off += len(b)
-        sep = np.array([0xFFFF_FFFF_0000_0000 + i], dtype=np.uint64).tobytes()
-        chunks.append(sep)
-        off += len(sep)
-    corpus = b"".join(chunks)
-    # owner lookup in O(log n): spans are laid out in ascending start order,
-    # so the doc containing byte `pos` is the last start <= pos
-    starts = np.fromiter((s for s, _ in spans), dtype=np.int64, count=len(spans))
-    ends = np.fromiter((e for _, e in spans), dtype=np.int64, count=len(spans))
-
-    out: list[tuple[int, int]] = []
-    for i, (did, seq) in enumerate(zip(doc_ids, token_seqs)):
-        if len(seq) < min_len:
-            continue
-        pat = np.ascontiguousarray(seq, dtype=np.uint64).tobytes()
-        start = 0
-        while True:
-            pos = corpus.find(pat, start)
-            if pos < 0:
-                break
-            start = pos + 8
-            if pos % 8 != 0:
-                continue
-            if spans[i][0] <= pos < spans[i][1]:
-                continue  # own occurrence
-            j = int(np.searchsorted(starts, pos, side="right")) - 1
-            if j >= 0 and pos < ends[j] and doc_ids[j] != did:
-                out.append((did, doc_ids[j]))
-                break
-    return sorted(set(out))

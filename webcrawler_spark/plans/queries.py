@@ -827,17 +827,10 @@ def q_embedding_topk(spark, sf_dir):
     """similarity search: brute-force cosine top-5 neighbors for the first 10
     vectors (quantized int64 dot products => bit-identical across engines).
 
-    Optimization round 6 (guide §1.2 per-task work + §2.6 idle capacity):
-    (a) squared norms are computed ONCE per vector before the join — the old
-    plan re-evaluated both array aggregates on every one of the q*n joined
-    rows (3x the lambda work); (b) the corpus side is the STREAM side of the
-    broadcast nested-loop join, at session parallelism (the cached quantized
-    table's layout) — before, the 10-row query side streamed through a
-    single scan partition, so the whole O(q*n*dim) scoring ran in ONE task
-    while 31 cores idled; (c) both sides read the shared cached quantized
-    table (_quantized_embeddings — the BigDecimal round pass runs once per
-    corpus, not once per side per run). Identical arithmetic (same int64
-    sums, same round), identical rows."""
+    Squared norms are computed once per vector before the join. The corpus
+    is the stream side of the broadcast nested-loop join, at session
+    parallelism, and both sides read the cached quantized table
+    (``_quantized_embeddings``)."""
     e = _quantized_embeddings(spark, sf_dir)
     q = e.filter(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("query_id"),
@@ -904,28 +897,14 @@ def q_embedding_dup_pairs(spark, sf_dir):
     0.95 threshold is 1 - ~5.4e-6 per boundary pair (96 tables x 20 bits:
     per-bit match p = 1 - acos(.95)/pi ~ 0.899, per-table bucket hit
     p^20 ~ 0.119, miss all 96 tables (1-0.119)^96 ~ 5.4e-6; pairs at
-    >= 0.97 miss with < 1e-9); rescoring makes precision exactly 1.
-
-    Round 6 (guide §1.2 step 1 — fix the algorithm before the plumbing):
-    12-bit signatures put 20k random 64-dim vectors into ~4k buckets/table,
-    yielding a 3.4M-pair candidate set at sf1.0 (~17% of ALL pairs) whose
-    exact rescore dominated the query. Longer signatures trade a linear
-    amount of (cheap, vectorized-matmul) signature work for a geometric cut
-    in random-pair collisions: 16 bits / 48 tables took the candidate set to
-    ~0.3M; 20 bits / 96 tables (final) to ~55k at the 10x scale — measured
-    full-query 3.48 -> 1.78 s — while the qualifying-pair miss odds IMPROVE
-    12x (derivation above, vs 6.6e-5 at 48x16) because doubled tables
-    out-multiply the per-table hit-rate loss. Brute-force ground truth: the
-    corpus has ZERO pairs >= 0.95 at every probed sf (the data's cosine
-    ceiling is ~0.5), so results are identical at any of these settings;
-    the planted >= 0.95 regime is covered by
-    test_embedding_dup_pair_settings_cover_planted_pairs."""
+    >= 0.97 miss with < 1e-9); rescoring makes precision exactly 1. The
+    planted >= 0.95 regime is covered by
+    test_lsh_candidate_pairs_cover_planted_pairs."""
     from webcrawler_spark.operators.similarity import lsh_candidate_pairs
 
-    # round 6: single-row-group input — repartition so the hyperplane
-    # signature stage (Python matmuls) runs at session width, not on the
-    # 1-2 tasks the unsplittable scan yields (the rescore sides below stay
-    # on the raw scan: they are broadcast builds, no parallelism needed)
+    # single-row-group input: repartition so the hyperplane signature
+    # stage (Python matmuls) runs at session width (the rescore sides below
+    # stay on the raw scan: they are broadcast builds)
     cand = lsh_candidate_pairs(
         load(spark, sf_dir, "embeddings").repartition(
             spark.sparkContext.defaultParallelism
@@ -1352,24 +1331,6 @@ WHERE {_SQL_SUBSTRING_PRED}
 """
 
 
-def q_simhash_fingerprints(spark, sf_dir):
-    """B7: 64-bit shingle-SimHash per doc. Not driver-oracle-able as raw
-    values (blake2b token hashing is not SQL-expressible) — the driver row
-    for B7 is `simhash_consistency`; bit-exactness of the fingerprints is
-    pinned by pytest against the sequential numpy oracle."""
-    # computes its own signature pass: the _doc_signatures cache is
-    # projected to the columns the flagship DAG reads (round 6) and no
-    # longer carries `simhash`
-    from webcrawler_spark.operators.signatures import compute_signatures
-
-    docs = (
-        load(spark, sf_dir, "documents")
-        .select("doc_id", "text")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
-    return compute_signatures(docs, DEFAULT_CONFIG).select("doc_id", "simhash")
-
-
 # shared constants of the simhash property probe — single source for BOTH
 # the engine query and its SQL oracle (interpolated below), so neither side
 # can drift alone. MIN_TOKENS picks docs long enough that the planted
@@ -1741,26 +1702,26 @@ def q_multimodal_dup_pairs(spark, sf_dir):
     IMG_COPY_MOD == 0 perturbs ~1% of doc_id-1's nibbles —
     multimodal.synth_image_corpus). The engine decodes payloads, takes
     centered pixel profiles, generates candidates via hyperplane-LSH
-    (similarity.py, modality-agnostic, no crossJoin) and exact-rescores
-    with int64 dot products. The oracle reconstructs the same rasters in
+    (no crossJoin) and exact-rescores with int64 dot products
+    (multimodal.asset_dup_pairs). The oracle reconstructs the same rasters in
     SQL (DuckDB md5 == hashlib.md5) and scores ALL pairs brute-force —
     equality is the recall check. Separation is wide (planted copies
     cosine >= ~0.97, unrelated md5 rasters <= ~0.17 measured at 1000 ids),
     so the 0.9 threshold sits in a structural void."""
     from webcrawler_spark.operators.multimodal import (
-        image_dup_pairs,
+        asset_dup_pairs,
         synth_image_corpus,
     )
 
-    # round 6: repartition the id scan so synthesis + codec decode +
-    # profiling (all Python) run at session width (single-row-group input)
+    # repartition the single-row-group id scan so synthesis, codec decode
+    # and profiling (all Python) run at session width
     ids = (
         load(spark, sf_dir, "documents")
         .select("doc_id")
         .repartition(spark.sparkContext.defaultParallelism)
     )
     assets = synth_image_corpus(spark, ids)
-    return image_dup_pairs(assets, threshold=0.9).select(
+    return asset_dup_pairs(assets, "image").select(
         F.col("asset_id_a").alias("doc_id_a"),
         F.col("asset_id_b").alias("doc_id_b"),
         "cosine",
@@ -1775,7 +1736,7 @@ def q_multimodal_audio_dup_pairs(spark, sf_dir):
     modality-agnostic engine path, two independently-exercised codec
     branches, each with its own brute-force SQL oracle."""
     from webcrawler_spark.operators.multimodal import (
-        audio_dup_pairs,
+        asset_dup_pairs,
         synth_audio_corpus,
     )
 
@@ -1785,7 +1746,7 @@ def q_multimodal_audio_dup_pairs(spark, sf_dir):
         .repartition(spark.sparkContext.defaultParallelism)
     )
     assets = synth_audio_corpus(spark, ids)
-    return audio_dup_pairs(assets, threshold=0.9).select(
+    return asset_dup_pairs(assets, "audio").select(
         F.col("asset_id_a").alias("doc_id_a"),
         F.col("asset_id_b").alias("doc_id_b"),
         "cosine",
