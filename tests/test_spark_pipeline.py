@@ -341,6 +341,27 @@ def test_tune_split_size_guard(spark):
         )
 
 
+def test_substring_equal_length_gated(spark):
+    """Identical texts are exact-kind edges, never substring edges: the
+    length gate drops an equal-length pair before any text moves, while a
+    proper substring still verifies and a non-substring is dropped."""
+    from webcrawler_spark.operators.suffix import gated_substring_edges
+
+    texts = {
+        1: "alpha beta gamma delta epsilon zeta",
+        2: "alpha beta gamma delta epsilon zeta",  # exact dup of 1
+        3: "beta gamma delta",  # substring of 1
+        4: "totally different words here entirely",
+    }
+    docs = spark.createDataFrame(list(texts.items()), "doc_id long, text string")
+    tier1 = spark.createDataFrame(
+        [(1, b, len(texts[1]), len(texts[b])) for b in (2, 3, 4)],
+        "a long, b long, len_a long, len_b long",
+    )
+    got = {tuple(r) for r in gated_substring_edges(tier1, docs).collect()}
+    assert got == {(1, 3, "substring")}
+
+
 def test_build_edges_persisted_out_unpersists(sigs, docs_df):
     """The cleanup hook must hand back exactly the internally persisted
     intermediates, and unpersisting them must not break the edge result."""
