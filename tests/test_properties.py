@@ -72,7 +72,7 @@ def test_simhash_single_feature_bounded_shift(vals, _bit):
     # removing one of m features flips at most all bits where the margin was
     # exactly that feature's contribution — hamming shift is bounded by 64
     # and should be small for larger sets
-    d = H.hamming64(H.simhash64(a), H.simhash64(b))
+    d = bin((H.simhash64(a) ^ H.simhash64(b)) & (2**64 - 1)).count("1")
     assert 0 <= d <= 64
     if len(a) >= 200:
         assert d <= 24
@@ -258,3 +258,38 @@ def test_every_library_definition_has_a_non_test_caller():
     assert not orphans, "library definitions with no non-test caller:\n" + "\n".join(
         orphans
     )
+
+
+def test_every_config_field_is_read():
+    """Every DedupConfig field is read as an attribute of a config object
+    (a name containing "cfg" or "config", e.g. ``cfg.seed``,
+    ``DEFAULT_CONFIG.verify_mode``) somewhere in the library, tools/,
+    perfbench/ or bench.py. A field nothing reads is deleted, and a value
+    that never varies becomes a module constant where it is used."""
+    import ast
+    import dataclasses
+    from pathlib import Path
+
+    from webcrawler_spark.config import DedupConfig
+
+    root = Path(__file__).resolve().parent.parent
+    sources = (
+        sorted((root / "webcrawler_spark").rglob("*.py"))
+        + sorted((root / "tools").rglob("*.py"))
+        + sorted((root / "perfbench").rglob("*.py"))
+        + [root / "bench.py"]
+    )
+    read: set[str] = set()
+    for path in sources:
+        for n in ast.walk(ast.parse(path.read_text())):
+            if (
+                isinstance(n, ast.Attribute)
+                and isinstance(n.ctx, ast.Load)
+                and isinstance(n.value, ast.Name)
+                and ("cfg" in n.value.id.lower() or "config" in n.value.id.lower())
+            ):
+                read.add(n.attr)
+    unread = sorted(
+        f.name for f in dataclasses.fields(DedupConfig) if f.name not in read
+    )
+    assert not unread, f"DedupConfig fields no caller reads: {unread}"

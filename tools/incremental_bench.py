@@ -6,7 +6,7 @@ absorbing a new crawl batch costs O(batch), not O(corpus) — and re-checks
 exactness at 1M docs:
 
 1. build the corpus state once (signatures -> edges -> assignments over the
-   existing 95%), persist its three tables to parquet (the production
+   existing 95%), persist its five tables to parquet (the production
    stage-output shape);
 2. time ONLY the increment: signature the 5% batch, join its bucket keys
    against the persisted state, verify, extend assignments via seeded
@@ -42,10 +42,6 @@ def main() -> None:
     ap.add_argument("--new-mod", type=int, default=20,
                     help="doc_id %% new-mod == 7 is the increment (~5%%)")
     ap.add_argument("--base", default="/tmp/webcrawler_scaling")
-    ap.add_argument("--no-kept-delta", action="store_true",
-                    help="drop the precomputed kept-anchor-count table from "
-                         "the reloaded state (exercise the fallback "
-                         "aggregation path for comparison)")
     args = ap.parse_args()
 
     from pyspark.sql import functions as F
@@ -110,9 +106,7 @@ def _run_bench(args, spark, docs, old_docs, new_docs, state_dir) -> None:
         dropped_anchor_keys=spark.read.parquet(
             f"{state_dir}/dropped_anchor_keys"
         ),
-        kept_anchor_counts=None if args.no_kept_delta else spark.read.parquet(
-            f"{state_dir}/kept_anchor_counts"
-        ),
+        kept_anchor_counts=spark.read.parquet(f"{state_dir}/kept_anchor_counts"),
     )
     # stage-faithful shape (exactly what the pipeline does): commit the
     # increment's edges to a table, then union-find over the table scan —

@@ -5,7 +5,7 @@ ONE mega-domain holding ~30% of all docs (the salted repartition-by-domain
 stage must still balance partitions) and a shared header/footer token block
 in ~50% of docs (boilerplate stop-shingles: every anchor bucket for those
 shingles holds ~half the corpus and must be DROPPED by anchor_max_bucket,
-and the LSH/simhash bucket caps must keep candidate pair counts bounded
+and the LSH bucket cap must keep candidate pair counts bounded
 instead of exploding O(n^2) on the hot keys).
 
 Runs the full pipeline once (fresh subprocess), then measures from the

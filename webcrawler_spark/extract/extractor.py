@@ -12,7 +12,7 @@ import re
 from dataclasses import dataclass, field
 from datetime import datetime, timezone
 
-from webcrawler_spark.config import FILTER_TERMS, SOCIAL_DOMAINS, DEFAULT_CONFIG
+from webcrawler_spark.config import FILTER_TERMS, SOCIAL_DOMAINS
 from webcrawler_spark.extract import urlutil
 from webcrawler_spark.extract.html_parser import (
     COMMENT,
@@ -32,6 +32,9 @@ _RFC3339 = re.compile(
     r"^(\d{4})-(\d{2})-(\d{2})T(\d{2}):(\d{2}):(\d{2})(\.\d+)?"
     r"(Z|[+-]\d{2}:\d{2})$"
 )
+
+# fetcher.go:29
+MAX_BODY_BYTES = 2 * 1024 * 1024
 
 _SKIP_TEXT_PARENTS = frozenset({"script", "style", "noscript", "template"})
 _HEADINGS = frozenset({"h1", "h2", "h3", "h4", "h5", "h6"})
@@ -366,7 +369,7 @@ def gate_and_extract(html_bytes: bytes, url: str) -> PageData:
         pd.fetch_error = "failed to build full URL"
         return pd
 
-    body = html_bytes[: DEFAULT_CONFIG.max_body_bytes]  # io.LimitReader
+    body = html_bytes[:MAX_BODY_BYTES]  # io.LimitReader
     try:
         content = body.decode("utf-8", errors="strict")
     except UnicodeDecodeError:

@@ -104,7 +104,7 @@ def minhash_signature(shingles: np.ndarray, seeds: np.ndarray) -> np.ndarray:
     if len(shingles) == 0:
         return np.full(k, _MASK, dtype=_U64)
     # (m, k) matrix; m*k*8 bytes transient (m ~ 1e3 => ~1 MB) — Arrow batch
-    # sizing keeps this bounded (config.arrow_batch_rows)
+    # sizing keeps this bounded (spark.sql.execution.arrow.maxRecordsPerBatch)
     mat = (shingles[:, None] * a[None, :] + b[None, :]) & _MASK
     return mat.min(axis=0)
 
@@ -154,35 +154,3 @@ def band_hashes(sig: np.ndarray, bands: int, rows: int, seed: int) -> np.ndarray
 def signed(a: np.ndarray) -> np.ndarray:
     """uint64 -> int64 bit-cast for storage in Spark LongType columns."""
     return a.view(np.int64)
-
-
-def hamming64(a: int, b: int) -> int:
-    return bin((a ^ b) & 0xFFFFFFFFFFFFFFFF).count("1")
-
-
-def simhash_block_keys(fp: int, n_blocks: int, hamming: int, bits: int = 64) -> list[int]:
-    """Pigeonhole table keys (Manku et al., WWW'07): split the fingerprint
-    into n_blocks near-equal blocks; for every (n_blocks - hamming)-block
-    combination emit one key packing (table index, those blocks' bits).
-    Any pair within the hamming budget shares at least one full key.
-
-    Deterministic combination order (itertools.combinations over ascending
-    block indices) — shared by engine and oracle.
-    """
-    from itertools import combinations
-
-    fp &= (1 << bits) - 1
-    widths = [bits // n_blocks + (1 if i < bits % n_blocks else 0) for i in range(n_blocks)]
-    blocks = []
-    off = 0
-    for w in widths:
-        blocks.append((fp >> off) & ((1 << w) - 1))
-        off += w
-    keys = []
-    keep = n_blocks - hamming
-    for t, combo in enumerate(combinations(range(n_blocks), keep)):
-        key = t
-        for b in combo:
-            key = (key << widths[b]) | blocks[b]
-        keys.append(key)
-    return keys

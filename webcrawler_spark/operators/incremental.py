@@ -20,10 +20,10 @@ existing run from its persisted stage outputs:
   bucket keys the batch occupies, so candidate work is proportional to the
   batch, not the corpus. The state's rows for those keys are fetched by key
   (``is_new`` false) and re-capped TOGETHER with the batch's rows (``is_new``
-  true) in one window over (gen, key), which keeps per row ``rn`` (rank by
-  doc_id), ``sz`` (combined bucket size) and ``keep`` (anchor:
-  sz <= anchor_max_bucket; lsh/sim: rn <= max_bucket_size). Everything else
-  is a filter of that one table:
+  true) by the batch path's cap policy (``lsh._judge_buckets``), which keeps
+  per row ``rn`` (rank by doc_id), ``sz`` (combined bucket size) and
+  ``keep`` (anchor: sz <= anchor_max_bucket; lsh: rn <= max_bucket_size).
+  Everything else is a filter of that one table:
 
   - candidate pairs with a new side: ``keep`` rows, pairs where
     ``x.is_new OR y.is_new`` (old-old pairs were resolved by the state and
@@ -68,15 +68,15 @@ lossless there too.
 
 from __future__ import annotations
 
-import warnings
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from webcrawler_spark.config import DedupConfig, DEFAULT_CONFIG
 from webcrawler_spark.operators.components import assign_clusters
 from webcrawler_spark.operators.lsh import (
+    _judge_buckets,
     _kept_anchor_counts,
     _pairs_from_unified,
     _tier1_survivors,
@@ -93,29 +93,31 @@ class DedupState:
 
     All members are stage outputs (parquet/Iceberg tables at scale; plain
     DataFrames in tests): ``sigs`` the signature table, ``buckets`` the
-    capped unified bucket table, ``assignments`` (doc_id, cluster_id), and
-    ``dropped_anchor_keys`` (key) — the anchor keys whose corpus-wide
-    bucket exceeded the drop cap. The last table is essential for
-    exactness, not an optimization: a boilerplate shingle shared by 10^6
-    old docs has NO rows in the capped bucket table, so without the
-    drop-list a new batch carrying that shingle would see an innocently
-    small batch-local bucket, count it as a kept anchor, inflate the
-    tier-1 containment denominator for its docs, and MISS borderline true
-    pairs a full recompute finds (observed: 51 of 19,159 new-side pairs at
-    1M docs before this table existed). It is small by construction —
-    boilerplate keys are the heavy tail, ~3% of keys even on the
-    pathological 50%-boilerplate stress corpus."""
+    capped unified bucket table, ``assignments`` (doc_id, cluster_id),
+    ``kept_anchor_counts`` (doc_id, n_kept) and ``dropped_anchor_keys``
+    (key). All five are required.
+
+    ``kept_anchor_counts`` holds, per doc, its anchor rows in ``buckets``:
+    the tier-1 denominator, which an increment updates with an O(touched)
+    delta instead of re-aggregating the whole bucket table.
+
+    ``dropped_anchor_keys`` lists the anchor keys whose corpus-wide bucket
+    exceeded the drop cap. It is essential for exactness, not an
+    optimization: a boilerplate shingle shared by 10^6 old docs has NO rows
+    in the capped bucket table, so without the drop-list a new batch
+    carrying that shingle would see an innocently small batch-local
+    bucket, count it as a kept anchor, inflate the tier-1 containment
+    denominator for its docs, and MISS borderline true pairs a full
+    recompute finds (observed: 51 of 19,159 new-side pairs at 1M docs
+    before this table existed). It is small by construction — boilerplate
+    keys are the heavy tail, ~3% of keys even on the pathological
+    50%-boilerplate stress corpus."""
 
     sigs: DataFrame
     buckets: DataFrame
     assignments: DataFrame
-    dropped_anchor_keys: DataFrame | None = None
-    # per-doc kept-anchor counts (doc_id, n_kept): the tier-1 denominator,
-    # precomputed so an increment derives denominators with an O(touched)
-    # delta instead of re-aggregating the whole bucket table (the 10^12-doc
-    # shape; incremental_edges falls back to the full aggregation when the
-    # table is absent)
-    kept_anchor_counts: DataFrame | None = None
+    dropped_anchor_keys: DataFrame
+    kept_anchor_counts: DataFrame
 
 
 def build_dedup_state(
@@ -206,23 +208,10 @@ def _touched_recap(
     kept-counts), and a batch-locally-truncated LSH bucket could exclude a
     doc that belongs in the combined top-cap. The combined window below is
     the only cap that matters."""
-    new_rows = bucket_rows(new_sigs, cfg)
-    if state.dropped_anchor_keys is not None:
-        dropped = state.dropped_anchor_keys.select(
-            F.lit("anchor").alias("gen"), F.col("key")
-        )
-        new_rows = new_rows.join(dropped, ["gen", "key"], "left_anti")
-    else:
-        # a state without the drop-list silently reintroduces the
-        # documented recall loss (51/19,159 pairs at 1M) — degrade LOUDLY
-        # so a parquet round-trip that omitted the table is caught
-        warnings.warn(
-            "DedupState.dropped_anchor_keys is None: incremental recall "
-            "may silently degrade on boilerplate-heavy corpora (see "
-            "DedupState docstring); build states with build_dedup_state "
-            "or persist the dropped-keys table.",
-            stacklevel=3,
-        )
+    dropped = state.dropped_anchor_keys.select(
+        F.lit("anchor").alias("gen"), F.col("key")
+    )
+    new_rows = bucket_rows(new_sigs, cfg).join(dropped, ["gen", "key"], "left_anti")
     new_rows = _checkpoint(
         new_rows.withColumn("is_new", F.lit(True)), persisted_out
     )
@@ -241,19 +230,7 @@ def _touched_recap(
     combined = old_rows.unionByName(new_rows).repartition(
         _shuffle_partitions(new_sigs), "gen", "key"
     )
-
-    wo = Window.partitionBy("gen", "key").orderBy("doc_id")
-    wc = Window.partitionBy("gen", "key")
-    judged = (
-        combined.withColumn("rn", F.row_number().over(wo))
-        .withColumn("sz", F.count("*").over(wc))
-        .withColumn(
-            "keep",
-            F.when(F.col("gen") == "anchor", F.col("sz") <= cfg.anchor_max_bucket)
-            .otherwise(F.col("rn") <= cfg.max_bucket_size),
-        )
-    )
-    return _checkpoint(judged, persisted_out)
+    return _checkpoint(_judge_buckets(combined, cfg), persisted_out)
 
 
 def _kept_counts_next(state: DedupState, judged: DataFrame) -> DataFrame:
@@ -299,7 +276,7 @@ def incremental_edges(
     persisted_out: list | None = None,
 ) -> DataFrame:
     """Edges with >= 1 new-batch side: exact / near / containment /
-    (cfg-gated) simhash / substring kinds, same thresholds and verify as
+    substring kinds, same thresholds and verify as
     the batch path. ``docs`` (doc_id, text over old + new) enables the
     substring pass, exactly as in ``build_edges``. ``recap`` is the batch's
     judged table from ``_touched_recap``; it is built here when absent.
@@ -333,22 +310,7 @@ def incremental_edges(
     # tier-1 kept-anchor denominators, combined-drop semantics: rows in
     # untouched keys keep their recorded survival (their buckets gained no
     # members), rows in touched keys take the judged verdict
-    if state.kept_anchor_counts is not None:
-        kept_counts = _kept_counts_next(state, judged)
-    else:
-        # no precomputed aggregate: one O(corpus) pass over the state
-        # bucket table
-        untouched_anchor = state.buckets.filter(F.col("gen") == "anchor").join(
-            judged.select("gen", "key"), ["gen", "key"], "left_anti"
-        )
-        kept_rows = untouched_anchor.select("doc_id").unionByName(
-            judged.filter((F.col("gen") == "anchor") & F.col("keep")).select(
-                "doc_id"
-            )
-        )
-        kept_counts = kept_rows.groupBy("doc_id").agg(
-            F.count("*").alias("n_kept")
-        )
+    kept_counts = _kept_counts_next(state, judged)
     # bound the counts table to docs that actually appear in anchor pairs —
     # tier-1 (and its n_chars fetch) then touch O(candidate docs), not
     # every doc in the corpus
@@ -359,7 +321,7 @@ def incremental_edges(
         .distinct()
     )
     kept_counts = kept_counts.join(cand_ids, "doc_id", "left_semi")
-    with_len = docs is not None and cfg.substring_pass
+    with_len = docs is not None
     tier1 = _tier1_survivors(cand, kept_counts, all_sigs, cfg, with_len=with_len)
     if with_len:
         # two readers: the verify union and the substring length gate
@@ -461,23 +423,15 @@ def advance_state(
         judged.select("gen", "key"), ["gen", "key"], "left_anti"
     ).unionByName(judged.filter(F.col("keep")).select("gen", "key", "doc_id"))
 
-    dropped_next = None
-    if state.dropped_anchor_keys is not None:
-        newly_over = judged.filter(
-            (F.col("gen") == "anchor") & (F.col("sz") > cfg.anchor_max_bucket)
-        ).select("key")
-        dropped_next = (
-            state.dropped_anchor_keys.unionByName(newly_over).distinct()
-        )
-
-    kept_next = None
-    if state.kept_anchor_counts is not None:
-        kept_next = _kept_counts_next(state, judged)
-
+    newly_over = judged.filter(
+        (F.col("gen") == "anchor") & (F.col("sz") > cfg.anchor_max_bucket)
+    ).select("key")
     return DedupState(
         sigs=state.sigs.unionByName(new_sigs),
         buckets=buckets_next,
         assignments=new_assignments,
-        dropped_anchor_keys=dropped_next,
-        kept_anchor_counts=kept_next,
+        dropped_anchor_keys=(
+            state.dropped_anchor_keys.unionByName(newly_over).distinct()
+        ),
+        kept_anchor_counts=_kept_counts_next(state, judged),
     )

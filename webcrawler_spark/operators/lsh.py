@@ -4,20 +4,22 @@ Contract: ``build_edges`` turns a signature table into the edge table
 (a, b, kind) with a < b, and equals the numpy oracle (operators/oracle.py)
 edge for edge. Everything runs JVM-side except the substring text check.
 
-- **Candidates**: MinHash band hashes (gen "lsh"), sampled anchor shingles
-  (gen "anchor") and, when cfg.simhash_edges, SimHash block keys (gen
-  "sim") are all bucket keys. Their rows are unioned and capped after one
-  exchange on (gen, key) (``unified_capped_buckets``): lsh and sim buckets
-  keep their cfg.max_bucket_size smallest doc_ids, anchor buckets larger
-  than cfg.anchor_max_bucket are dropped whole. Each capped bucket is
-  exploded into its (a < b) pairs (``_pairs_from_unified``).
+- **Candidates**: MinHash band hashes (gen "lsh") and sampled anchor
+  shingles (gen "anchor") are both bucket keys. Their rows are unioned and
+  capped after one exchange on (gen, key) (``unified_capped_buckets``,
+  ``_judge_buckets``): lsh buckets keep their cfg.max_bucket_size smallest
+  doc_ids, anchor buckets larger than cfg.anchor_max_bucket are dropped
+  whole. Each capped bucket is exploded into its (a < b) pairs
+  (``_pairs_from_unified``).
 - **Tier 1**: anchor pairs pass when shared kept anchors / min(kept
   anchors) >= containment_tau - anchor_est_margin (``_tier1_survivors``).
 - **Verify**: lsh pairs and tier-1 survivors get exact Jaccard and
   containment from the distinct-shingle arrays (or MinHash estimates in
-  signature mode); sim pairs get bit_count(a ^ b) <= simhash_hamming;
-  length-gated tier-1 survivors get the exact substring check
-  (``_verified_edges``, shared with operators/incremental.py).
+  signature mode); length-gated tier-1 survivors get the exact substring
+  check (``_verified_edges``, shared with operators/incremental.py).
+
+The 64-bit SimHash fingerprint in the signature table is not an edge kind:
+``queries.q_simhash_consistency`` checks it on its own.
 """
 
 from __future__ import annotations
@@ -184,64 +186,50 @@ def exact_edges(sigs: DataFrame) -> DataFrame:
     )
 
 
-def simhash_edges(
-    pairs: DataFrame, sigs: DataFrame, cfg: DedupConfig = DEFAULT_CONFIG
-) -> DataFrame:
-    """B7 verify: Hamming distance over the 64-bit fingerprints."""
-    fa = sigs.select(F.col("doc_id").alias("a"), F.col("simhash").alias("fp_a"))
-    fb = sigs.select(F.col("doc_id").alias("b"), F.col("simhash").alias("fp_b"))
-    return (
-        pairs.join(fa, "a")
-        .join(fb, "b")
-        .filter(F.expr("bit_count(fp_a ^ fp_b)") <= cfg.simhash_hamming)
-        .select("a", "b", F.lit("simhash").alias("kind"))
-    )
-
-
 def bucket_rows(sigs: DataFrame, cfg: DedupConfig = DEFAULT_CONFIG) -> DataFrame:
-    """UNCAPPED (gen, key, doc_id) bucket rows for all candidate
-    generators. The incremental path consumes this directly: a batch's
-    rows must reach the combined cap re-decision uncapped, because a
-    batch-local cap can hide that a key was touched at all (operators/
-    incremental.py)."""
+    """UNCAPPED (gen, key, doc_id) bucket rows for both candidate
+    generators; the keys are precomputed in ``sigs``, so ``cfg`` is not
+    read. The incremental path consumes this directly: a batch's rows must
+    reach the combined cap re-decision uncapped, because a batch-local cap
+    can hide that a key was touched at all (operators/incremental.py)."""
     bands = sigs.select(
         F.lit("lsh").alias("gen"), F.explode("bands").alias("key"), F.col("doc_id")
     )
     anchors = sigs.select(
         F.lit("anchor").alias("gen"), F.explode("anchors").alias("key"), F.col("doc_id")
     )
-    buckets = bands.unionByName(anchors)
-    if cfg.simhash_edges:
-        # the sim-block stream is ~C(6,3)=20 keys/doc — only pay for it when
-        # simhash edges are part of the union (config.py rationale)
-        sims = sigs.filter(F.col("n_shingles") > 0).select(
-            F.lit("sim").alias("gen"),
-            F.explode("sim_blocks").alias("key"),
-            F.col("doc_id"),
+    return bands.unionByName(anchors)
+
+
+def _judge_buckets(rows: DataFrame, cfg: DedupConfig) -> DataFrame:
+    """The cap policy: ``rows`` (gen, key, doc_id, ...) plus, per row, ``rn``
+    (rank by doc_id in its (gen, key) bucket), ``sz`` (bucket size) and
+    ``keep``. lsh buckets keep their max_bucket_size smallest doc_ids;
+    anchor buckets larger than anchor_max_bucket are dropped whole. Two
+    window functions over one (gen, key) partitioning. The batch path
+    (``unified_capped_buckets``) and the increment's judged table
+    (incremental._touched_recap) both decide survival here."""
+    wo = Window.partitionBy("gen", "key").orderBy("doc_id")
+    wc = Window.partitionBy("gen", "key")
+    return (
+        rows.withColumn("rn", F.row_number().over(wo))
+        .withColumn("sz", F.count("*").over(wc))
+        .withColumn(
+            "keep",
+            F.when(F.col("gen") == "anchor", F.col("sz") <= cfg.anchor_max_bucket)
+            .otherwise(F.col("rn") <= cfg.max_bucket_size),
         )
-        buckets = buckets.unionByName(sims)
-    return buckets
+    )
 
 
 def unified_capped_buckets(
     sigs: DataFrame, cfg: DedupConfig = DEFAULT_CONFIG
 ) -> DataFrame:
-    """(gen, key, doc_id) bucket rows for all three candidate generators
-    after ONE exchange and the per-generator cap policies (truncate to
-    max_bucket_size for lsh/simhash, drop-if-over anchor_max_bucket for
-    anchors) — two window functions over the same (gen, key) partitioning.
-    """
-    buckets = bucket_rows(sigs, cfg)
-
-    wo = Window.partitionBy("gen", "key").orderBy("doc_id")
-    wc = Window.partitionBy("gen", "key")
+    """(gen, key, doc_id) bucket rows of both candidate generators after
+    ONE exchange and the cap policy (``_judge_buckets``)."""
     return (
-        buckets.withColumn("rn", F.row_number().over(wo))
-        .withColumn("sz", F.count("*").over(wc))
-        .filter(
-            F.when(F.col("gen") == "anchor", F.col("sz") <= cfg.anchor_max_bucket)
-            .otherwise(F.col("rn") <= cfg.max_bucket_size)
-        )
+        _judge_buckets(bucket_rows(sigs, cfg), cfg)
+        .filter(F.col("keep"))
         .select("gen", "key", "doc_id")
     )
 
@@ -280,9 +268,8 @@ def unified_candidates(
 ) -> DataFrame:
     """(gen, a, b, n_shared) candidate pairs of every generator, through one
     bucket shuffle. Filtered to one ``gen``, the pairs equal the oracle's
-    candidates of that generator: ``lsh`` and ``sim`` (the latter only when
-    cfg.simhash_edges) as they are, ``anchor`` after ``_tier1_survivors``
-    (test_candidates_match_oracle)."""
+    candidates of that generator: ``lsh`` as they are, ``anchor`` after
+    ``_tier1_survivors`` (test_candidates_match_oracle)."""
     return _pairs_from_unified(unified_capped_buckets(sigs, cfg))
 
 
@@ -300,10 +287,9 @@ def _verified_edges(
     - near / containment: Jaccard and containment verified ONCE over lsh
       pairs ∪ tier-1 survivors (a pair found by either generator qualifies
       through either metric, as in the oracle);
-    - simhash, when cfg.simhash_edges: sim pairs within simhash_hamming;
-    - substring, when ``docs`` (doc_id, text) is given and
-      cfg.substring_pass: length-gated tier-1 survivors whose smaller text
-      occurs in the larger (suffix.gated_substring_edges).
+    - substring, when ``docs`` (doc_id, text) is given: length-gated
+      tier-1 survivors whose smaller text occurs in the larger
+      (suffix.gated_substring_edges).
 
     ``sigs`` must cover every doc of ``cand`` and ``docs`` every doc of
     ``tier1``. With the substring pass ``tier1`` has two readers, so
@@ -331,10 +317,7 @@ def _verified_edges(
         "b",
         F.explode(F.filter(kinds, lambda x: x.isNotNull())).alias("kind"),
     )
-    if cfg.simhash_edges:
-        sim_cand = cand.filter(F.col("gen") == "sim").select("a", "b")
-        out = out.unionByName(simhash_edges(sim_cand, sigs, cfg))
-    if docs is not None and cfg.substring_pass:
+    if docs is not None:
         from webcrawler_spark.operators.suffix import gated_substring_edges
 
         out = out.unionByName(gated_substring_edges(tier1, docs))
@@ -349,8 +332,8 @@ def build_edges(
 ) -> DataFrame:
     """B9: the corpus's edge table (a, b, kind), a < b: exact (same
     sha256), near (Jaccard >= jaccard_tau), containment (>=
-    containment_tau), simhash (only when cfg.simhash_edges) and substring
-    (only when ``docs`` (doc_id, text) is given and cfg.substring_pass).
+    containment_tau) and substring (only when ``docs`` (doc_id, text) is
+    given).
     A pair appears once per kind it qualifies for. Equals the oracle's
     edges (test_edges_match_oracle).
 
@@ -370,7 +353,7 @@ def build_edges(
     cand = _pairs_from_unified(capped).persist()
     if persisted_out is not None:
         persisted_out += [capped, cand]
-    with_len = docs is not None and cfg.substring_pass
+    with_len = docs is not None
     tier1 = _tier1_survivors(
         cand, _kept_anchor_counts(capped), sigs, cfg, with_len=with_len
     )

@@ -9,12 +9,14 @@ never at scale.
 
 Pipeline mirrored here:
   B1  exact sha256 pre-pass            -> exact_pairs
-  B2/B3/B7 tokenize/shingle/minhash/simhash signatures
+  B2/B3/B7 tokenize/shingle/minhash/simhash signatures (the SimHash
+      fingerprint is compared bit for bit with the engine's; it is not an
+      edge kind)
   B4/B5 LSH banding + bucket cap       -> lsh_candidates
-  B7  SimHash pigeonhole blocks + cap  -> simhash candidates -> hamming verify
   B8  anchor-sampled shingles + cap    -> containment candidates
   B6  verify: shared-shingle counts => Jaccard >= tau (near-dup edges) and
       containment >= containment_tau (containment edges)
+  B8  exact-substring check of the anchor candidates -> substring_pairs
   B9/B10/B11 union + connected components, cluster id = min doc_id
 """
 
@@ -49,9 +51,7 @@ class OracleResult:
     exact_pairs: set[tuple[int, int]] = field(default_factory=set)
     lsh_candidates: set[tuple[int, int]] = field(default_factory=set)
     anchor_candidates: set[tuple[int, int]] = field(default_factory=set)
-    simhash_candidates: set[tuple[int, int]] = field(default_factory=set)
     near_dup_pairs: set[tuple[int, int]] = field(default_factory=set)
-    simhash_pairs: set[tuple[int, int]] = field(default_factory=set)
     containment_pairs: set[tuple[int, int]] = field(default_factory=set)
     substring_pairs: set[tuple[int, int]] = field(default_factory=set)
     all_pairs: set[tuple[int, int]] = field(default_factory=set)
@@ -157,24 +157,6 @@ def run_oracle(
         if denom and n_sh / denom >= thresh:
             res.anchor_candidates.add((a, b))
 
-    # B7 SimHash pigeonhole tables (Manku-style multi-block keys; shingle-
-    # bearing docs only) — same key fn as the engine (hashing.simhash_block_keys)
-    sim_buckets: dict[int, list[int]] = defaultdict(list)
-    for doc_id, _ in docs:
-        if len(res.shingle_sets[doc_id]) == 0:
-            continue
-        fp = res.simhashes[doc_id]
-        for key in H.simhash_block_keys(
-            fp, cfg.simhash_blocks, cfg.simhash_hamming, cfg.simhash_bits
-        ):
-            sim_buckets[key].append(doc_id)
-    for ids in sim_buckets.values():
-        if len(ids) > 1:
-            res.simhash_candidates |= _capped_pairs(ids, cfg.max_bucket_size)
-    for a, b in res.simhash_candidates:
-        if H.hamming64(res.simhashes[a], res.simhashes[b]) <= cfg.simhash_hamming:
-            res.simhash_pairs.add((a, b))
-
     # B6 verify: one pass over (lsh | anchor) candidates computing shared
     # shingle counts => Jaccard edges and containment edges
     for a, b in sorted(res.lsh_candidates | res.anchor_candidates):
@@ -195,26 +177,22 @@ def run_oracle(
     # the anchor candidate stream). Equal-length pairs are gated out before
     # any text is compared — a PROPER substring needs differing lengths, and
     # identical texts are already exact edges (suffix.substring_length_gate).
-    if cfg.substring_pass:
-        texts = dict(docs)
-        for a, b in sorted(res.anchor_candidates):
-            x, y = texts[a] or "", texts[b] or ""
-            if len(x) == len(y):
-                continue
-            small, big = (x, y) if len(x) <= len(y) else (y, x)
-            if small and small in big:
-                res.substring_pairs.add((a, b))
+    texts = dict(docs)
+    for a, b in sorted(res.anchor_candidates):
+        x, y = texts[a] or "", texts[b] or ""
+        if len(x) == len(y):
+            continue
+        small, big = (x, y) if len(x) <= len(y) else (y, x)
+        if small and small in big:
+            res.substring_pairs.add((a, b))
 
-    # B9/B10/B11 (simhash edges join the union only when configured —
-    # config.simhash_edges rationale)
+    # B9/B10/B11
     res.all_pairs = (
         res.exact_pairs
         | res.near_dup_pairs
         | res.containment_pairs
         | res.substring_pairs
     )
-    if cfg.simhash_edges:
-        res.all_pairs = res.all_pairs | res.simhash_pairs
     dsu = DisjointSet()
     for doc_id, _ in docs:
         dsu.find(doc_id)

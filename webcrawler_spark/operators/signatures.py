@@ -1,8 +1,9 @@
 """Signature stage (SURVEY.md B1/B2/B3/B7 fused): one Arrow pass over text.
 
 (doc_id, text) -> sha256, token/shingle counts, 128-perm MinHash signature,
-LSH band hashes, 64-bit shingle-SimHash + its pigeonhole block keys, and
-anchor shingles (hash % anchor_mod == 0) for the containment pass. The full
+LSH band hashes, the 64-bit shingle-SimHash fingerprint (read by
+queries.q_simhash_consistency; no edge kind uses it), and anchor shingles
+(hash % anchor_mod == 0) for the containment pass. The full
 distinct-shingle set is carried only when cfg.verify_mode == "exact"
 (dropped at extreme scale in favor of signature-estimated Jaccard).
 
@@ -34,7 +35,6 @@ _BASE_FIELDS = [
     T.StructField("minhash", T.ArrayType(T.LongType())),
     T.StructField("bands", T.ArrayType(T.LongType())),
     T.StructField("simhash", T.LongType()),
-    T.StructField("sim_blocks", T.ArrayType(T.LongType())),
     T.StructField("n_anchors", T.IntegerType()),
     T.StructField("anchors", T.ArrayType(T.LongType())),
 ]
@@ -47,12 +47,6 @@ SIGNATURE_SCHEMA = T.StructType(
     _BASE_FIELDS + [T.StructField("shingles", T.ArrayType(T.LongType()))]
 )
 SIGNATURE_SCHEMA_NO_SHINGLES = T.StructType(_BASE_FIELDS)
-
-
-def _sim_block_keys(fp: int, cfg: DedupConfig) -> list[int]:
-    return H.simhash_block_keys(
-        fp, cfg.simhash_blocks, cfg.simhash_hamming, cfg.simhash_bits
-    )
 
 
 def compute_signatures(
@@ -100,7 +94,6 @@ def compute_signatures(
                 "minhash": [None] * n,
                 "bands": [None] * n,
                 "simhash": np.zeros(n, dtype="int64"),
-                "sim_blocks": [None] * n,
                 "n_anchors": np.zeros(n, dtype="int32"),
                 "anchors": [None] * n,
             }
@@ -124,13 +117,11 @@ def compute_signatures(
                     out["bands"][i] = H.signed(bh).tolist()
                     fp = H.simhash64(sh)
                     out["simhash"][i] = fp - (1 << 64) if fp >= (1 << 63) else fp
-                    out["sim_blocks"][i] = _sim_block_keys(fp, cfg)
                     anch = sh[sh % anchor_mod == np.uint64(0)]
                     out["n_anchors"][i] = len(anch)
                     out["anchors"][i] = H.signed(anch).tolist()
                 else:
                     out["bands"][i] = []
-                    out["sim_blocks"][i] = []
                     out["anchors"][i] = []
                 if keep_shingles:
                     out["shingles"][i] = H.signed(sh).tolist()

@@ -97,7 +97,7 @@ def substring_edges(
 ) -> DataFrame:
     """Exact-substring edges (a, b, kind='substring') over the anchor
     candidates: the substring-kind edges lsh.build_edges(sigs, cfg,
-    docs=docs) emits when cfg.substring_pass, without running the other
+    docs=docs) emits, without running the other
     generators or kinds. ``docs`` needs (doc_id, text).
 
     The capped anchor buckets are persisted (the pair grouping and the

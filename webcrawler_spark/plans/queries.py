@@ -32,6 +32,20 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
+def _text_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, text) of the documents table, round-robin repartitioned to
+    the session's parallelism for a CPU-bound Python (Arrow) stage. The
+    contract parquet files are written as a SINGLE row group, so the scan
+    cannot split and the Arrow stage would otherwise run in <= 2 tasks;
+    the shuffle moves KBs per core, while the Python work per doc is
+    orders of magnitude more expensive."""
+    return (
+        load(spark, sf_dir, "documents")
+        .select("doc_id", "text")
+        .repartition(spark.sparkContext.defaultParallelism)
+    )
+
+
 def _cache_partitions(path: str, bytes_per_part: int = 32 * 1024 * 1024) -> int:
     """Partition count for a CACHED derivative of `path`, sized from the
     input bytes (guide §2.2 "fewer, larger partitions"): cached signature/
@@ -300,14 +314,13 @@ GROUP BY l_returnflag, l_linestatus
 def q_top_revenue_orders(spark, sf_dir):
     """TPC-H Q3-style join + agg + deterministic top-k.
 
-    Optimization round 6 (guide §3.1, §8): the fact table never shuffles.
-    customer(BUILDING) is broadcast into orders (dimension-sized), and the
-    resulting qualifying-order keys (|orders|/segment-count rows of one
-    BIGINT) are broadcast into lineitem — before, lineitem and orders were
-    both exchanged and sorted for a sort-merge join. The only remaining
-    exchange is the (partially aggregated) groupBy, and the top-10 is a
-    TakeOrdered, not a global sort. Inner-join reordering + projection keep
-    the aggregated row multiset identical. Cluster-scale note: the
+    The fact table never shuffles. customer(BUILDING) is broadcast into
+    orders (dimension-sized), and the resulting qualifying-order keys
+    (|orders|/segment-count rows of one BIGINT) are broadcast into
+    lineitem. The only remaining exchange is the (partially aggregated)
+    groupBy, and the top-10 is a TakeOrdered, not a global sort.
+    Inner-join reordering + projection keep the aggregated row multiset
+    identical. Cluster-scale note: the
     qualifying-key broadcast is ~|orders|/5 keys (24 MB at sf10); beyond
     the broadcast envelope (~100M orders) drop the explicit hint and let
     AQE pick SMJ/SHJ — the declared result is join-strategy-independent."""
@@ -350,10 +363,7 @@ LIMIT 10
 def q_nation_revenue(spark, sf_dir):
     """TPC-H Q5-style multi-join rollup.
 
-    Optimization round 6 (guide §3.1, §2.3, §8): before, the 6M-row fact
-    was exchanged+sorted THREE times (sort-merge joins on l_orderkey, then
-    the join output reshuffled on o_custkey, then again on l_suppkey). Now
-    every join against lineitem is a broadcast: customer into orders
+    Every join against lineitem is a broadcast: customer into orders
     (c_custkey, dimension-sized), the resulting order-key multiset
     (|orders| single-BIGINT rows) into lineitem, and supplier⋈nation
     (10k rows with n_name attached) into lineitem. Zero exchanges of fact
@@ -532,16 +542,14 @@ JOIN documents b ON sha256(a.text) = sha256(b.text) AND a.doc_id < b.doc_id
 
 
 def _shingle_hashes(toks):
-    """Distinct word-5-gram keys per doc as xxhash64 over the token SLICE
-    (round 6): tokens are space-split, so joining them with spaces is
-    injective and hashing the 5-token slice buckets exactly like hashing
-    the joined string — without ever materializing the ~40-byte shingle
-    strings (measured ~25% off the explode pass at sf1.0). Collision odds
-    are the accepted hashed-shingle convention (see q_ngram_jaccard_pairs
-    docstring). The five tokens are passed as separate xxhash64 arguments
-    rather than one sliced array: no per-shingle array allocation, same
-    injective keying (measured another ~25% off the explode stage at 10x:
-    1.85 -> 1.35 s)."""
+    """Distinct word-5-gram keys per doc as xxhash64 over the token SLICE:
+    tokens are space-split, so joining them with spaces is injective and
+    hashing the 5-token slice buckets exactly like hashing the joined
+    string, without ever materializing the ~40-byte shingle strings.
+    Collision odds are the accepted hashed-shingle convention (see
+    q_ngram_jaccard_pairs docstring). The five tokens are passed as
+    separate xxhash64 arguments rather than one sliced array: no
+    per-shingle array allocation, same injective keying."""
     return F.array_distinct(
         F.transform(
             F.sequence(F.lit(1), F.size(toks) - 4),
@@ -593,15 +601,11 @@ def q_ngram_jaccard_pairs(spark, sf_dir):
     bucket happens to exceed the cap (at contract scale the max bucket is 4,
     so capped == uncapped anyway).
 
-    Optimization round 6 (guide §2.3/§2.4): same capped-pair semantics at a
-    fraction of the work. The shingle stream is exploded ONCE and shuffled
-    ONCE by shingle into a single hash aggregate (the cap is a slice of the
-    sorted collected bucket — no window, no sort; pair explosion is the
-    engine's grouped higher-order pattern, identical to a capped self-join
-    because (doc_id, shingle) rows are distinct and
-    sorted), instead of a string self-join whose two inputs plus the two
-    per-doc size aggregations each re-exploded the corpus (4 Generate nodes,
-    2 window exchanges, 2 aggregation exchanges before). Per-doc distinct-
+    The shingle stream is exploded ONCE and shuffled ONCE by shingle into a
+    single hash aggregate: the cap is a slice of the sorted collected
+    bucket (no window, no sort), and the pair explosion is the engine's
+    grouped higher-order pattern, identical to a capped self-join because
+    (doc_id, shingle) rows are distinct and sorted. Per-doc distinct-
     shingle counts are a per-row projection (size(array_distinct(...)) —
     no explode, no shuffle at all), joined onto the (small) surviving
     intersection pairs.
@@ -629,16 +633,15 @@ def q_ngram_jaccard_pairs(spark, sf_dir):
     # brute-force parity query; the ENGINE path (lsh.py) caps before
     # collecting, which is the 100 TB-safe shape.
     #
-    # Shared-key prefilter (round 6, guide §2.3 "shuffle fewer bytes"):
-    # ~99% of shingle keys are singletons that can never produce a pair,
-    # yet the collect_list aggregate allocated a buffer for every one of
-    # them. Pass 1 exchanges the 8-byte KEY ONLY into a scalar count and
-    # keeps keys seen >= 2 times; pass 2 re-explodes the cached hash
-    # arrays and collects doc-lists only for those keys (the prefilter
-    # set is joined map-side). Provably identical groups: a key passes
-    # the count filter iff its collected list would have had size >= 2 —
-    # the same keys, the same (distinct, sorted, capped) lists. Measured
-    # at 10x: grouped stage 2.12 -> 1.50 s. Envelope: the broadcast is
+    # Shared-key prefilter ("shuffle fewer bytes"): ~99% of shingle keys
+    # are singletons that can never produce a pair, and a collect_list
+    # aggregate would allocate a buffer for every one of them. Pass 1
+    # exchanges the 8-byte KEY ONLY into a scalar count and keeps keys
+    # seen >= 2 times; pass 2 re-explodes the cached hash arrays and
+    # collects doc-lists only for those keys (the prefilter set is joined
+    # map-side). Provably identical groups: a key passes the count filter
+    # iff its collected list would have had size >= 2 — the same keys, the
+    # same (distinct, sorted, capped) lists. Envelope: the broadcast is
     # O(keys shared by >= 2 docs) — bounded by the corpus's true shared-
     # shingle structure, fine wherever this brute-force parity query is
     # runnable at all (the all-corpus engine path is minhash_dup_pairs).
@@ -795,18 +798,15 @@ SELECT doc_id, md5(text) AS fp, length(text) AS n_chars_calc FROM documents
 
 def _quantized_embeddings(spark, sf_dir):
     """(vec_id, q, nrm) — the quantized embedding table with squared norms,
-    CACHED (round 6) for embedding_topk's two consumers (query side +
-    corpus stream side): Spark's `round` on doubles goes through BigDecimal
-    per ELEMENT — measured at 10x scale the quantize pass costs 0.68 s vs
-    0.26 s for a cast-only transform, and the cheaper roundings
-    (floor(x+0.5) etc.) are NOT bit-identical to the oracle's
-    decimal-string HALF_UP at boundary values, so the expression itself
-    must stay; caching runs it once per corpus. embedding_dup_pairs'
-    rescore sides deliberately do NOT read this cache (see its inline
-    note: cache-fed broadcast builds measured slower). Same
-    cached-multi-consumer-intermediate convention as _doc_signatures /
-    _shingle_arrays; cache stays at session parallelism (the dot-product
-    consumer is CPU-bound and wants width)."""
+    CACHED for embedding_topk's two consumers (query side + corpus stream
+    side): Spark's `round` on doubles goes through BigDecimal per ELEMENT,
+    and the cheaper roundings (floor(x+0.5) etc.) are NOT bit-identical to
+    the oracle's decimal-string HALF_UP at boundary values, so the
+    expression itself must stay; caching runs it once per corpus.
+    embedding_dup_pairs' rescore sides do NOT read this cache (see its
+    inline note). Same cached-multi-consumer-intermediate convention as
+    _doc_signatures / _shingle_arrays; cache stays at session parallelism
+    (the dot-product consumer is CPU-bound and wants width)."""
     return (
         load(spark, sf_dir, "embeddings")
         .repartition(spark.sparkContext.defaultParallelism)
@@ -982,19 +982,9 @@ def q_extract_visible_text(spark, sf_dir):
     run the full extraction stage, and return the extracted text — the
     oracle is the identity on documents.
 
-    Optimization round 6 (guide §2.4/§4.1): doc_id rides through the Arrow
-    stage as a passthrough column, replacing the join-back on url — which
-    cost a second full scan + html synthesis of the corpus AND a string-key
-    join/exchange. Same rows by construction: the join was 1:1 on the
-    synthesized url (extraction preserves it), now the id is carried
-    directly.
-
-    Second round-6 fix: the contract parquet files are written as a SINGLE
-    row group, so the scan cannot split — the whole Arrow extraction stage
-    ran in <= 2 tasks while 30 cores idled. One cheap round-robin
-    repartition of the ~6 MB scan unlocks full-width extraction (the
-    shuffle moves KBs per core; the Python parse work is the expensive
-    part by orders of magnitude)."""
+    doc_id rides through the Arrow stage as a passthrough column, so no
+    join back on url is needed. The scan is repartitioned before the Arrow
+    stage for the reason ``_text_docs`` gives."""
     from webcrawler_spark.extract.spark_extract import extract_pages, good_pages
 
     d = load(spark, sf_dir, "documents").repartition(
@@ -1025,9 +1015,7 @@ SELECT doc_id, text FROM documents
 def _page_df(spark, sf_dir):
     """Synthesized pages exercising links/headings/meta through the real
     extraction stage (F7-F9, F12, G4): deterministic html per document.
-    Repartitioned before the Arrow stage — single-row-group input files
-    otherwise serialize the extraction onto <= 2 cores (see
-    q_extract_visible_text)."""
+    Repartitioned before the Arrow stage (see ``_text_docs``)."""
     d = load(spark, sf_dir, "documents").repartition(
         spark.sparkContext.defaultParallelism
     )
@@ -1065,9 +1053,7 @@ def _page_df(spark, sf_dir):
 
 
 def _extracted_pages(spark, sf_dir):
-    # round 6: doc_id passthrough through the Arrow stage instead of a
-    # join-back on url (same 1:1 rows, no second scan/extraction, no join —
-    # see q_extract_visible_text)
+    # doc_id rides through the Arrow stage (see q_extract_visible_text)
     from webcrawler_spark.extract.spark_extract import extract_pages, good_pages
 
     web = _page_df(spark, sf_dir)
@@ -1210,14 +1196,14 @@ def _doc_signatures(spark, sf_dir):
     The cache holds only the columns build_edges reads under
     DEFAULT_CONFIG: doc_id, sha256, n_chars, n_shingles, bands, anchors,
     plus the verify input (shingles in exact mode, minhash in signature
-    mode) and sim_blocks when simhash edges are on. The 128-long minhash
-    array is dropped in exact mode, where nothing downstream reads it.
+    mode). The 128-long minhash array is dropped in exact mode, where
+    nothing downstream reads it.
 
-    The documents are split by core count for the CPU-bound Arrow stage,
-    but the cache is repartitioned by doc_id into ``_cache_partitions`` of
-    the documents file (~32 MB each): every warm scan pays one task launch
-    per cached partition, and cached plans pin their partitioning, so AQE
-    cannot coalesce them later."""
+    The documents are split by core count for the CPU-bound Arrow stage
+    (``_text_docs``), but the cache is repartitioned by doc_id into
+    ``_cache_partitions`` of the documents file (~32 MB each): every warm
+    scan pays one task launch per cached partition, and cached plans pin
+    their partitioning, so AQE cannot coalesce them later."""
     from webcrawler_spark.operators.signatures import compute_signatures
 
     cols = ["doc_id", "sha256", "n_chars", "n_shingles", "bands", "anchors"]
@@ -1225,15 +1211,8 @@ def _doc_signatures(spark, sf_dir):
         cols.append("shingles")
     else:
         cols.append("minhash")
-    if DEFAULT_CONFIG.simhash_edges:
-        cols.append("sim_blocks")
     return (
-        compute_signatures(
-            load(spark, sf_dir, "documents")
-            .select("doc_id", "text")
-            .repartition(spark.sparkContext.defaultParallelism),
-            DEFAULT_CONFIG,
-        )
+        compute_signatures(_text_docs(spark, sf_dir), DEFAULT_CONFIG)
         .select(*cols)
         .repartition(_cache_partitions(f"{sf_dir}/documents.parquet"), "doc_id")
         .cache()
@@ -1380,13 +1359,7 @@ def q_simhash_consistency(spark, sf_dir):
     either side."""
     from webcrawler_spark.operators.signatures import compute_signatures
 
-    # round 6: repartition before the (Python) signature stage — see
-    # _doc_signatures (single-row-group scan)
-    docs = (
-        load(spark, sf_dir, "documents")
-        .select("doc_id", "text")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
+    docs = _text_docs(spark, sf_dir)
     toks = F.split("text", " ")
     base = docs.filter(F.size(toks) >= SIMHASH_PROBE_MIN_TOKENS)
     copies = base.select((F.col("doc_id") + 1_000_000).alias("doc_id"), "text")
@@ -1494,12 +1467,9 @@ def clear_clusters_cache() -> None:
 
 def q_dedup_clusters(spark, sf_dir):
     """B9-B11: full dedup clusters over documents (union-find), through the
-    exact / near / containment / substring edge kinds. SimHash edges are NOT
-    part of the flagship union (config.simhash_edges rationale: they are
-    empirically a subset of the Jaccard closure but that subset property is
-    not SQL-provable, so keeping them would make the brute-force oracle
-    unsound on a corpus with a simhash-only link; B7 is driver-verified by
-    `simhash_consistency` instead)."""
+    exact / near / containment / substring edge kinds. SimHash is not an
+    edge kind: its fingerprint is checked by the `simhash_consistency`
+    query (config.py docstring)."""
     from webcrawler_spark.operators.components import assign_clusters
     from webcrawler_spark.operators.lsh import build_edges
 
@@ -1524,9 +1494,8 @@ def q_dedup_clusters(spark, sf_dir):
 # substring via position() under the engine's stated preconditions), then
 # iterate min-label propagation as a recursive CTE (UNION dedups =>
 # terminates at the transitive closure; cluster id = min reachable doc_id,
-# the engine's min-root convention). SimHash edges are absent from BOTH
-# sides by configuration (config.simhash_edges = False; see
-# q_dedup_clusters docstring).
+# the engine's min-root convention). SimHash is not an edge kind on
+# either side (q_dedup_clusters docstring).
 SQL_DEDUP_CLUSTERS = f"""
 WITH RECURSIVE {_SQL_PAIR_METRICS},
 jc_edges AS (
@@ -1615,13 +1584,7 @@ def q_dedup_recall(spark, sf_dir):
     from webcrawler_spark.operators.lsh import build_edges
     from webcrawler_spark.operators.signatures import compute_signatures
 
-    # round 6: repartition before the (Python) signature stage — see
-    # _doc_signatures (single-row-group scan)
-    docs = (
-        load(spark, sf_dir, "documents")
-        .select("doc_id", "text")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
+    docs = _text_docs(spark, sf_dir)
     toks = F.split("text", " ")
     variants = (
         docs.filter((F.col("doc_id") % 5 == 0) & (F.size(toks) >= 24))
@@ -1679,13 +1642,7 @@ def q_dedup_incremental(spark, sf_dir):
         incremental_dedup,
     )
 
-    # round 6: repartition before the (Python) signature stages — see
-    # _doc_signatures (single-row-group scan)
-    docs = (
-        load(spark, sf_dir, "documents")
-        .select("doc_id", "text")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
+    docs = _text_docs(spark, sf_dir)
     old_docs = docs.filter(F.col("doc_id") % 4 != 3)
     new_docs = docs.filter(F.col("doc_id") % 4 == 3)
     state = build_dedup_state(old_docs, _cfg)

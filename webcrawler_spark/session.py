@@ -12,12 +12,15 @@ import os
 
 from pyspark.sql import SparkSession
 
+# rows per Arrow batch sent to a Python stage; bounds the per-batch numpy
+# transients of the signature stage (hashing.minhash_signature)
+ARROW_BATCH_ROWS = 2000
+
 
 def get_spark(
     app_name: str = "webcrawler-spark",
     master: str | None = None,
     shuffle_partitions: int | None = None,
-    arrow_batch_rows: int = 2000,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     if master is None:
@@ -39,33 +42,26 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         # medium parquet stage outputs should still split across cores
         .config("spark.sql.files.maxPartitionBytes", "32m")
-        # scale-adaptive scan parallelism (round 6, guide §6): floor the
-        # split count at the session's core count so a single ~100 MB
-        # parquet file (e.g. lineitem at sf1.0) fans out over every core
-        # instead of 3-4 splits; on a cluster this tracks total cores via
-        # the same expression, and maxPartitionBytes still caps split size
+        # scale-adaptive scan parallelism: floor the split count at the
+        # session's core count so a single ~100 MB parquet file (e.g.
+        # lineitem at sf1.0) fans out over every core instead of 3-4
+        # splits; on a cluster this tracks total cores via the same
+        # expression, and maxPartitionBytes still caps split size
         .config("spark.sql.files.minPartitionNum", str(shuffle_partitions))
         # prefer shuffled-hash over sort-merge when the per-partition build
-        # side fits (round 6, guide §3.1/§9): skips both sort passes; AQE
-        # additionally rewrites SMJ->SHJ at runtime below the local-map
-        # threshold. Joins are strategy-independent in results.
+        # side fits: skips both sort passes; AQE additionally rewrites
+        # SMJ->SHJ at runtime below the local-map threshold. Joins are
+        # strategy-independent in results.
         .config("spark.sql.join.preferSortMergeJoin", "false")
         .config(
             "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "64m"
         )
-        # round 6 note: windowGroupLimitThreshold stays at the Spark
-        # default. An earlier batch set it to -1 for the ngram cap window
-        # (whose keys are mostly unique, so the partial map-side limit paid
-        # a full sort for ~no pruning), but the A/B at 10x scale showed the
-        # engine's OWN rank-filter windows (LSH band buckets, anchor
-        # buckets, link_budget top-k) have heavily repeated keys where the
-        # partial limit prunes most rows before the exchange: disabling it
-        # globally cost minhash_dup_pairs 2x (8.3 vs 4.1 s cold) and
-        # substring_dup_pairs ~20%. The ngram query instead dropped its
-        # window outright (slice(sort_array(collect_list())) in the groupBy
-        # it already does).
+        # windowGroupLimitThreshold stays at the Spark default: the
+        # engine's rank-filter windows (LSH band buckets, anchor buckets,
+        # link_budget top-k) have heavily repeated keys, where the partial
+        # map-side limit prunes most rows before the exchange.
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(arrow_batch_rows))
+        .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(ARROW_BATCH_ROWS))
         .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
         .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
         .config("spark.ui.enabled", "false")
