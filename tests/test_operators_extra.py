@@ -140,19 +140,17 @@ def test_substring_containment(spark):
 
 
 def test_substring_edges_on_corpus(spark):
-    """containment family docs are exact substrings — the anchor+substring
-    path must find them."""
+    """containment family docs are exact substrings — build_edges'
+    substring kind (the one substring path) must find them."""
     from webcrawler_spark.operators.lsh import build_edges
     from webcrawler_spark.operators.signatures import compute_signatures
-    from webcrawler_spark.operators.suffix import substring_edges
     from webcrawler_spark.sources.corpus import english_docs, generate_corpus
 
     corpus = generate_corpus(200, seed=42)
     docs = spark.createDataFrame(english_docs(corpus), "doc_id long, text string")
     sigs = compute_signatures(docs).cache()
-    edges = {
-        (r["a"], r["b"]) for r in substring_edges(sigs, docs).collect()
-    }
+    batch = build_edges(sigs, docs=docs).filter(F.col("kind") == "substring")
+    edges = {(r["a"], r["b"]) for r in batch.collect()}
     containment_truth = {
         (a, b) for a, b, fam in corpus.truth_pairs if fam == "containment"
     }
@@ -160,9 +158,6 @@ def test_substring_edges_on_corpus(spark):
     # exact dups are substrings of each other too; nothing else qualifies
     exact_truth = {(a, b) for a, b, fam in corpus.truth_pairs if fam == "exact"}
     assert edges <= containment_truth | exact_truth
-    # the standalone query and build_edges' substring kind are one path
-    batch = build_edges(sigs, docs=docs).filter(F.col("kind") == "substring")
-    assert edges == {(r["a"], r["b"]) for r in batch.collect()}
 
 
 def test_simhash_consistency_guards_tiny_and_near_dup_corpora(spark, tmp_path):

@@ -1,6 +1,8 @@
 """Property-based tests (hypothesis) for the pure-python core:
 normalization invariants, hashing algebra, oracle-vs-DSU consistency."""
 
+from pathlib import Path
+
 import numpy as np
 from hypothesis import given, settings, strategies as st
 
@@ -208,6 +210,17 @@ def _docstring_nodes(tree) -> set[int]:
     return out
 
 
+def _non_test_sources(root):
+    """The files whose calls count as production callers: the library,
+    tools/, perfbench/, bench.py and __spark_entry__.py."""
+    return (
+        sorted((root / "webcrawler_spark").rglob("*.py"))
+        + sorted((root / "tools").rglob("*.py"))
+        + sorted((root / "perfbench").rglob("*.py"))
+        + [root / "bench.py", root / "__spark_entry__.py"]
+    )
+
+
 def test_every_library_definition_has_a_non_test_caller():
     """Every top-level def/class under webcrawler_spark/ is named (as a
     Name, an Attribute, an import alias or an identifier string, not in a
@@ -215,18 +228,11 @@ def test_every_library_definition_has_a_non_test_caller():
     __spark_entry__.py. Library code that only tests reach is deleted
     instead; _TEST_ONLY_ALLOWED lists the exceptions."""
     import ast
-    from pathlib import Path
 
     root = Path(__file__).resolve().parent.parent
     lib = sorted((root / "webcrawler_spark").rglob("*.py"))
-    callers = (
-        lib
-        + sorted((root / "tools").rglob("*.py"))
-        + sorted((root / "perfbench").rglob("*.py"))
-        + [root / "bench.py", root / "__spark_entry__.py"]
-    )
     used: set[str] = set()
-    for path in callers:
+    for path in _non_test_sources(root):
         tree = ast.parse(path.read_text())
         docs = _docstring_nodes(tree)
         for n in ast.walk(tree):
@@ -293,3 +299,132 @@ def test_every_config_field_is_read():
         f.name for f in dataclasses.fields(DedupConfig) if f.name not in read
     )
     assert not unread, f"DedupConfig fields no caller reads: {unread}"
+
+
+
+# Defaulted parameters no non-test call passes, with the reason each stays.
+_UNSET_DEFAULT_ALLOWED = {
+    "operators/oracle.py:run_oracle(cfg)": "the reference mirrors the engine's signature",
+    "operators/oracle.py:true_pairs_bruteforce(cfg)": "the reference mirrors the engine's signature",
+}
+
+
+def _defaulted_parameters(tree):
+    """(qualname, callee name, parameter, positional index or None, is a
+    mutable record field) for every defaulted parameter of a function,
+    method or dataclass constructor. Methods are called through an
+    attribute, so ``self``/``cls`` takes no positional slot; ``__init__``
+    and dataclass fields are set by calling the class. DedupConfig's fields
+    are left to test_every_config_field_is_read: the config is the engine's
+    one set of thresholds, and a field must be read to earn its place."""
+    import ast
+
+    out = []
+
+    def visit(node, owner):
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, ast.ClassDef):
+                dc = [
+                    d for d in child.decorator_list
+                    if getattr(getattr(d, "func", d), "id", None) == "dataclass"
+                ]
+                if dc and child.name != "DedupConfig":
+                    frozen = any(
+                        k.arg == "frozen" and getattr(k.value, "value", False)
+                        for d in dc
+                        for k in getattr(d, "keywords", ())
+                    )
+                    fields = [s for s in child.body if isinstance(s, ast.AnnAssign)]
+                    out.extend(
+                        (child.name, child.name, f.target.id, i, not frozen)
+                        for i, f in enumerate(fields)
+                        if f.value is not None
+                    )
+                visit(child, child.name)
+            elif isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                a = child.args
+                pos = a.posonlyargs + a.args
+                if owner and pos and pos[0].arg in ("self", "cls"):
+                    pos = pos[1:]
+                callee = owner if child.name == "__init__" else child.name
+                qual = f"{owner}.{child.name}" if owner else child.name
+                first = len(pos) - len(a.defaults)
+                out.extend(
+                    (qual, callee, p.arg, i, False) for i, p in enumerate(pos) if i >= first
+                )
+                out.extend(
+                    (qual, callee, p.arg, None, False)
+                    for p, d in zip(a.kwonlyargs, a.kw_defaults)
+                    if d is not None
+                )
+                visit(child, None)
+            else:
+                visit(child, owner)
+
+    visit(tree, None)
+    return out
+
+
+def test_every_optional_parameter_is_passed():
+    """Every defaulted parameter of a function, method or dataclass
+    constructor under webcrawler_spark/ is passed, positionally or by
+    keyword, by at least one call (matched by callee name) in the library,
+    tools/, perfbench/, bench.py or __spark_entry__.py. A call with ``*args``
+    passes every positional slot, one with ``**kwargs`` every keyword. A
+    mutable dataclass is a record filled in place after construction
+    (``PageData()``, ``OracleResult()``), so its fields count as set when a
+    caller names them as an attribute. A call inside a function of the callee's own name (a
+    method forwarding its argument, e.g. to the RDD it wraps) does not
+    count. A parameter only tests set is a knob no production caller turns:
+    its one value in use becomes a constant. _UNSET_DEFAULT_ALLOWED lists
+    the exceptions."""
+    import ast
+    import math
+
+    root = Path(__file__).resolve().parent.parent
+    max_pos: dict[str, float] = {}
+    keywords: dict[str, set] = {}
+    named: set[str] = set()
+
+    def scan(node, enclosing):
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                scan(child, enclosing | {child.name})
+                continue
+            if isinstance(child, ast.Attribute):
+                named.add(child.attr)
+            if isinstance(child, ast.Call):
+                name = getattr(child.func, "id", getattr(child.func, "attr", None))
+                if name is not None and name not in enclosing:
+                    starred = any(isinstance(x, ast.Starred) for x in child.args)
+                    max_pos[name] = max(
+                        max_pos.get(name, 0), math.inf if starred else len(child.args)
+                    )
+                    keywords.setdefault(name, set()).update(
+                        k.arg if k.arg is not None else "**" for k in child.keywords
+                    )
+            scan(child, enclosing)
+
+    for path in _non_test_sources(root):
+        scan(ast.parse(path.read_text()), frozenset())
+    lib = root / "webcrawler_spark"
+    assert {k.split(":")[0] for k in _UNSET_DEFAULT_ALLOWED} <= {
+        p.relative_to(lib).as_posix() for p in lib.rglob("*.py")
+    }
+    unset = []
+    for path in sorted(lib.rglob("*.py")):
+        tree = ast.parse(path.read_text())
+        for qual, callee, param, idx, record in _defaulted_parameters(tree):
+            kw = keywords.get(callee, set())
+            passed = (
+                param in kw
+                or "**" in kw
+                or (idx is not None and max_pos.get(callee, 0) > idx)
+                or (record and param in named)
+            )
+            label = f"{path.relative_to(lib).as_posix()}:{qual}({param})"
+            if not passed and label not in _UNSET_DEFAULT_ALLOWED:
+                unset.append(label)
+    assert not unset, (
+        "defaulted parameters no non-test call passes:\n" + "\n".join(unset)
+    )

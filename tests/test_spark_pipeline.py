@@ -169,7 +169,7 @@ def test_extraction_single_execution_in_plan(spark, corpus_dir):
 
     web = with_doc_ids(spark.read.parquet(f"{corpus_dir}/web_pages.parquet"))
     staged = salted_repartition_by_domain(
-        extract_pages(web, passthrough=("doc_id",)), stats_from=web.select("url")
+        extract_pages(web), stats_from=web.select("url")
     )
     plan = staged._jdf.queryExecution().executedPlan().toString()
     assert plan.count("MapInPandas") == 1
@@ -476,6 +476,45 @@ def test_incremental_bridge_merges_old_clusters(spark):
     assert got[30] == got[31] == 30
 
 
+def test_incremental_exact_edges_star_per_hash(spark):
+    """A new copy of a page that three old docs share adds ONE exact edge,
+    to the group's smallest doc (lsh.exact_edges' star rule), not one per
+    old copy; the assignment still equals a full recompute."""
+    from webcrawler_spark.operators.incremental import (
+        build_dedup_state,
+        incremental_assign,
+        incremental_edges,
+    )
+
+    page = " ".join(f"gamma{i} gammax{i}" for i in range(12))
+    old = [
+        (5, page),
+        (7, page),
+        (9, page),
+        (11, "an unrelated old document with entirely different words in it"),
+    ]
+    new = [(20, page)]
+    schema = "doc_id long, text string"
+    all_df = spark.createDataFrame(old + new, schema)
+    state = build_dedup_state(spark.createDataFrame(old, schema), CFG)
+    new_sigs = compute_signatures(spark.createDataFrame(new, schema), CFG).cache()
+
+    edges = incremental_edges(state, new_sigs, CFG, docs=all_df).cache()
+    exact = edges.filter(F.col("kind") == "exact").collect()
+    assert {(r["a"], r["b"]) for r in exact} == {(5, 20)} and len(exact) == 1
+    got = {
+        r["doc_id"]: r["cluster_id"]
+        for r in incremental_assign(state, all_df, edges).collect()
+    }
+    full_edges = build_edges(compute_signatures(all_df, CFG), CFG, docs=all_df)
+    full = {
+        r["doc_id"]: r["cluster_id"]
+        for r in assign_clusters(all_df, full_edges).collect()
+    }
+    assert got == full
+    assert got[20] == 5 and got[11] == 11
+
+
 def test_incremental_state_parquet_round_trip(spark, docs_df, tmp_path):
     """The incremental path must work from PERSISTED stage outputs (the
     production shape: buckets/sigs/assignments are tables, not in-memory
@@ -573,13 +612,11 @@ def test_advance_state_chains_increments(spark, docs_df):
 
 
 def test_advance_state_shared_recap_equivalent(spark, docs_df):
-    """Round 6 optimization contract: ONE _touched_recap shared by
-    incremental_edges and advance_state (the `recap` parameter) yields
-    exactly the state tables and assignment of the unshared path — the
-    chained edges+advance sequence pays the touched-keys re-decision once
-    (ADVICE r5). Also pins the persisted_out unpersist hooks."""
+    """incremental_edges then advance_state, each building its own judged
+    table, yield exactly the state tables and assignment of a from-scratch
+    build over the concatenated corpus. Also pins the persisted_out
+    unpersist hooks: every block the increment stores is released."""
     from webcrawler_spark.operators.incremental import (
-        _touched_recap,
         advance_state,
         build_dedup_state,
         incremental_assign,
@@ -604,20 +641,14 @@ def test_advance_state_shared_recap_equivalent(spark, docs_df):
     for df in (docs_df, state0.sigs, sigs1, fresh1.sigs):
         df.count()
     before = stored()
-    persisted: list = []
     held: list = []
-    recap = _touched_recap(state0, sigs1, CFG, persisted_out=persisted)
-    edges1 = incremental_edges(
-        state0, sigs1, CFG, docs=docs01, recap=recap, persisted_out=held
-    )
+    edges1 = incremental_edges(state0, sigs1, CFG, docs=docs01, persisted_out=held)
     # union-find's own checkpoints are not the increment's blocks: they are
     # the RDDs registered while incremental_assign runs
     pre_assign = registered()
     assign1 = incremental_assign(state0, docs01, edges1)
     union_find = registered() - pre_assign
-    state1 = advance_state(
-        state0, sigs1, assign1, CFG, recap=recap, persisted_out=held
-    )
+    state1 = advance_state(state0, sigs1, assign1, CFG, persisted_out=held)
 
     def rows(df, *cols):
         return sorted(tuple(r[c] for c in cols) for r in df.collect())
@@ -637,11 +668,11 @@ def test_advance_state_shared_recap_equivalent(spark, docs_df):
     }
     assert got == want
 
-    # the unpersist hooks collected the recap's persisted intermediates
-    assert len(persisted) == 2
+    # the unpersist hooks collected every checkpoint: incremental_edges'
+    # batch rows, judged table, candidate pairs and tier-1 survivors, and
+    # advance_state's own batch rows and judged table
+    assert len(held) == 6
     assert stored() - before - union_find  # the increment did store blocks
-    for df in persisted:
-        df.unpersist()
     for df in held:
         df.unpersist()
     # ... and running the hooks frees every block the increment stored

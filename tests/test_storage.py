@@ -139,8 +139,7 @@ def test_iceberg_stage_roundtrip(spark, tmp_path):
 def test_iceberg_identifier_and_commit_flow_without_jar(tmp_path, monkeypatch):
     """Pins the jar-independent ~95% of the iceberg branch with a recording
     fake session: fully-qualified identifier construction, CREATE NAMESPACE,
-    writeTo(...).using('iceberg').partitionedBy(...).createOrReplace()
-    ordering, reads through spark.table on the SAME identifier, rows taken
+    writeTo(...).using('iceberg').createOrReplace() ordering, reads through spark.table on the SAME identifier, rows taken
     from the write's observed count, and the stage write -> metrics file ->
     manifest order (manifest LAST is the commit point; io.py commit_stage)."""
     calls = []
@@ -154,10 +153,6 @@ def test_iceberg_identifier_and_commit_flow_without_jar(tmp_path, monkeypatch):
 
         def using(self, fmt):
             calls.append(("using", self.ident, fmt))
-            return self
-
-        def partitionedBy(self, *cols):
-            calls.append(("partitionedBy", len(cols)))
             return self
 
         def createOrReplace(self):
@@ -213,13 +208,12 @@ def test_iceberg_identifier_and_commit_flow_without_jar(tmp_path, monkeypatch):
         calls.append(("metrics_file", os.path.dirname(dst), os.path.exists(mpath)))
 
     monkeypatch.setattr(io_mod.os, "replace", recording_replace)
-    out = st.commit_stage("sigs", FakeStageDF(), partition_by=["domain"])
+    out = st.commit_stage("sigs", FakeStageDF())
     monkeypatch.undo()
 
     assert ("sql", "CREATE NAMESPACE IF NOT EXISTS prodcat.dedup") in calls
     assert ("writeTo", "prodcat.dedup.r7_sigs") in calls
     assert ("using", "prodcat.dedup.r7_sigs", "iceberg") in calls
-    assert ("partitionedBy", 1) in calls
     assert ("createOrReplace", "prodcat.dedup.r7_sigs") in calls
     # the row count rides the write itself
     assert calls.index(("observe", 1)) < calls.index(("writeTo", "prodcat.dedup.r7_sigs"))

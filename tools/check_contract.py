@@ -1,6 +1,7 @@
 """Local replica of the driver's correctness gate: run every queries() entry
 on Spark and its oracle_sql() on DuckDB at sf0.01; compare row count, column
-names, and order-insensitive values.
+names, and order-insensitive values. Entries whose oracle is the same SQL
+text (dedup_incremental's is dedup_clusters') run it on DuckDB once.
 
 Usage: python tools/check_contract.py [sf_dir] [query ...]
 """
@@ -65,6 +66,7 @@ def main() -> int:
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
 
     qs, os_ = e.queries(), e.oracle_sql()
+    oracle_results: dict[str, tuple[list, list]] = {}  # SQL text -> (cols, rows)
     failures = []
     for name, fn in qs.items():
         if only and name not in only:
@@ -81,9 +83,11 @@ def main() -> int:
             print(f"ROWS  {name}: {len(srows)} rows (no oracle)")
             continue
         try:
-            res = con.execute(os_[name])
-            dcols = [d[0] for d in res.description]
-            drows = res.fetchall()
+            sql = os_[name]
+            if sql not in oracle_results:
+                res = con.execute(sql)
+                oracle_results[sql] = ([d[0] for d in res.description], res.fetchall())
+            dcols, drows = oracle_results[sql]
         except Exception as exc:
             failures.append(name)
             print(f"FAIL  {name}: duckdb error: {exc}")

@@ -42,7 +42,7 @@ if stage == "extract":
 
     def run():
         return salted_repartition_by_domain(
-            extract_pages(web, passthrough=("doc_id",)),
+            extract_pages(web),
             stats_from=web.select("url"),
         ).count()
 elif stage == "signatures":
@@ -95,7 +95,7 @@ from webcrawler_spark.plans.pipeline import with_doc_ids
 spark = get_spark("prep", master="local[16]", shuffle_partitions=64)
 spark.sparkContext.setLogLevel("ERROR")
 web = with_doc_ids(spark.read.parquet({web!r}))
-docs = good_pages(extract_pages(web, passthrough=("doc_id",))).select(
+docs = good_pages(extract_pages(web)).select(
     "doc_id", "url", "text")
 docs.write.mode("overwrite").parquet({docs_out!r})
 docs2 = spark.read.parquet({docs_out!r})

@@ -42,14 +42,14 @@ _HEADINGS = frozenset({"h1", "h2", "h3", "h4", "h5", "h6"})
 
 @dataclass
 class PageData:
-    """The reference's one row type (types/pageData.go:6-28)."""
+    """The reference's one row type (types/pageData.go:6-28), minus its
+    MetaKeywords field, which the reference never sets."""
 
     url: str = ""
     canonical_url: str = ""
     title: str = ""
     charset: str = ""
     meta_description: str = ""
-    meta_keywords: str = ""  # dead field in the reference; kept for parity
     language: str = ""
     headings: dict[str, list[str]] = field(default_factory=dict)
     alt_texts: list[str] = field(default_factory=list)

@@ -5,10 +5,12 @@ scatter/gather (worker_pool.go:52-134, gob IPC) is replaced by Spark's own
 executor -> Python-worker Arrow protocol; batch size is bounded by
 ``spark.sql.execution.arrow.maxRecordsPerBatch``.
 
-The language filter F1 runs BEFORE this stage when the input carries a
-trusted ``lang`` column (it's an input column — Catalyst pushes the predicate
-into the parquet scan); the extractor still enforces its own gate from
-``<html lang>`` for parity, emitting error rows, never exceptions.
+The input's ``doc_id`` rides through the stage, so downstream stages need
+no join back to the input. The language filter F1 runs BEFORE this stage
+when the input carries a trusted ``lang`` column (it's an input column —
+Catalyst pushes the predicate into the parquet scan); the extractor still
+enforces its own gate from ``<html lang>`` for parity, emitting error
+rows, never exceptions.
 """
 
 from __future__ import annotations
@@ -50,15 +52,12 @@ PAGE_SCHEMA = T.StructType(
 )
 
 
-def _extract_batches(
-    batches: Iterator[pd.DataFrame], passthrough: tuple[str, ...] = ()
-) -> Iterator[pd.DataFrame]:
+def _extract_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     from webcrawler_spark.extract.urlutil import get_domain, URLError
 
     for pdf in batches:
         out: dict[str, list] = {f.name: [] for f in PAGE_SCHEMA.fields}
-        for c in passthrough:
-            out[c] = pdf[c].tolist()
+        out["doc_id"] = pdf["doc_id"].tolist()
         for url, warc_ts, html in zip(pdf["url"], pdf["warc_ts"], pdf["html"]):
             pd_ = gate_and_extract(bytes(html) if html is not None else b"", url)
             try:
@@ -89,32 +88,23 @@ def _extract_batches(
         yield pd.DataFrame(out)
 
 
-def extract_pages(
-    web_pages: DataFrame,
-    prefilter_lang: bool = True,
-    passthrough: tuple[str, ...] = (),
-) -> DataFrame:
-    """web_pages(url, warc_ts, html[, lang]) -> pages(PAGE_SCHEMA [+ passthrough]).
+def extract_pages(web_pages: DataFrame) -> DataFrame:
+    """web_pages(url, warc_ts, html, doc_id[, lang]) -> pages(PAGE_SCHEMA +
+    doc_id).
 
     When a trusted ``lang`` column exists, F1 runs as a pushed-down scan
     predicate first (cheap, avoids parsing non-en pages at all); the
     extractor's own <html lang> gate still applies inside the UDF.
-
-    ``passthrough`` columns (e.g. a precomputed doc_id) ride through the
-    Arrow stage so downstream stages need no join back to the input.
     """
     df = web_pages
-    if prefilter_lang and "lang" in df.columns:
+    if "lang" in df.columns:
         df = df.filter(
             F.col("lang").isNull()
             | (F.lower(F.split(F.col("lang"), "-")[0]) == "en")
         )
-    schema = T.StructType(
-        PAGE_SCHEMA.fields
-        + [df.schema[c] for c in passthrough]
-    )
-    return df.select("url", "warc_ts", "html", *passthrough).mapInPandas(
-        lambda it: _extract_batches(it, passthrough), schema=schema
+    schema = T.StructType(PAGE_SCHEMA.fields + [df.schema["doc_id"]])
+    return df.select("url", "warc_ts", "html", "doc_id").mapInPandas(
+        _extract_batches, schema=schema
     )
 
 

@@ -90,7 +90,7 @@ class Storage:
         manifest = self.read_manifest(stage)
         return manifest is not None and manifest.get("config_hash") == self.config_hash
 
-    def commit_stage(self, stage: str, df: DataFrame, partition_by: list[str] | None = None) -> DataFrame:
+    def commit_stage(self, stage: str, df: DataFrame) -> DataFrame:
         """Write the stage output, record lineage metrics, write the manifest
         LAST (commit point: a crash mid-write leaves no manifest => re-run).
 
@@ -107,16 +107,10 @@ class Storage:
                 f"CREATE NAMESPACE IF NOT EXISTS "
                 f"{self.iceberg_catalog}.{self.iceberg_namespace}"
             )
-            writer = df.writeTo(self.stage_table(stage)).using("iceberg")
-            if partition_by:
-                writer = writer.partitionedBy(*[F.col(c) for c in partition_by])
-            writer.createOrReplace()
+            df.writeTo(self.stage_table(stage)).using("iceberg").createOrReplace()
             os.makedirs(path, exist_ok=True)  # manifest home
         else:
-            writer = df.write.mode("overwrite")
-            if partition_by:
-                writer = writer.partitionBy(*partition_by)
-            writer.parquet(path)
+            df.write.mode("overwrite").parquet(path)
         out = self.read_stage(stage)
         rows = obs.get["rows"]
         self._append_metrics(stage, {"rows_out": rows, "commit_secs": time.time() - t0})

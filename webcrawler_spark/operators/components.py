@@ -31,6 +31,9 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+# star rounds before connected_components gives up (O(log n) in practice)
+MAX_STAR_ROUNDS = 50
+
 
 def _min_label_components(
     u: np.ndarray, v: np.ndarray
@@ -131,9 +134,7 @@ def _is_min_rooted_star_forest(edges: DataFrame) -> bool:
     )
 
 
-def connected_components(
-    edges: DataFrame, max_iterations: int = 50
-) -> DataFrame:
+def connected_components(edges: DataFrame) -> DataFrame:
     """edges(a, b) -> assignments(doc_id, cluster_id = component min) for
     every node that appears in an edge (isolated nodes are absent — callers
     coalesce).
@@ -145,7 +146,7 @@ def connected_components(
     rounds run here, one job each, until `_is_min_rooted_star_forest` holds
     — the alternating algorithm's fixpoints are exactly those forests
     (Kiveris et al. §3) — and a graph that needs more than
-    ``max_iterations`` rounds raises RuntimeError; the members ∪ roots tail
+    ``MAX_STAR_ROUNDS`` rounds raises RuntimeError; the members ∪ roots tail
     is left to the caller's first action."""
     cur = (
         edges.select(F.col("a").alias("u"), F.col("b").alias("v"))
@@ -161,14 +162,14 @@ def connected_components(
         return cur.sparkSession.createDataFrame(
             pa.table({"doc_id": nodes, "cluster_id": roots})
         )
-    for _ in range(max_iterations):
+    for _ in range(MAX_STAR_ROUNDS):
         # the test job materializes the checkpoint as a side effect
         if _is_min_rooted_star_forest(cur):
             break
         cur = _small_star(_large_star(cur)).localCheckpoint(eager=False)
     else:
         raise RuntimeError(
-            f"connected_components: no fixpoint in {max_iterations} iterations"
+            f"connected_components: no fixpoint in {MAX_STAR_ROUNDS} iterations"
         )
 
     # At the fixpoint every edge is (node, component-min). A node can also be

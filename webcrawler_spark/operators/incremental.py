@@ -44,12 +44,12 @@ Materialization: each intermediate that several branches of one plan read
 (the batch's bucket rows, the judged table, the candidate pairs and, with
 the substring pass, the tier-1 survivors) is a lazy local checkpoint, built
 once with no Spark job per reader. Defining one runs the stages above it,
-so ``_touched_recap`` and ``incremental_edges`` run Spark jobs when called,
-and ``advance_state`` does when it builds its own recap; a checkpoint's
-last stage runs in the first action that reads it. ``persisted_out``
-collects one release handle per checkpoint, and ``unpersist()`` on a handle
-frees its blocks. A checkpoint cuts lineage, so frames derived from a
-released one cannot be evaluated again: write or collect the outputs first.
+so ``incremental_edges`` and ``advance_state``, which each build the judged
+table, run Spark jobs when called; a checkpoint's last stage runs in the
+first action that reads it. ``persisted_out`` collects one release handle
+per checkpoint, and ``unpersist()`` on a handle frees its blocks. A
+checkpoint cuts lineage, so frames derived from a released one cannot be
+evaluated again: write or collect the outputs first.
 
 Equivalence to full recompute (the driver-checked contract —
 ``dedup_incremental``'s oracle is the full-recompute SQL over the
@@ -83,6 +83,7 @@ from webcrawler_spark.operators.lsh import (
     _verified_edges,
     bucket_rows,
     build_edges,
+    exact_edges,
     unified_capped_buckets,
 )
 
@@ -120,17 +121,13 @@ class DedupState:
     kept_anchor_counts: DataFrame
 
 
-def build_dedup_state(
-    docs: DataFrame, cfg: DedupConfig = DEFAULT_CONFIG, sigs: DataFrame | None = None
-) -> DedupState:
+def build_dedup_state(docs: DataFrame, cfg: DedupConfig = DEFAULT_CONFIG) -> DedupState:
     """Full batch pass over an existing corpus, returning the stage outputs
-    an increment needs. ``sigs`` may be supplied when the signature stage is
-    already materialized (the usual case for a resumed pipeline)."""
+    an increment needs. The signature table is persisted; the caller
+    unpersists ``sigs`` once the state is written."""
     from webcrawler_spark.operators.signatures import compute_signatures
 
-    if sigs is None:
-        sigs = compute_signatures(docs, cfg)
-    sigs = sigs.persist()
+    sigs = compute_signatures(docs, cfg).persist()
     edges = build_edges(sigs, cfg, docs=docs)
     assignments = assign_clusters(docs, edges).select("doc_id", "cluster_id")
     dropped = (
@@ -158,8 +155,8 @@ class _CheckpointBlocks:
     def __init__(self, checkpointed: DataFrame) -> None:
         self._rdd = checkpointed._jdf.queryExecution().analyzed().rdd()
 
-    def unpersist(self, blocking: bool = False) -> _CheckpointBlocks:
-        self._rdd.unpersist(blocking)
+    def unpersist(self) -> _CheckpointBlocks:
+        self._rdd.unpersist(False)
         return self
 
 
@@ -185,7 +182,7 @@ def _touched_recap(
     state: DedupState,
     new_sigs: DataFrame,
     cfg: DedupConfig,
-    persisted_out: list | None = None,
+    persisted_out: list | None,
 ) -> DataFrame:
     """The batch's judged table (gen, key, doc_id, is_new, rn, sz, keep):
     every bucket row of every key the batch touches, the state's rows
@@ -194,9 +191,8 @@ def _touched_recap(
     are removed from the batch's rows first (DedupState docstring). Batch
     doc_ids must be disjoint from the state's.
 
-    ``incremental_edges`` and ``advance_state`` both derive everything from
-    this table: a caller running both for one batch builds it once and
-    passes it as their ``recap``. ``persisted_out`` receives two release
+    ``incremental_edges`` and ``advance_state`` each derive everything
+    they need from this table. ``persisted_out`` receives two release
     handles, for the batch's bucket rows and for the judged table. Calling
     this runs Spark jobs: the dropped-key anti join, the by-key fetch of
     the state's rows and the exchange before the window.
@@ -272,21 +268,25 @@ def incremental_edges(
     new_sigs: DataFrame,
     cfg: DedupConfig = DEFAULT_CONFIG,
     docs: DataFrame | None = None,
-    recap: DataFrame | None = None,
     persisted_out: list | None = None,
 ) -> DataFrame:
     """Edges with >= 1 new-batch side: exact / near / containment /
     substring kinds, same thresholds and verify as
     the batch path. ``docs`` (doc_id, text over old + new) enables the
-    substring pass, exactly as in ``build_edges``. ``recap`` is the batch's
-    judged table from ``_touched_recap``; it is built here when absent.
-    Batch doc_ids must be disjoint from the state's (module doc).
+    substring pass, exactly as in ``build_edges``. Batch doc_ids must be
+    disjoint from the state's (module doc).
 
-    Calling this runs Spark jobs: the recap's when it is built here, then
-    the pair-grouping shuffles above the candidate-pair checkpoint and,
-    with the substring pass, the tier-1 joins above the survivors'
+    Exact edges follow ``lsh.exact_edges``' one rule: each sha256 group
+    the batch touches is a star on its smallest member, over the batch's
+    docs plus the group's smallest old doc (the old members are already
+    linked to it), so a new copy of a page G old docs share adds one edge,
+    not G.
+
+    Calling this runs Spark jobs: the judged table's (``_touched_recap``),
+    then the pair-grouping shuffles above the candidate-pair checkpoint
+    and, with the substring pass, the tier-1 joins above the survivors'
     checkpoint. ``persisted_out`` receives those checkpoints' release
-    handles (and the recap's, when built here).
+    handles.
 
     Scale shape: touched keys are bounded by |batch| x keys-per-doc;
     every window/groupBy below runs over touched keys only. The one
@@ -294,9 +294,7 @@ def incremental_edges(
     against a key-partitioned stage table (big side stays put; the per-doc
     kept-anchor aggregate is itself a state table, refreshed with the same
     touched-keys delta)."""
-    judged = recap if recap is not None else _touched_recap(
-        state, new_sigs, cfg, persisted_out
-    )
+    judged = _touched_recap(state, new_sigs, cfg, persisted_out)
     # the pair aggregation already hash-partitions on (gen, a, b), so the
     # repartition adds no exchange; its explicit count pins the partitioning
     cand = _checkpoint(
@@ -327,20 +325,15 @@ def incremental_edges(
         # two readers: the verify union and the substring length gate
         tier1 = _checkpoint(tier1, persisted_out)
 
-    # exact (sha256) edges: new docs against the whole corpus (old + new) —
-    # a scalar hash join, never raw text
-    sha_new = new_sigs.select("sha256", F.col("doc_id").alias("nid"))
-    sha_all = all_sigs.select("sha256", F.col("doc_id").alias("oid"))
-    exact = (
-        sha_new.join(sha_all, "sha256")
-        .filter(F.col("nid") != F.col("oid"))
-        .select(
-            F.least("nid", "oid").alias("a"),
-            F.greatest("nid", "oid").alias("b"),
-            F.lit("exact").alias("kind"),
-        )
-        .distinct()
+    # exact (sha256) edges: a scalar hash join, never raw text
+    new_members = new_sigs.select("sha256", "doc_id")
+    old_min = (
+        state.sigs.select("sha256", "doc_id")
+        .join(new_members.select("sha256"), "sha256", "left_semi")
+        .groupBy("sha256")
+        .agg(F.min("doc_id").alias("doc_id"))
     )
+    exact = exact_edges(new_members.unionByName(old_min))
     return exact.unionByName(_verified_edges(cand, tier1, all_sigs, cfg, docs))
 
 
@@ -370,21 +363,16 @@ def incremental_dedup(
     new_docs: DataFrame,
     all_docs: DataFrame,
     cfg: DedupConfig = DEFAULT_CONFIG,
-    persisted_out: list | None = None,
 ) -> DataFrame:
     """Convenience end-to-end increment: signatures for the new batch only,
     incremental edges, seeded assignment. ``all_docs`` = old + new (doc_id,
     text) — used for the substring pass and the assignment's doc universe.
-    ``persisted_out`` collects the persisted batch signatures and every
-    release handle ``incremental_edges`` registers."""
+    The batch signatures and the edge intermediates stay stored for the
+    session."""
     from webcrawler_spark.operators.signatures import compute_signatures
 
     new_sigs = compute_signatures(new_docs, cfg).persist()
-    if persisted_out is not None:
-        persisted_out.append(new_sigs)
-    edges = incremental_edges(
-        state, new_sigs, cfg, docs=all_docs, persisted_out=persisted_out
-    )
+    edges = incremental_edges(state, new_sigs, cfg, docs=all_docs)
     return incremental_assign(state, all_docs, edges)
 
 
@@ -393,7 +381,6 @@ def advance_state(
     new_sigs: DataFrame,
     new_assignments: DataFrame,
     cfg: DedupConfig = DEFAULT_CONFIG,
-    recap: DataFrame | None = None,
     persisted_out: list | None = None,
 ) -> DedupState:
     """Fold an absorbed batch INTO the state, so increments chain: the
@@ -411,14 +398,11 @@ def advance_state(
     - assignments: the increment's output (callers pass what
       ``incremental_assign``/``incremental_dedup`` returned).
 
-    Pass the ``recap`` the batch's ``incremental_edges`` call used (from
-    ``_touched_recap``) to build the judged table once per batch; without
-    it this call builds it again, running its Spark jobs, and registers
-    its release handles in ``persisted_out``.
+    Calling this builds the batch's judged table (``_touched_recap``),
+    running its Spark jobs, and registers its release handles in
+    ``persisted_out``.
     """
-    judged = recap if recap is not None else _touched_recap(
-        state, new_sigs, cfg, persisted_out
-    )
+    judged = _touched_recap(state, new_sigs, cfg, persisted_out)
     buckets_next = state.buckets.join(
         judged.select("gen", "key"), ["gen", "key"], "left_anti"
     ).unionByName(judged.filter(F.col("keep")).select("gen", "key", "doc_id"))

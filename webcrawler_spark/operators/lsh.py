@@ -171,12 +171,13 @@ def verify_candidates(
     )
 
 
-def exact_edges(sigs: DataFrame) -> DataFrame:
-    """B1: sha256 groups -> (min_id, other) edges."""
+def exact_edges(members: DataFrame) -> DataFrame:
+    """B1: (sha256, doc_id) member rows -> exact edges (a, b, kind): each
+    sha256 group is a star on its smallest member, one (min member, member)
+    edge per other member."""
     w = Window.partitionBy("sha256")
     return (
-        sigs.select("sha256", "doc_id")
-        .withColumn("root", F.min("doc_id").over(w))
+        members.withColumn("root", F.min("doc_id").over(w))
         .filter(F.col("doc_id") != F.col("root"))
         .select(
             F.col("root").alias("a"),
@@ -362,6 +363,6 @@ def build_edges(
         tier1 = tier1.persist()
         if persisted_out is not None:
             persisted_out.append(tier1)
-    return exact_edges(sigs).unionByName(
+    return exact_edges(sigs.select("sha256", "doc_id")).unionByName(
         _verified_edges(cand, tier1, sigs, cfg, docs)
     )

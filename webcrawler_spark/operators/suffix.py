@@ -2,9 +2,12 @@
 of doc B.
 
 Shingle-set containment (lsh.py) catches token-level containment; this
-operator emits the EXACT substring relation. Candidates are the anchor
-generator's tier-1 survivors (shared rare shingles, ``lsh._tier1_survivors``
-with their char lengths). A length gate on those lengths runs first, with
+operator emits the EXACT substring relation. ``lsh.build_edges`` (and the
+increment's ``incremental_edges``, through the same verify tail) is the one
+path that runs it, as the substring step of the edge union: its callers
+read the ``substring`` kind. Candidates are the anchor generator's tier-1
+survivors (shared rare shingles, ``lsh._tier1_survivors`` with their char
+lengths). A length gate on those lengths runs first, with
 no text re-scan: equal-length pairs are exact edges or nothing, and an
 empty side never contains or is contained. Only the surviving pairs' texts
 are joined, and each pair is checked with one ``small in big`` search
@@ -56,8 +59,7 @@ def substring_length_gate() -> Column:
 def gated_substring_edges(tier1: DataFrame, docs: DataFrame) -> DataFrame:
     """Tier-1 survivors (a, b, len_a, len_b) + docs (doc_id, text) ->
     exact-substring edges (a, b, kind='substring'): the length gate, then
-    the text verify. The substring step of lsh.build_edges and of
-    ``substring_edges``.
+    the text verify. The substring step of lsh.build_edges.
 
     Texts are joined per surviving pair, so a doc in k pairs ships its
     text k times. k is bounded by the tier-1 estimate (~ true-positive
@@ -90,43 +92,3 @@ def gated_substring_edges(tier1: DataFrame, docs: DataFrame) -> DataFrame:
     return joined.mapInPandas(gen, schema=_PAIR_SCHEMA).select(
         "a", "b", F.lit("substring").alias("kind")
     )
-
-
-def substring_edges(
-    sigs: DataFrame, docs: DataFrame, cfg=None, persisted_out=None
-) -> DataFrame:
-    """Exact-substring edges (a, b, kind='substring') over the anchor
-    candidates: the substring-kind edges lsh.build_edges(sigs, cfg,
-    docs=docs) emits, without running the other
-    generators or kinds. ``docs`` needs (doc_id, text).
-
-    The capped anchor buckets are persisted (the pair grouping and the
-    kept-anchor counts both read them); when ``persisted_out`` is given
-    they are appended to it for the caller to ``unpersist()`` after the
-    edges are materialized."""
-    from webcrawler_spark.config import DEFAULT_CONFIG
-    from webcrawler_spark.operators.lsh import (
-        _kept_anchor_counts,
-        _pairs_from_unified,
-        _tier1_survivors,
-        unified_capped_buckets,
-    )
-
-    cfg = cfg or DEFAULT_CONFIG
-    # the gen filter is pushed below both cap windows and through the
-    # bucket union: only the anchor stream is exploded
-    capped = (
-        unified_capped_buckets(sigs, cfg)
-        .filter(F.col("gen") == "anchor")
-        .persist()
-    )
-    if persisted_out is not None:
-        persisted_out.append(capped)
-    tier1 = _tier1_survivors(
-        _pairs_from_unified(capped),
-        _kept_anchor_counts(capped),
-        sigs,
-        cfg,
-        with_len=True,
-    )
-    return gated_substring_edges(tier1, docs)

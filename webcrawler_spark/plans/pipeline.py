@@ -31,37 +31,43 @@ from webcrawler_spark.operators.components import assign_clusters
 from webcrawler_spark.operators.lsh import build_edges
 from webcrawler_spark.operators.signatures import compute_signatures
 
+# task waves per core that tune_split_size sizes an Arrow stage's splits for
+SPLIT_WAVES_PER_CORE = 4
+# re-key rounds before resolve_id_collisions gives up (~2 expected)
+MAX_ID_ROUNDS = 8
 
-def domain_expr(url_col: str = "url"):
-    """JVM-side domain (F11 analog for partitioning; the Go-parity domain is
-    computed inside the extract UDF). parse_url HOST minus leading www."""
+
+def domain_expr():
+    """JVM-side domain of the ``url`` column (F11 analog for partitioning;
+    the Go-parity domain is computed inside the extract UDF). parse_url
+    HOST minus leading www."""
     return F.regexp_replace(
-        F.parse_url(F.col(url_col), F.lit("HOST")), r"^www\.", ""
+        F.parse_url(F.col("url"), F.lit("HOST")), r"^www\.", ""
     )
 
 
 def salted_repartition_by_domain(
     df: DataFrame,
     cfg: DedupConfig = DEFAULT_CONFIG,
-    num_partitions: int | None = None,
-    stats_from: DataFrame | None = None,
+    *,
+    stats_from: DataFrame,
 ) -> DataFrame:
     """B13: the politeness/frontier mirror. Partition by domain so each
     domain's pages co-locate (per-domain semantics, rate_limiter.go:49-50),
     salting mega-domains (> threshold rows) across cfg.mega_domain_salts
     partitions so one hot domain cannot serialize a stage — the fix for the
-    reference's head-of-line blocking on a hot domain's mutex.
+    reference's head-of-line blocking on a hot domain's mutex. The output
+    has the session's shuffle partition count.
 
-    ``stats_from``: optional cheap source (just a url column) for the
-    mega-domain counts. When ``df`` sits on top of an expensive subtree
-    (e.g. the Arrow extraction UDF — Spark cannot column-prune through
-    mapInPandas), passing the RAW input here keeps that subtree
-    single-consumer, so extraction executes exactly once. Raw counts are a
-    slight overcount of the extracted rows (error rows included) — fine for
-    a salting threshold."""
-    stats = stats_from if stats_from is not None else df
+    ``stats_from`` is the cheap source (just a url column) of the
+    mega-domain counts. ``df`` sits on top of an expensive subtree (the
+    Arrow extraction UDF — Spark cannot column-prune through mapInPandas),
+    so counting the RAW input here keeps that subtree single-consumer and
+    extraction executes exactly once. Raw counts are a slight overcount of
+    the extracted rows (error rows included) — fine for a salting
+    threshold."""
     dom = df.withColumn("_domain", domain_expr())
-    counts = stats.withColumn("_domain", domain_expr()).groupBy("_domain").count()
+    counts = stats_from.withColumn("_domain", domain_expr()).groupBy("_domain").count()
     mega = counts.filter(F.col("count") > cfg.mega_domain_threshold).select(
         "_domain", F.lit(True).alias("_is_mega")
     )
@@ -76,15 +82,13 @@ def salted_repartition_by_domain(
         )
         .drop("_is_mega")
     )
-    parts = num_partitions or df.sparkSession.conf.get("spark.sql.shuffle.partitions")
-    return salted.repartition(int(parts), "_domain", "_salt").drop("_domain", "_salt")
+    parts = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    return salted.repartition(parts, "_domain", "_salt").drop("_domain", "_salt")
 
 
-def tune_split_size(
-    spark: SparkSession, path: str, waves_per_core: int = 4
-) -> int:
+def tune_split_size(spark: SparkSession, path: str) -> int:
     """Size file splits for the NEXT (CPU-bound Arrow) stage so every core
-    gets >= `waves_per_core` task waves.
+    gets >= ``SPLIT_WAVES_PER_CORE`` task waves.
 
     The JVM-scan default (32 MB splits) is right for columnar aggregation,
     but an Arrow UDF chews ~5-10 MB/s/core — at small total input the
@@ -122,7 +126,7 @@ def tune_split_size(
         spark.conf.set("spark.sql.files.openCostInBytes", str(4 << 20))
         return default
     cores = spark.sparkContext.defaultParallelism
-    per = max(1 << 20, min(default, total // max(1, cores * waves_per_core)))
+    per = max(1 << 20, min(default, total // max(1, cores * SPLIT_WAVES_PER_CORE)))
     spark.conf.set("spark.sql.files.maxPartitionBytes", str(per))
     spark.conf.set(
         "spark.sql.files.openCostInBytes", str(max(per // 8, 128 << 10))
@@ -130,11 +134,8 @@ def tune_split_size(
     return per
 
 
-def resolve_id_collisions(
-    docs: DataFrame, key_col: str = "url", id_col: str = "doc_id",
-    max_rounds: int = 8,
-) -> DataFrame:
-    """Make ``id_col`` collision-free across distinct ``key_col`` values.
+def resolve_id_collisions(docs: DataFrame) -> DataFrame:
+    """Make ``doc_id`` collision-free across distinct ``url`` values.
 
     At 10^12 docs a raw xxhash64(url) id has ~n^2/2^65 ≈ 27k expected
     birthday collisions, each silently fusing two unrelated documents into
@@ -152,37 +153,37 @@ def resolve_id_collisions(
     the cheapest possible full pass — and the common zero-collision round
     exits without touching the data."""
     out = docs
-    for salt in range(1, max_rounds + 1):
+    for salt in range(1, MAX_ID_ROUNDS + 1):
         dup_ids = (
-            out.groupBy(id_col)
-            .agg(F.count_distinct(key_col).alias("_nk"))
+            out.groupBy("doc_id")
+            .agg(F.count_distinct("url").alias("_nk"))
             .filter(F.col("_nk") > 1)
-            .select(id_col)
+            .select("doc_id")
         )
         if dup_ids.isEmpty():
             return out
         # split via broadcast flag so the re-rank window shuffles ONLY the
         # colliding rows (a few per collision), never the full table
         flagged = out.join(
-            F.broadcast(dup_ids.withColumn("_dup", F.lit(True))), id_col, "left"
+            F.broadcast(dup_ids.withColumn("_dup", F.lit(True))), "doc_id", "left"
         )
         clean = flagged.filter(F.col("_dup").isNull()).drop("_dup")
-        w = Window.partitionBy(id_col).orderBy(key_col)
+        w = Window.partitionBy("doc_id").orderBy("url")
         rekeyed = (
             flagged.filter(F.col("_dup").isNotNull())
             .withColumn("_rk", F.dense_rank().over(w))
             .withColumn(
-                id_col,
+                "doc_id",
                 F.when(
                     F.col("_rk") > 1,
-                    F.xxhash64(F.col(key_col), F.lit(salt)),
-                ).otherwise(F.col(id_col)),
+                    F.xxhash64(F.col("url"), F.lit(salt)),
+                ).otherwise(F.col("doc_id")),
             )
             .drop("_dup", "_rk")
         )
         out = clean.unionByName(rekeyed)
     raise RuntimeError(
-        f"resolve_id_collisions: collisions persisted after {max_rounds} rounds"
+        f"resolve_id_collisions: collisions persisted after {MAX_ID_ROUNDS} rounds"
     )
 
 
@@ -234,7 +235,7 @@ def run_pipeline(
     pages = timed_stage(
         "extract",
         lambda: salted_repartition_by_domain(
-            extract_pages(web, passthrough=("doc_id",)),
+            extract_pages(web),
             cfg,
             stats_from=web.select("url"),
         ),

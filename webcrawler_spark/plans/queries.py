@@ -46,21 +46,25 @@ def _text_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _cache_partitions(path: str, bytes_per_part: int = 32 * 1024 * 1024) -> int:
-    """Partition count for a CACHED derivative of `path`, sized from the
-    input bytes (guide §2.2 "fewer, larger partitions"): cached signature/
-    feature tables are scanned many times per query, and each warm scan
-    pays a task launch per partition — a cache split by core count costs
-    more in task overhead than it wins in parallelism once partitions drop
-    below a few MB. Scale-adaptive by construction: a 100 TB input yields
-    ~3M partitions, the 6 MB contract table yields 1."""
+# input bytes per partition of a cached derivative (_cache_partitions)
+CACHE_PART_BYTES = 32 * 1024 * 1024
+
+
+def _cache_partitions(path: str) -> int:
+    """Partition count for a CACHED derivative of `path`, one per
+    ``CACHE_PART_BYTES`` of input (guide §2.2 "fewer, larger partitions"):
+    cached signature/feature tables are scanned many times per query, and
+    each warm scan pays a task launch per partition — a cache split by core
+    count costs more in task overhead than it wins in parallelism once
+    partitions drop below a few MB. Scale-adaptive by construction: a
+    100 TB input yields ~3M partitions, the 6 MB contract table yields 1."""
     import os
 
     try:
         size = os.path.getsize(path)
     except OSError:
         return 8
-    return max(1, (size + bytes_per_part - 1) // bytes_per_part)
+    return max(1, (size + CACHE_PART_BYTES - 1) // CACHE_PART_BYTES)
 
 
 # --------------------------------------------------------------------------
@@ -982,8 +986,8 @@ def q_extract_visible_text(spark, sf_dir):
     run the full extraction stage, and return the extracted text — the
     oracle is the identity on documents.
 
-    doc_id rides through the Arrow stage as a passthrough column, so no
-    join back on url is needed. The scan is repartitioned before the Arrow
+    doc_id rides through the Arrow stage (``extract_pages``), so no join
+    back on url is needed. The scan is repartitioned before the Arrow
     stage for the reason ``_text_docs`` gives."""
     from webcrawler_spark.extract.spark_extract import extract_pages, good_pages
 
@@ -1003,7 +1007,7 @@ def q_extract_visible_text(spark, sf_dir):
         ).alias("html"),
         F.col("doc_id"),
     )
-    pages = good_pages(extract_pages(web, passthrough=("doc_id",)))
+    pages = good_pages(extract_pages(web))
     return pages.select("doc_id", "text")
 
 
@@ -1056,12 +1060,7 @@ def _extracted_pages(spark, sf_dir):
     # doc_id rides through the Arrow stage (see q_extract_visible_text)
     from webcrawler_spark.extract.spark_extract import extract_pages, good_pages
 
-    web = _page_df(spark, sf_dir)
-    return good_pages(
-        extract_pages(
-            web.select("url", "warc_ts", "html", "doc_id"), passthrough=("doc_id",)
-        )
-    )
+    return good_pages(extract_pages(_page_df(spark, sf_dir)))
 
 
 def q_link_classification(spark, sf_dir):
@@ -1194,10 +1193,9 @@ def _doc_signatures(spark, sf_dir):
     writes signatures to parquet instead.
 
     The cache holds only the columns build_edges reads under
-    DEFAULT_CONFIG: doc_id, sha256, n_chars, n_shingles, bands, anchors,
-    plus the verify input (shingles in exact mode, minhash in signature
-    mode). The 128-long minhash array is dropped in exact mode, where
-    nothing downstream reads it.
+    DEFAULT_CONFIG: doc_id, sha256, n_chars, n_shingles, bands, anchors and
+    the exact-mode verify input, shingles. The 128-long minhash array is
+    dropped: nothing downstream reads it in exact mode.
 
     The documents are split by core count for the CPU-bound Arrow stage
     (``_text_docs``), but the cache is repartitioned by doc_id into
@@ -1206,14 +1204,9 @@ def _doc_signatures(spark, sf_dir):
     their partitioning, so AQE cannot coalesce them later."""
     from webcrawler_spark.operators.signatures import compute_signatures
 
-    cols = ["doc_id", "sha256", "n_chars", "n_shingles", "bands", "anchors"]
-    if DEFAULT_CONFIG.verify_mode == "exact":
-        cols.append("shingles")
-    else:
-        cols.append("minhash")
     return (
         compute_signatures(_text_docs(spark, sf_dir), DEFAULT_CONFIG)
-        .select(*cols)
+        .select("doc_id", "sha256", "n_chars", "n_shingles", "bands", "anchors", "shingles")
         .repartition(_cache_partitions(f"{sf_dir}/documents.parquet"), "doc_id")
         .cache()
     )
@@ -1269,9 +1262,9 @@ SELECT ia AS doc_id_a, ib AS doc_id_b FROM metrics WHERE jac >= 0.8
 
 
 def q_substring_dup_pairs(spark, sf_dir):
-    """B8 (suffix pass): exact-substring containment pairs through the
-    engine path (anchor-sampled candidates -> tier-1 estimate -> C-level
-    smaller-in-larger verify). Oracle = brute-force position() over all
+    """B8 (suffix pass): exact-substring containment pairs, the substring
+    kind of ``build_edges`` (anchor-sampled candidates -> tier-1 estimate ->
+    C-level smaller-in-larger verify). Oracle = brute-force position() over all
     pairs UNDER THE ENGINE'S STATED PRECONDITIONS (suffix.py module doc):
     the contained doc has >= shingle_w tokens (a shorter doc's whole-
     sequence fallback shingle can never match the container's w-grams) and
@@ -1282,11 +1275,13 @@ def q_substring_dup_pairs(spark, sf_dir):
     >= 1 anchor, and that residual anchor class — odds (1-1/8)^m for m
     shingles — is documented in suffix.py, not silently absorbed by the
     oracle."""
-    from webcrawler_spark.operators.suffix import substring_edges
+    from webcrawler_spark.operators.lsh import build_edges
 
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
-    return substring_edges(_doc_signatures(spark, sf_dir), docs).select(
-        F.col("a").alias("doc_id_a"), F.col("b").alias("doc_id_b")
+    return (
+        build_edges(_doc_signatures(spark, sf_dir), DEFAULT_CONFIG, docs=docs)
+        .filter(F.col("kind") == "substring")
+        .select(F.col("a").alias("doc_id_a"), F.col("b").alias("doc_id_b"))
     )
 
 
@@ -1495,8 +1490,9 @@ def q_dedup_clusters(spark, sf_dir):
 # iterate min-label propagation as a recursive CTE (UNION dedups =>
 # terminates at the transitive closure; cluster id = min reachable doc_id,
 # the engine's min-root convention). SimHash is not an edge kind on
-# either side (q_dedup_clusters docstring).
-SQL_DEDUP_CLUSTERS = f"""
+# either side (q_dedup_clusters docstring). ``reach`` is shared by the
+# clusters and filter oracles.
+_SQL_DEDUP_REACH = f"""
 WITH RECURSIVE {_SQL_PAIR_METRICS},
 jc_edges AS (
   SELECT ia AS a, ib AS b FROM metrics WHERE jac >= 0.8 OR cont >= 0.8
@@ -1524,8 +1520,12 @@ reach(src, dst) AS (
   UNION
   SELECT r.src, s.v FROM reach r JOIN sym s ON s.u = r.dst
 )
-SELECT src AS doc_id, min(dst) AS cluster_id FROM reach GROUP BY src
 """
+
+SQL_DEDUP_CLUSTERS = (
+    _SQL_DEDUP_REACH
+    + "SELECT src AS doc_id, min(dst) AS cluster_id FROM reach GROUP BY src\n"
+)
 
 
 def q_dedup_filter(spark, sf_dir):
@@ -1541,36 +1541,10 @@ def q_dedup_filter(spark, sf_dir):
     )
 
 
-SQL_DEDUP_FILTER = f"""
-WITH RECURSIVE {_SQL_PAIR_METRICS},
-jc_edges AS (
-  SELECT ia AS a, ib AS b FROM metrics WHERE jac >= 0.8 OR cont >= 0.8
-),
-exact_e AS (
-  SELECT a.doc_id AS a, b.doc_id AS b
-  FROM documents a
-  JOIN documents b ON sha256(a.text) = sha256(b.text) AND a.doc_id < b.doc_id
-),
-sub_e AS (
-  SELECT a.doc_id AS a, b.doc_id AS b
-  FROM documents a JOIN documents b ON a.doc_id < b.doc_id
-  WHERE {_SQL_SUBSTRING_PRED}
-),
-edges AS (
-  SELECT a, b FROM jc_edges
-  UNION SELECT a, b FROM exact_e
-  UNION SELECT a, b FROM sub_e
-),
-sym AS (
-  SELECT a AS u, b AS v FROM edges UNION SELECT b, a FROM edges
-),
-reach(src, dst) AS (
-  SELECT doc_id, doc_id FROM documents
-  UNION
-  SELECT r.src, s.v FROM reach r JOIN sym s ON s.u = r.dst
+SQL_DEDUP_FILTER = (
+    _SQL_DEDUP_REACH
+    + "SELECT src AS doc_id FROM reach GROUP BY src HAVING src = min(dst)\n"
 )
-SELECT src AS doc_id FROM reach GROUP BY src HAVING src = min(dst)
-"""
 
 
 def q_dedup_recall(spark, sf_dir):

@@ -28,11 +28,17 @@ class Corpus:
     truth_clusters: dict[int, int] = field(default_factory=dict)
 
 
-def _vocab(rng: np.random.Generator, size: int = 4000) -> list[str]:
+# distinct words per corpus vocabulary
+VOCAB_SIZE = 4000
+# share of rows on the mega domains
+MEGA_DOMAIN_FRAC = 0.3
+
+
+def _vocab(rng: np.random.Generator) -> list[str]:
     syll = ["ba", "ce", "di", "fo", "gu", "ha", "ki", "lo", "mu", "ne",
             "po", "qua", "ri", "so", "tu", "ve", "wi", "xo", "yu", "za"]
     words = set()
-    while len(words) < size:
+    while len(words) < VOCAB_SIZE:
         n = rng.integers(2, 5)
         words.add("".join(rng.choice(syll) for _ in range(n)))
     return sorted(words)
@@ -47,15 +53,13 @@ def _doc_tokens(rng: np.random.Generator, vocab: list[str], n: int) -> list[str]
 def generate_corpus(
     n_docs: int = 500,
     seed: int = 42,
-    lang_en_frac: float = 0.85,
-    mega_domain_frac: float = 0.3,
     mega_domains: int = 3,
     boiler_frac: float = 0.05,
 ) -> Corpus:
     """Generate ~n_docs pages. ~40% belong to planted duplicate families.
 
     Domains are skewed: `mega_domains` "mega domains" hold
-    ~mega_domain_frac of rows (exercises the salted repartition stage B13);
+    ~MEGA_DOMAIN_FRAC of rows (exercises the salted repartition stage B13);
     `boiler_frac` of docs share a common header/footer token block
     (boilerplate negatives — stop-shingle mass for the anchor drop cap).
     Defaults reproduce the historical corpora byte-for-byte; the
@@ -144,7 +148,7 @@ def generate_corpus(
         doc_id += 1
         text = " ".join(tokens)
         texts[d] = text
-        if rng.random() < mega_domain_frac:
+        if rng.random() < MEGA_DOMAIN_FRAC:
             dom = mega[int(rng.integers(0, len(mega)))]
         else:
             dom = domains[int(rng.integers(0, len(domains)))]
@@ -345,8 +349,7 @@ def _gen_shard(args) -> tuple[int, int]:
 
 
 def write_parquet_sharded(
-    n_docs: int, out_dir: str, shards: int = 24, seed: int = 42,
-    procs: int | None = None, **gen_kwargs
+    n_docs: int, out_dir: str, shards: int = 24, seed: int = 42, **gen_kwargs
 ) -> None:
     """Parallel deterministic corpus: `shards` independent shards (seed+k,
     id-offset k*chunk); duplicate families never span shards. Directory-style
@@ -363,6 +366,6 @@ def write_parquet_sharded(
          seed, k * (chunk + max(1, chunk // 2)), out_dir, gen_kwargs)
         for k in range(shards)
     ]
-    with mp.Pool(procs or min(shards, os.cpu_count() or 4)) as pool:
+    with mp.Pool(min(shards, os.cpu_count() or 4)) as pool:
         for _ in pool.imap_unordered(_gen_shard, jobs):
             pass
