@@ -1,5 +1,5 @@
-"""Tests for hyperplane-LSH candidates, the multimodal codec path and the
-exact-substring verify."""
+"""Tests for hyperplane-LSH candidates, the cosine near-dup operator, the
+multimodal codec path and the exact-substring verify."""
 
 import numpy as np
 import pytest
@@ -43,6 +43,55 @@ def test_lsh_candidate_pairs_cover_planted_pairs(embeddings, n_tables, n_bits):
     assert truth <= set(rows)
     plan = cand._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan and "BroadcastNestedLoop" not in plan
+
+
+def test_cosine_dup_pairs_planted_and_zero_vectors(spark):
+    """cosine_dup_pairs over the planted vectors quantized to milli-units
+    plus two all-zero rows (which share every LSH bucket, so they are a
+    candidate pair): exactly the planted pairs come back, each with the
+    numpy int64 cosine rounded to 6 places, no pair touches a zero row and
+    nothing divides by zero."""
+    from webcrawler_spark.operators.similarity import cosine_dup_pairs
+
+    q = np.round(_planted_vectors() * 1000).astype(np.int64)
+    q = np.vstack([q, np.zeros((2, q.shape[1]), dtype=np.int64)])
+    rows = [(i, [int(x) for x in v]) for i, v in enumerate(q)]
+    vectors = spark.createDataFrame(rows, "vec_id long, v array<long>")
+    got = {
+        (r["vec_id_a"], r["vec_id_b"]): r["cosine"]
+        for r in cosine_dup_pairs(vectors, 96, 20, 0.95).collect()
+    }
+    assert set(got) == {(i, 40 + i) for i in range(5)}
+    for (a, b), c in got.items():
+        want = (q[a] @ q[b]) / (np.sqrt(q[a] @ q[a]) * np.sqrt(q[b] @ q[b]))
+        assert c == round(float(want), 6)
+
+
+def test_embedding_topk_zero_vectors_match_oracle(spark, tmp_path):
+    """embedding_topk over a corpus holding all-zero embeddings (one of
+    them a query vector) equals its DuckDB oracle: a zero norm gives a NULL
+    cosine, ranked last, on both sides instead of a Spark divide-by-zero
+    error."""
+    import duckdb
+
+    from webcrawler_spark.plans.queries import SQL_EMBEDDING_TOPK, q_embedding_topk
+
+    vecs = _planted_vectors()
+    vecs[3] = 0.0
+    vecs = np.vstack([vecs, np.zeros((2, vecs.shape[1]))])
+    path = str(tmp_path / "embeddings.parquet")
+    spark.createDataFrame(
+        [(i, [float(x) for x in v]) for i, v in enumerate(vecs)],
+        "vec_id long, embedding array<double>",
+    ).coalesce(1).write.parquet(path)
+    got = {tuple(r) for r in q_embedding_topk(spark, str(tmp_path)).collect()}
+    con = duckdb.connect()
+    con.sql(f"CREATE VIEW embeddings AS SELECT * FROM parquet_scan('{path}/*.parquet')")
+    want = set(con.sql(SQL_EMBEDDING_TOPK).fetchall())
+    assert got == want
+    assert {(n, c) for q, n, c, _ in got if q == 3} == {
+        (n, None) for n in (0, 1, 2, 4, 5)
+    }
 
 
 def encode_ppm(w: int, h: int, seed: int = 0) -> bytes:
@@ -219,16 +268,16 @@ def test_image_dup_pairs_planted(spark):
     nothing else — md5 rasters give unrelated images cosine <= ~0.17."""
     from webcrawler_spark.operators.multimodal import (
         IMG_COPY_MOD,
+        _synth_planted_assets,
         asset_dup_pairs,
-        synth_image_corpus,
     )
 
     n = 120
     ids = spark.range(n).select(F.col("id").alias("doc_id"))
-    assets = synth_image_corpus(spark, ids)
+    assets = _synth_planted_assets(ids, "image")
     got = {
         (r["asset_id_a"], r["asset_id_b"]): r["cosine"]
-        for r in asset_dup_pairs(assets, "image").collect()
+        for r in asset_dup_pairs(assets).collect()
     }
     expect = {
         (d - 1, d)
@@ -243,18 +292,18 @@ def test_image_profile_centered_exact(spark):
     """profile = n*x_i - sum(x) over DECODED raster bytes, exact int64."""
     from webcrawler_spark.operators.multimodal import (
         IMG_N,
-        _image_nibbles,
+        _planted_nibbles,
+        _synth_planted_assets,
         extract_features,
-        synth_image_corpus,
     )
 
     ids = spark.range(3).select(F.col("id").alias("doc_id"))
     feats = {
         r["asset_id"]: r["profile"]
-        for r in extract_features(synth_image_corpus(spark, ids)).collect()
+        for r in extract_features(_synth_planted_assets(ids, "image")).collect()
     }
     for d in range(3):
-        nib = _image_nibbles(d)
+        nib = _planted_nibbles(d, "img")
         want = (IMG_N * nib - nib.sum()).tolist()
         assert feats[d] == want
 
@@ -265,17 +314,16 @@ def test_audio_dup_pairs_planted(spark):
     the same doc never alias."""
     from webcrawler_spark.operators.multimodal import (
         IMG_COPY_MOD,
-        _audio_nibbles,
-        _image_nibbles,
+        _planted_nibbles,
+        _synth_planted_assets,
         asset_dup_pairs,
-        synth_audio_corpus,
     )
 
-    assert _audio_nibbles(3).tolist() != _image_nibbles(3).tolist()
+    assert _planted_nibbles(3, "aud").tolist() != _planted_nibbles(3, "img").tolist()
     n = 60
     ids = spark.range(n).select(F.col("id").alias("doc_id"))
     got = {
         (r["asset_id_a"], r["asset_id_b"])
-        for r in asset_dup_pairs(synth_audio_corpus(spark, ids), "audio").collect()
+        for r in asset_dup_pairs(_synth_planted_assets(ids, "audio")).collect()
     }
     assert got == {(d - 1, d) for d in range(1, n) if d % IMG_COPY_MOD == 0}

@@ -1,7 +1,8 @@
-"""Dump formatted physical plans for the engine's key queries — the
-plan-quality evidence (pushdown, pruning, broadcast, codegen spans).
+"""Dump formatted physical plans for registry queries — the plan-quality
+evidence (pushdown, pruning, broadcast, codegen spans). With no query names
+it dumps the SHOW list, which is PLANS.md.
 
-Usage: python tools/explain_plans.py [sf_dir] > PLANS.md
+Usage: python tools/explain_plans.py [sf_dir [query ...]] > PLANS.md
 """
 import contextlib
 import io
@@ -27,10 +28,11 @@ SHOW = [
 
 NOTES = {
     "multimodal_dup_pairs": (
-        "Note: candidates come from the hyperplane-LSH (table, sig) bucket "
-        "join over decoded-pixel profiles; the only joins below are that "
-        "bucket equi-join and the two profile fetches for exact rescoring "
-        "— no cartesian product anywhere."
+        "Note: `similarity.cosine_dup_pairs` over decoded-pixel profiles. "
+        "Candidates come from the hyperplane-LSH (table, sig) bucket join; "
+        "the only joins below are that bucket equi-join and the two profile "
+        "fetches for exact rescoring, whose sides drop zero-norm profiles "
+        "first — no cartesian product anywhere."
     ),
     "dedup_incremental": (
         "Note: the increment's candidate work is bounded by the bucket "
@@ -54,7 +56,7 @@ def main() -> None:
     spark = get_spark("plans", master="local[2]", shuffle_partitions=4)
     spark.sparkContext.setLogLevel("ERROR")
     print("# Physical plans (explain formatted)\n")
-    for name in SHOW:
+    for name in sys.argv[2:] or SHOW:
         df = QUERIES[name][0](spark, sf)
         buf = io.StringIO()
         with contextlib.redirect_stdout(buf):

@@ -2,9 +2,10 @@
 
 One path, run by the ``multimodal_dup_pairs`` (image) and
 ``multimodal_audio_dup_pairs`` (audio) queries: decode each payload with a
-pure-numpy codec, take its centered sample profile, generate candidates
-with hyperplane-LSH (``similarity.lsh_candidate_pairs``) and exact-rescore
-them with int64 dot products (``asset_dup_pairs``).
+pure-numpy codec, take its centered sample profile and hand the profiles to
+``similarity.cosine_dup_pairs``, the one vector near-dup operator
+(hyperplane-LSH candidates, exact int64 cosine rescore;
+``asset_dup_pairs``).
 
 The codecs cover the containers parseable without external libraries:
 binary PPM (P6) images and mono PCM WAV (8/16-bit) audio. Anything else,
@@ -192,14 +193,6 @@ def _planted_nibbles(doc_id: int, prefix: str) -> np.ndarray:
     return v
 
 
-def _image_nibbles(doc_id: int) -> np.ndarray:
-    return _planted_nibbles(doc_id, "img")
-
-
-def _audio_nibbles(doc_id: int) -> np.ndarray:
-    return _planted_nibbles(doc_id, "aud")
-
-
 def _wav8_payload(samples: np.ndarray) -> bytes:
     """Valid mono 8-bit PCM RIFF/WAVE container around raw sample bytes."""
     data = samples.astype(np.uint8).tobytes()
@@ -214,9 +207,11 @@ def _wav8_payload(samples: np.ndarray) -> bytes:
     return b"RIFF" + len(chunks).to_bytes(4, "little") + chunks
 
 
-def _synth_planted_assets(spark, ids: DataFrame, kind: str) -> DataFrame:
-    """Shared fixture generator: planted-near-dup assets in a REAL container
-    per modality (P6 PPM rasters / 8-bit PCM WAV samples), one Arrow pass."""
+def _synth_planted_assets(ids: DataFrame, kind: str) -> DataFrame:
+    """ids(doc_id) -> planted-near-dup assets of one kind in a REAL
+    container, one Arrow pass: 'image' is a valid P6 PPM whose 16x16 raster
+    is the 'img' md5 nibble stream, 'audio' a valid mono 8-bit PCM WAV whose
+    768 samples are the disjoint 'aud' stream."""
     ppm_header = f"P6\n{IMG_W} {IMG_H}\n255\n".encode()
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -225,9 +220,10 @@ def _synth_planted_assets(spark, ids: DataFrame, kind: str) -> DataFrame:
             for d in pdf["doc_id"]:
                 d = int(d)
                 if kind == "image":
-                    payload = ppm_header + _image_nibbles(d).astype(np.uint8).tobytes()
+                    nib = _planted_nibbles(d, "img")
+                    payload = ppm_header + nib.astype(np.uint8).tobytes()
                 else:
-                    payload = _wav8_payload(_audio_nibbles(d))
+                    payload = _wav8_payload(_planted_nibbles(d, "aud"))
                 rows["asset_id"].append(d)
                 rows["kind"].append(kind)
                 rows["payload"].append(payload)
@@ -239,71 +235,24 @@ def _synth_planted_assets(spark, ids: DataFrame, kind: str) -> DataFrame:
     )
 
 
-def synth_image_corpus(spark, ids: DataFrame) -> DataFrame:
-    """ids(doc_id) -> planted-near-dup image assets: valid P6 PPM payloads
-    whose 16x16 rasters are md5-derived nibble streams."""
-    return _synth_planted_assets(spark, ids, "image")
-
-
-def synth_audio_corpus(spark, ids: DataFrame) -> DataFrame:
-    """ids(doc_id) -> planted-near-dup audio assets: valid mono 8-bit PCM
-    WAVs whose 768 samples are md5-derived nibble streams ('aud' stream —
-    disjoint from the image stream)."""
-    return _synth_planted_assets(spark, ids, "audio")
-
-
-def asset_dup_pairs(assets: DataFrame, kind: str) -> DataFrame:
-    """Content near-dup pairs (asset_id_a < asset_id_b, cosine) of one
-    modality: decode payloads (P6 rasters / PCM samples), take centered
-    profiles, generate candidates with hyperplane-LSH (LSH_TABLES x
-    LSH_BITS; the only shuffle is by bucket key, no crossJoin) and
-    exact-rescore with int64 dot products so both engines agree
-    bit-for-bit; pairs at cosine >= DUP_THRESHOLD are returned. Rescoring
-    makes precision exactly 1. The LSH path requires fixed-dim profiles
+def asset_dup_pairs(assets: DataFrame) -> DataFrame:
+    """Content near-dup pairs (asset_id_a < asset_id_b, cosine) of assets
+    of one modality: decode payloads (P6 rasters / PCM samples), take
+    centered profiles and run ``similarity.cosine_dup_pairs`` at LSH_TABLES
+    x LSH_BITS and DUP_THRESHOLD. The LSH path requires fixed-dim profiles
     (thumbnail/window-normalized assets)."""
-    from webcrawler_spark.operators.similarity import lsh_candidate_pairs
+    from webcrawler_spark.operators.similarity import cosine_dup_pairs
 
-    feats = extract_features(assets.filter(F.col("kind") == kind)).persist()
-    cand = lsh_candidate_pairs(
-        feats.select(
-            F.col("asset_id").alias("vec_id"),
-            F.col("profile").cast("array<double>").alias("embedding"),
-        ),
-        n_tables=LSH_TABLES,
-        n_bits=LSH_BITS,
-    )
-    # squared norms once per asset, not per candidate row: the threshold
-    # filter is pushed into the join condition, so the cosine expression
-    # evaluates twice per row. Identical int64 arithmetic.
-    withn = feats.withColumn(
-        "_nrm",
-        F.aggregate(
-            "profile", F.lit(0).cast("long"), lambda acc, x: acc + x * x
-        ),
-    )
-    a = withn.select(
-        F.col("asset_id").alias("vec_id_a"),
-        F.col("profile").alias("pa"),
-        F.col("_nrm").alias("na"),
-    )
-    b = withn.select(
-        F.col("asset_id").alias("vec_id_b"),
-        F.col("profile").alias("pb"),
-        F.col("_nrm").alias("nb"),
-    )
-    dot = F.aggregate(
-        F.zip_with("pa", "pb", lambda x, y: x * y),
-        F.lit(0).cast("long"), lambda acc, x: acc + x,
-    )
-    return (
-        cand.join(a, "vec_id_a")
-        .join(b, "vec_id_b")
-        .filter((F.col("na") > 0) & (F.col("nb") > 0))
-        .withColumn("cosine", F.round(dot / (F.sqrt("na") * F.sqrt("nb")), 6))
-        .filter(F.col("cosine") >= DUP_THRESHOLD)
-        .select(
-            F.col("vec_id_a").alias("asset_id_a"),
-            F.col("vec_id_b").alias("asset_id_b"),
-            "cosine",
-        )
+    # persisted: the LSH signature stage and both rescore sides read the
+    # Python decode stage
+    feats = extract_features(assets).persist()
+    return cosine_dup_pairs(
+        feats.select(F.col("asset_id").alias("vec_id"), F.col("profile").alias("v")),
+        LSH_TABLES,
+        LSH_BITS,
+        DUP_THRESHOLD,
+    ).select(
+        F.col("vec_id_a").alias("asset_id_a"),
+        F.col("vec_id_b").alias("asset_id_b"),
+        "cosine",
     )

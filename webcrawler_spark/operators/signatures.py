@@ -72,19 +72,8 @@ def compute_signatures(
             offs = np.zeros(n + 1, dtype=np.int64)
             np.cumsum(lens, out=offs[1:])
             flat = [tok for toks in tok_lists for tok in toks]
-            if flat:
-                codes, uniques = pd.factorize(np.asarray(flat, dtype=object))
-                uh = np.empty(len(uniques), dtype=np.uint64)
-                _th, _get = H.token_hash, cache.get
-                for u, tok in enumerate(uniques):
-                    h = _get(tok)
-                    if h is None:
-                        h = _th(tok)
-                        cache[tok] = h
-                    uh[u] = h
-                th_flat = uh[codes]
-            else:
-                th_flat = np.empty(0, dtype=np.uint64)
+            codes, uniques = pd.factorize(np.asarray(flat, dtype=object))
+            th_flat = H.token_hashes(uniques, cache)[codes]
             out = {
                 "doc_id": pdf["doc_id"].astype("int64"),
                 "sha256": [None] * n,

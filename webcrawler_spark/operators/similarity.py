@@ -1,13 +1,16 @@
-"""Hyperplane-LSH candidate pairs over fixed-dim vectors.
+"""Cosine near-duplicate pairs over fixed-dim int64 vectors.
 
-``lsh_candidate_pairs`` buckets ``(vec_id, embedding)`` rows by b-bit
+``cosine_dup_pairs`` is the one vector near-dup path: embeddings
+(``q_embedding_dup_pairs``, quantized to milli-units) and decoded image
+and audio content (``multimodal.asset_dup_pairs``, centered sample
+profiles) both run it. ``lsh_candidate_pairs`` buckets the vectors by b-bit
 random-hyperplane (sign-sketch) signatures over ``n_tables`` independent
-tables and returns the distinct same-bucket pairs. The only shuffle is by
+tables and returns the distinct same-bucket pairs; the only shuffle is by
 the (table, sig) bucket key, never a crossJoin. Planes come from a fixed
-seed, so candidates are deterministic. Callers exact-rescore the
-candidates, so precision is 1 by construction and ``(n_tables, n_bits)``
-set the recall: ``q_embedding_dup_pairs`` runs 96 x 20 and the multimodal
-queries (``multimodal.asset_dup_pairs``) run 48 x 12.
+seed, so candidates are deterministic. Every candidate is rescored with
+the exact int64 cosine (``cosine``), so precision is 1 by construction
+and ``(n_tables, n_bits)`` set the recall: embeddings run 96 x 20 and the
+multimodal queries 48 x 12.
 """
 
 from __future__ import annotations
@@ -17,7 +20,7 @@ from collections.abc import Iterator
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -108,4 +111,61 @@ def lsh_candidate_pairs(
             F.explode(F.expr("slice(ids, i + 2, size(ids))")).alias("vec_id_b"),
         )
         .distinct()
+    )
+
+
+def squared_norm(v: str) -> Column:
+    """sum(x * x) over an array<long> column, in exact int64."""
+    return F.aggregate(v, F.lit(0).cast("long"), lambda acc, x: acc + x * x)
+
+
+def cosine(va: str, vb: str, na: str, nb: str) -> Column:
+    """round(dot(va, vb) / (sqrt(na) * sqrt(nb)), 6) over array<long>
+    vectors and their squared norms. The dot product is exact int64, so
+    Spark and the DuckDB oracles agree bit for bit. A zero norm gives NULL,
+    as DuckDB's division does, not an ANSI divide-by-zero error."""
+    dot = F.aggregate(
+        F.zip_with(va, vb, lambda x, y: x * y),
+        F.lit(0).cast("long"),
+        lambda acc, x: acc + x,
+    )
+    return F.round(F.try_divide(dot, F.sqrt(na) * F.sqrt(nb)), 6)
+
+
+def cosine_dup_pairs(
+    vectors: DataFrame, n_tables: int, n_bits: int, threshold: float
+) -> DataFrame:
+    """(vec_id, v: array<long>) -> (vec_id_a < vec_id_b, cosine) for every
+    pair at cosine >= ``threshold``.
+
+    Candidates are ``lsh_candidate_pairs`` over ``v`` cast to double; each
+    is rescored with the exact int64 ``cosine``. Squared norms are computed
+    once per vector, not per candidate row (the optimizer pushes the
+    threshold filter into the join condition, which evaluates the cosine
+    twice per row). Zero-norm vectors have no cosine and are dropped
+    before the rescore join."""
+    cand = lsh_candidate_pairs(
+        vectors.select(
+            "vec_id", F.col("v").cast("array<double>").alias("embedding")
+        ),
+        n_tables=n_tables,
+        n_bits=n_bits,
+    )
+    withn = vectors.select("vec_id", "v", squared_norm("v").alias("n")).filter(
+        F.col("n") > 0
+    )
+    a, b = (
+        withn.select(
+            F.col("vec_id").alias(f"vec_id_{s}"),
+            F.col("v").alias(f"v{s}"),
+            F.col("n").alias(f"n{s}"),
+        )
+        for s in "ab"
+    )
+    return (
+        cand.join(a, "vec_id_a")
+        .join(b, "vec_id_b")
+        .withColumn("cosine", cosine("va", "vb", "na", "nb"))
+        .filter(F.col("cosine") >= threshold)
+        .select("vec_id_a", "vec_id_b", "cosine")
     )

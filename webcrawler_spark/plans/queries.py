@@ -16,10 +16,17 @@ against the sequential numpy oracle (tests/test_spark_pipeline.py).
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from webcrawler_spark.config import DEFAULT_CONFIG, FILTER_TERMS
+from webcrawler_spark.operators.similarity import (
+    cosine,
+    cosine_dup_pairs,
+    squared_norm,
+)
 
 _FILTER_RE = "|".join(FILTER_TERMS)
 
@@ -807,17 +814,16 @@ def _quantized_embeddings(spark, sf_dir):
     and the cheaper roundings (floor(x+0.5) etc.) are NOT bit-identical to
     the oracle's decimal-string HALF_UP at boundary values, so the
     expression itself must stay; caching runs it once per corpus.
-    embedding_dup_pairs' rescore sides do NOT read this cache (see its
-    inline note). Same cached-multi-consumer-intermediate convention as
-    _doc_signatures / _shingle_arrays; cache stays at session parallelism
-    (the dot-product consumer is CPU-bound and wants width)."""
+    embedding_dup_pairs' rescore sides build the same plan uncached, so
+    Spark's cache manager serves them from this cache once embedding_topk
+    has run in the session. Same cached multi-consumer intermediate
+    convention as _doc_signatures / _shingle_arrays; cache stays at session
+    parallelism (the dot-product consumer is CPU-bound and wants width)."""
     return (
         load(spark, sf_dir, "embeddings")
         .repartition(spark.sparkContext.defaultParallelism)
         .select("vec_id", _quantized(F.col("embedding")).alias("q"))
-        .withColumn(
-            "nrm", F.aggregate("q", F.lit(0).cast("long"), lambda acc, x: acc + x * x)
-        )
+        .withColumn("nrm", squared_norm("q"))
         .cache()
     )
 
@@ -849,17 +855,7 @@ def q_embedding_topk(spark, sf_dir):
     dots = (
         nbrs.crossJoin(F.broadcast(q))
         .filter(F.col("query_id") != F.col("nbr_id"))
-        .withColumn(
-            "dot",
-            F.aggregate(
-                F.zip_with("qa", "qb", lambda a, b: a * b),
-                F.lit(0).cast("long"),
-                lambda acc, x: acc + x,
-            ),
-        )
-        .withColumn(
-            "cosine", F.round(F.col("dot") / (F.sqrt("na") * F.sqrt("nb")), 6)
-        )
+        .withColumn("cosine", cosine("qa", "qb", "na", "nb"))
     )
     w = Window.partitionBy("query_id").orderBy(
         F.col("cosine").desc(), F.col("nbr_id")
@@ -894,9 +890,10 @@ SELECT query_id, nbr_id, cosine, rank FROM ranked WHERE rank <= 5
 
 
 def q_embedding_dup_pairs(spark, sf_dir):
-    """embedding-cosine near-dup detection: all pairs with cosine >= 0.95,
-    via hyperplane-LSH bucketed candidates + exact quantized rescore (the
-    only shuffle is by bucket key — no crossJoin anywhere; the DuckDB oracle
+    """embedding-cosine near-dup detection: all pairs with cosine >= 0.95
+    over the milli-unit quantized vectors, via ``cosine_dup_pairs``:
+    hyperplane-LSH bucketed candidates + exact int64 rescore (the only
+    shuffle is by bucket key — no crossJoin anywhere; the DuckDB oracle
     stays the brute-force all-pairs formulation). Candidate recall at the
     0.95 threshold is 1 - ~5.4e-6 per boundary pair (96 tables x 20 bits:
     per-bit match p = 1 - acos(.95)/pi ~ 0.899, per-table bucket hit
@@ -904,65 +901,14 @@ def q_embedding_dup_pairs(spark, sf_dir):
     >= 0.97 miss with < 1e-9); rescoring makes precision exactly 1. The
     planted >= 0.95 regime is covered by
     test_lsh_candidate_pairs_cover_planted_pairs."""
-    from webcrawler_spark.operators.similarity import lsh_candidate_pairs
-
     # single-row-group input: repartition so the hyperplane signature
-    # stage (Python matmuls) runs at session width (the rescore sides below
-    # stay on the raw scan: they are broadcast builds)
-    cand = lsh_candidate_pairs(
-        load(spark, sf_dir, "embeddings").repartition(
-            spark.sparkContext.defaultParallelism
-        ),
-        n_tables=96,
-        n_bits=20,
-    )
-    # norms once per vector, not per candidate row (and the optimizer
-    # pushes the cosine filter into the join condition, evaluating the
-    # expression twice per row — precomputed norms cut each evaluation to
-    # one dot product); identical int64 arithmetic and rounding. The a/b
-    # sides deliberately re-evaluate from the RAW scan rather than read
-    # the shared quantized cache (_quantized_embeddings): they are
-    # broadcast BUILDS, and an interleaved A/B at 10x measured the
-    # cache-fed builds 0.4 s SLOWER (2.45 vs 2.06 s full query) — the
-    # cache's in-memory stats also flip the joins to SMJ/SHJ unless
-    # hinted. The cache pays off only for STREAM-side consumers
-    # (embedding_topk's corpus side).
-    e = (
+    # stage (Python matmuls) runs at session width
+    v = (
         load(spark, sf_dir, "embeddings")
-        .select("vec_id", _quantized(F.col("embedding")).alias("q"))
-        .withColumn(
-            "nrm",
-            F.aggregate("q", F.lit(0).cast("long"), lambda acc, x: acc + x * x),
-        )
+        .repartition(spark.sparkContext.defaultParallelism)
+        .select("vec_id", _quantized(F.col("embedding")).alias("v"))
     )
-    a = e.select(
-        F.col("vec_id").alias("vec_id_a"),
-        F.col("q").alias("qa"),
-        F.col("nrm").alias("na"),
-    )
-    b = e.select(
-        F.col("vec_id").alias("vec_id_b"),
-        F.col("q").alias("qb"),
-        F.col("nrm").alias("nb"),
-    )
-    return (
-        cand.join(a, "vec_id_a")
-        .join(b, "vec_id_b")
-        .withColumn(
-            "cosine",
-            F.round(
-                F.aggregate(
-                    F.zip_with("qa", "qb", lambda x, y: x * y),
-                    F.lit(0).cast("long"),
-                    lambda acc, x: acc + x,
-                )
-                / (F.sqrt("na") * F.sqrt("nb")),
-                6,
-            ),
-        )
-        .filter(F.col("cosine") >= 0.95)
-        .select("vec_id_a", "vec_id_b", "cosine")
-    )
+    return cosine_dup_pairs(v, 96, 20, 0.95)
 
 
 SQL_EMBEDDING_DUP_PAIRS = """
@@ -1626,22 +1572,24 @@ def q_dedup_incremental(spark, sf_dir):
 SQL_DEDUP_INCREMENTAL = SQL_DEDUP_CLUSTERS
 
 
-def q_multimodal_dup_pairs(spark, sf_dir):
-    """Multimodal (image) near-dup detection through the REAL codec branch:
-    each doc_id keys a deterministic 16x16 P6 PPM whose raster is an
-    md5-derived nibble stream, with planted near-copies (doc_id %
-    IMG_COPY_MOD == 0 perturbs ~1% of doc_id-1's nibbles —
-    multimodal.synth_image_corpus). The engine decodes payloads, takes
-    centered pixel profiles, generates candidates via hyperplane-LSH
-    (no crossJoin) and exact-rescores with int64 dot products
-    (multimodal.asset_dup_pairs). The oracle reconstructs the same rasters in
-    SQL (DuckDB md5 == hashlib.md5) and scores ALL pairs brute-force —
-    equality is the recall check. Separation is wide (planted copies
-    cosine >= ~0.97, unrelated md5 rasters <= ~0.17 measured at 1000 ids),
-    so the 0.9 threshold sits in a structural void."""
+def q_multimodal_dup_pairs(spark, sf_dir, kind):
+    """Multimodal near-dup detection of one asset ``kind`` through a REAL
+    codec branch: each doc_id keys a deterministic asset ('image': a 16x16
+    P6 PPM whose raster is the 'img' md5 nibble stream; 'audio': a mono
+    8-bit PCM WAV whose 768 samples are the 'aud' stream), with planted
+    near-copies (doc_id % IMG_COPY_MOD == 0 perturbs ~1% of doc_id-1's
+    nibbles — multimodal._synth_planted_assets). The engine decodes
+    payloads, takes centered profiles and runs the one vector near-dup
+    operator (multimodal.asset_dup_pairs -> similarity.cosine_dup_pairs:
+    hyperplane-LSH candidates, no crossJoin, exact int64 rescore). Each
+    kind's oracle reconstructs the same assets in SQL (DuckDB md5 ==
+    hashlib.md5) and scores ALL pairs brute-force — equality is the recall
+    check. Separation is wide (planted copies cosine >= ~0.97, unrelated
+    md5 rasters <= ~0.17 measured at 1000 ids), so the 0.9 threshold sits
+    in a structural void."""
     from webcrawler_spark.operators.multimodal import (
+        _synth_planted_assets,
         asset_dup_pairs,
-        synth_image_corpus,
     )
 
     # repartition the single-row-group id scan so synthesis, codec decode
@@ -1651,33 +1599,7 @@ def q_multimodal_dup_pairs(spark, sf_dir):
         .select("doc_id")
         .repartition(spark.sparkContext.defaultParallelism)
     )
-    assets = synth_image_corpus(spark, ids)
-    return asset_dup_pairs(assets, "image").select(
-        F.col("asset_id_a").alias("doc_id_a"),
-        F.col("asset_id_b").alias("doc_id_b"),
-        "cosine",
-    )
-
-
-def q_multimodal_audio_dup_pairs(spark, sf_dir):
-    """The audio twin of multimodal_dup_pairs: same planted-near-copy
-    scheme, same profile/LSH/rescore path, but through the OTHER real
-    decoder — mono 8-bit PCM RIFF/WAVE containers whose 768 samples are
-    the 'aud' md5 nibble stream (multimodal.synth_audio_corpus). One
-    modality-agnostic engine path, two independently-exercised codec
-    branches, each with its own brute-force SQL oracle."""
-    from webcrawler_spark.operators.multimodal import (
-        asset_dup_pairs,
-        synth_audio_corpus,
-    )
-
-    ids = (
-        load(spark, sf_dir, "documents")
-        .select("doc_id")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
-    assets = synth_audio_corpus(spark, ids)
-    return asset_dup_pairs(assets, "audio").select(
+    return asset_dup_pairs(_synth_planted_assets(ids, kind)).select(
         F.col("asset_id_a").alias("doc_id_a"),
         F.col("asset_id_b").alias("doc_id_b"),
         "cosine",
@@ -1780,9 +1702,12 @@ QUERIES: dict[str, tuple] = {
     "dedup_filter": (q_dedup_filter, SQL_DEDUP_FILTER),
     "dedup_recall": (q_dedup_recall, SQL_DEDUP_RECALL),
     "dedup_incremental": (q_dedup_incremental, SQL_DEDUP_INCREMENTAL),
-    "multimodal_dup_pairs": (q_multimodal_dup_pairs, SQL_MULTIMODAL_DUP_PAIRS),
+    "multimodal_dup_pairs": (
+        partial(q_multimodal_dup_pairs, kind="image"),
+        SQL_MULTIMODAL_DUP_PAIRS,
+    ),
     "multimodal_audio_dup_pairs": (
-        q_multimodal_audio_dup_pairs,
+        partial(q_multimodal_dup_pairs, kind="audio"),
         SQL_MULTIMODAL_AUDIO_DUP_PAIRS,
     ),
 }
